@@ -181,7 +181,7 @@ object Bench {
     val mv = moved.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$fl,"movement":$mv,"phases":$ph,"sf":"$sfDir","cpus":$cpus,"shuffle_partitions":$shufflePartitions}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$fl,"movement":$mv,"phases":$ph,"sf":${Verify.jsonString(sfDir)},"cpus":$cpus,"shuffle_partitions":$shufflePartitions}"""
     println(line)
     // the driver's artifact truncates long stdout tails, which has left the
     // per-query map unauditable in past rounds — persist the identical JSON
@@ -201,7 +201,7 @@ object Bench {
     // list, scale knobs, and a pointer to the full-map file written above.
     // The full line still prints first (old numbers kept, per the contract).
     val compact =
-      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"failed":$fl,"sf":"$sfDir","cpus":$cpus,"shuffle_partitions":$shufflePartitions,"detail":"$out"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"failed":$fl,"sf":${Verify.jsonString(sfDir)},"cpus":$cpus,"shuffle_partitions":$shufflePartitions,"detail":${Verify.jsonString(out)}}"""
     println(compact)
     spark.stop()
   }

@@ -100,32 +100,32 @@ object GraphCF {
 
   /** The history cut alone, on an already-aggregated (u, i, w) frame. */
   private def capEdges(e: DataFrame, maxHistory: Int): DataFrame =
-    if (maxHistory == Int.MaxValue) e
-    else Relational.topKPerGroup(e, Seq(col("u")),
-      Seq(col("w").desc, col("i")), maxHistory, rankName = "__rh")
-      .drop("__rh")
+    capBy(e, Seq("u"), "i", maxHistory)
+
+  /** Each `by` group keeps its top-`n` rows by (w desc, `tie` asc) — the
+    * one exact, replayable cut behind the history cap, the audience cap
+    * and the folds' per-side caps. */
+  private def capBy(e: DataFrame, by: Seq[String], tie: String,
+                    n: Int): DataFrame =
+    if (n == Int.MaxValue) e
+    else Relational.topKPerGroup(e, by.map(col),
+      Seq(col("w").desc, col(tie)), n, rankName = "__rc")
+      .drop("__rc")
 
   /** Item-item co-occurrence counts from an aggregated (u, i, w) edge
     * frame: co(i,j) = Σ_u w_ui·w_uj, both (i,j) directions, exact long
     * sums. The user-keyed self-join's intermediate is Σ_u deg(u)² pair
     * rows — the family's quadratic leg (cap histories upstream).
     *
-    * Physical shape (round 14): the matrix is SYMMETRIC (the product
-    * w1·w2 commutes), so only the s1 < s2 HALF is generated and
-    * aggregated — the join's residual predicate drops half the Σ deg²
-    * fanout before the partial aggregation ever sees it, and the
-    * (s1,s2) exchange carries half the pair rows — then the full matrix
-    * is mirrored as a union of two scans of the MATERIALIZED half cache
-    * ([[halfMirror]]). Round 9 measured the half+mirror idea as a dead
-    * end (23.8 s at sf0.1/32t), but that was the UNPERSISTED self-union,
-    * which re-executes the whole join subtree per leg; the round-13
-    * materialized-cache rule (persist + eager count, so the cache plans
-    * with its real partitioning) is what changes the math — measured
-    * round 14: co-walk leg 4.34 s → 3.48 s, pair-agg shuffle rows
-    * halved. Cache lifetime: caller-owned release, the family's
-    * documented contract (USAGE.md; Bench/Verify clear between
-    * queries). */
-  /** Physical note (measured at ~sf1): the u-keyed self-join's INPUT is
+    * Physical shape: the matrix is SYMMETRIC (the product w1·w2
+    * commutes), so only the s1 < s2 HALF is generated and aggregated —
+    * the join's residual predicate drops half the Σ deg² fanout before
+    * the partial aggregation ever sees it, and the (s1,s2) exchange
+    * carries half the pair rows — then [[halfMirror]] emits both
+    * orientations of each aggregated row with a generator in the
+    * aggregate's own stage: no cache, no barrier job, no second scan.
+    *
+    * Physical note (measured at ~sf1): the u-keyed self-join's INPUT is
     * the compact edge frame but its OUTPUT is the Σ min(deg,C)² pair
     * fanout, and the stage that runs [join → filter → partial agg] is
     * sized by AQE from the INPUT bytes — coalesced down to the cluster's
@@ -149,36 +149,35 @@ object GraphCF {
       .agg(sum(col("w1") * col("w2")).as("co")))
 
   /** Mirror a strictly-upper-triangular (s1 < s2) co frame to the full
-    * symmetric matrix: materialize the half once, union two scans of the
-    * cache (identity + transposed projection). The transpose leg is a
-    * projection over cached rows — no join, no re-execution; co values
-    * are exact long sums and the product commutes, so the mirrored rows
-    * are bit-identical to aggregating both directions. */
-  private def halfMirror(half0: DataFrame): DataFrame =
-    halfMirrorCols(half0, "s1", "s2", "co")
+    * symmetric matrix in ONE pass: each half row is emitted twice by a
+    * generator (identity + transposed struct), a narrow map on top of the
+    * half's own aggregate — no cache to release, no count() barrier, no
+    * second scan. Co values are exact long sums and the product commutes,
+    * so the mirrored rows are bit-identical to aggregating both
+    * directions (GraphCFSpec pins it). The output keeps no partitioning,
+    * exactly like the union it replaces. */
+  private def halfMirror(half: DataFrame): DataFrame =
+    halfMirrorCols(half, "s1", "s2", "co")
 
-  private def halfMirrorCols(half0: DataFrame, a: String, b: String,
-                             v: String): DataFrame = {
-    val half = materialized(half0)
-    half.unionByName(half.select(col(b).as(a), col(a).as(b), col(v)))
-  }
+  private def halfMirrorCols(half: DataFrame, a: String, b: String,
+                             v: String): DataFrame =
+    half.select(inline(array(
+      struct(col(a).as(a), col(b).as(b), col(v).as(v)),
+      struct(col(b).as(a), col(a).as(b), col(v).as(v)))))
 
   /** The audience cut alone, on an already-aggregated (u, i, w) frame:
     * each ITEM keeps its top-`maxAudience` users by (weight desc, user
     * asc) — the transpose of [[capEdges]], bounding the user-side
     * quadratic leg at Σ_i min(aud, A)². */
   private def capAudience(e: DataFrame, maxAudience: Int): DataFrame =
-    if (maxAudience == Int.MaxValue) e
-    else Relational.topKPerGroup(e, Seq(col("i")),
-      Seq(col("w").desc, col("u")), maxAudience, rankName = "__ra")
-      .drop("__ra")
+    capBy(e, Seq("i"), "u", maxAudience)
 
   /** User-user co-occurrence counts from an aggregated (u, i, w) edge
     * frame: co(u1,u2) = Σ_i w_u1i·w_u2i, both directions, exact long
     * sums — [[coPairs]] transposed (the item-keyed self-join's
     * intermediate is Σ_i aud(i)² pair rows; cap audiences upstream).
-    * Same half-pair + materialized-mirror layout as [[coPairs]]: the
-    * matrix is symmetric, so only s1 < s2 is generated and aggregated. */
+    * Same half-pair + one-pass mirror layout as [[coPairs]]: the matrix
+    * is symmetric, so only s1 < s2 is generated and aggregated. */
   private def coUserPairs(e: DataFrame): DataFrame = halfMirror(
     e.select(col("i"), col("u").as("s1"), col("w").as("w1"))
       .join(e.select(col("i"), col("u").as("s2"), col("w").as("w2")), "i")
@@ -291,7 +290,7 @@ object GraphCF {
     val frequent = itemN.filter(col("s") >= minSupport)
     val biF = bi.join(frequent.select(col("i")), Seq("i"), "left_semi")
     // pair supports are symmetric (baskets containing {a, c} contain
-    // {c, a}) — the coPairs half-pair + materialized-mirror layout
+    // {c, a}) — the coPairs half-pair + one-pass mirror layout
     val pairs = halfMirrorCols(biF.select(col("b"), col("i").as("ante"))
       .join(biF.select(col("b"), col("i").as("cons")), "b")
       .filter(col("ante") < col("cons"))
@@ -362,8 +361,8 @@ object GraphCF {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     bi.groupBy(col("i")).agg(count(lit(1)).as("s"))
       .write.mode("overwrite").parquet(s"$path/items/batch=$batchId")
-    // symmetric pair supports: build the s1 < s2 half, mirror off the
-    // materialized cache (the liftRules/coPairs layout) — halves the
+    // symmetric pair supports: build the s1 < s2 half and mirror it in
+    // the aggregate's stage (the liftRules/coPairs layout) — halves the
     // basket self-join's B² fanout through the partial aggregation
     halfMirrorCols(bi.select(col("b"), col("i").as("ante"))
       .join(bi.select(col("b"), col("i").as("cons")), "b")
@@ -509,6 +508,10 @@ object GraphCF {
     * arithmetic is exact long sums, so the subtraction is safe — pairs
     * netting to zero drop, matching the one-shot result exactly.
     *
+    * Physical shape: both outer-product terms run as ONE signed co-walk
+    * ([[signedHalfWalk]]) in half space, summed with the s1 < s2 half of
+    * `oldCo` in one (s1, s2) aggregate and mirrored once ([[foldHalf]]).
+    *
     * `oldInteractions` is the standing log (scanned once, linearly, to
     * recover the touched users' previous edge vectors; a production
     * deployment keeps the aggregated (u, i, w) edge frame in a keyed
@@ -522,15 +525,11 @@ object GraphCF {
     require(Seq("s1", "s2", "co").forall(oldCo.columns.contains),
       "oldCo must be a coCounts frame with columns (s1, s2, co)")
     // UNCAPPED aggregation on both sides: the cap applies to each
-    // touched user's MERGED vector (a delta can evict an old top-C item)
-    // persisted reuse (round 13): dAgg feeds the touched set AND the
-    // merge; oldT feeds the merge AND the negative leg — un-persisted,
-    // each consumer re-ran the full log scan + aggregation at action
-    // time (q172 measured 3 log passes; now 1 per frame). u-partitioned
-    // like edgeFrame and EAGERLY materialized (see [[materialized]]) so
-    // the cap windows and u-keyed joins below plan exchange-free off the
-    // finalized cache. Cache lifetime: the family's caller-owned release
-    // contract (USAGE.md).
+    // touched user's MERGED vector (a delta can evict an old top-C item).
+    // dAgg and oldT each feed two consumers, so both are materialized
+    // (see [[materialized]]) — un-persisted, each re-ran the full log
+    // scan + aggregation (q172 measured 3 log passes; now 1 per frame).
+    // Cache lifetime: the family's caller-owned release (USAGE.md).
     val oldAgg = prefixKeyed(oldInteractions
       .select(col(userCol).as("u"), col(itemCol).as("i")), col("u"))
       .groupBy(col("u"), col("i"))
@@ -542,34 +541,57 @@ object GraphCF {
     val touched = dAgg.select(col("u")).distinct()
     val oldT = materialized(oldAgg.join(touched, Seq("u"), "left_semi"))
     // union drops the inputs' partitioning — re-establish hash(u) so the
-    // merge agg AND its cap window below share one exchange
+    // merge agg runs on one exchange
     val mergedT = oldT.unionByName(dAgg)
       .repartition(col("u"))
       .groupBy(col("u"), col("i")).agg(sum(col("w")).as("w"))
-    val neg = coPairs(capEdges(oldT, maxHistory))
-      .select(col("s1"), col("s2"), (-col("co")).as("co"))
-    val pos = coPairs(capEdges(mergedT, maxHistory))
-    // Corruption tripwire: a TRUE co-count is a sum of non-negative
-    // products, so a negative folded value proves the (oldCo,
-    // oldInteractions, maxHistory) triple was inconsistent (e.g. a stale
-    // frame or a different cap — a delta-evicted pair subtracts mass the
-    // stale oldCo never held). Checked row-inline via raise_error: zero
-    // extra passes, fires at action time, distributed. Not every
-    // mismatch nets negative, but eviction/staleness — the realistic
-    // operational mistakes — do (GraphCFSpec pins one).
-    oldCo.select(col("s1"), col("s2"), col("co"))
-      .unionByName(pos).unionByName(neg)
+    foldHalf(oldCo, signedHalfWalk(oldT, mergedT, "u", "i", maxHistory),
+      "foldCoDelta", s"maxHistory=$maxHistory (stale frame or different cap)")
+  }
+
+  /** The folds' ONE co-walk over both sides of a delta: old vectors
+    * tagged side −1, new ones +1, each (`key`, side) group cut to its
+    * top-`cap` by (w desc, `s` asc), then one self-join on (`key`, side)
+    * — exchange-free on the cut's window — in half space (s1 < s2), each
+    * pair carrying side·w1·w2 (exact long products; a side with no rows
+    * for a key contributes nothing there). */
+  private def signedHalfWalk(old: DataFrame, nu: DataFrame, key: String,
+                             s: String, cap: Int): DataFrame = {
+    val v = capBy(old.select(col(key), col(s), col("w"), lit(-1L).as("side"))
+      .unionByName(nu.select(col(key), col(s), col("w"), lit(1L).as("side"))),
+      Seq(key, "side"), s, cap)
+    v.select(col(key), col("side"), col(s).as("s1"), col("w").as("w1"))
+      .join(v.select(col(key), col("side"), col(s).as("s2"),
+        col("w").as("w2")), Seq(key, "side"))
+      .filter(col("s1") < col("s2"))
+      .select(col("s1"), col("s2"),
+        (col("side") * col("w1") * col("w2")).as("co"))
+  }
+
+  /** The folds' shared tail: the s1 < s2 half of `oldCo` plus the signed
+    * walk, summed in ONE (s1, s2) aggregate; zero pairs drop (matching
+    * the one-shot build), and the result is mirrored once.
+    *
+    * Corruption tripwire: a TRUE co-count is a sum of non-negative
+    * products, so a negative folded value proves the (oldCo,
+    * oldInteractions, caps) triple inconsistent — a stale frame or a
+    * different cap (a delta-evicted pair subtracts mass the stale oldCo
+    * never held). Checked row-inline via raise_error: zero extra passes,
+    * fires at action time (GraphCFSpec pins one per fold). */
+  private def foldHalf(oldCo: DataFrame, walk: DataFrame, fn: String,
+                       mismatch: String): DataFrame =
+    halfMirror(oldCo.select(col("s1"), col("s2"), col("co"))
+      .filter(col("s1") < col("s2"))
+      .unionByName(walk)
       .groupBy(col("s1"), col("s2"))
       .agg(sum(col("co")).as("co"))
       .filter(col("co") =!= 0L)
       .select(col("s1"), col("s2"),
         when(col("co") < 0L, raise_error(concat(
-          lit("foldCoDelta: negative folded co for pair ("),
+          lit(s"$fn: negative folded co for pair ("),
           col("s1").cast("string"), lit(", "), col("s2").cast("string"),
-          lit(s") — oldCo does not match oldInteractions at maxHistory=" +
-            s"$maxHistory (stale frame or different cap)"))))
-          .otherwise(col("co")).as("co"))
-  }
+          lit(s") — oldCo does not match oldInteractions at $mismatch"))))
+          .otherwise(col("co")).as("co")))
 
   /** Standing USER-user co-occurrence counts from an interaction log —
     * the maintained state behind a UserKNN serving layer ([[userKnnRecs]]),
@@ -613,10 +635,15 @@ object GraphCF {
     * bit-identical audience vector and nets zero — skipped). Work: one
     * linear pass over the old log, history-cap windows over only the
     * touched items' audiences' users, and the touched items' quadratic
-    * leg. Result is BIT-IDENTICAL to [[userCoCounts]] over the unioned
-    * log (the declared query's oracle replays the one-shot build;
-    * GraphCFSpec pins the history-eviction case). Same negative-co
-    * corruption tripwire as [[foldCoDelta]].
+    * leg. Both outer-product terms run as ONE signed co-walk over the
+    * audience-capped old and new touched-item vectors, joined on (i,
+    * side) in half space ([[signedHalfWalk]]), then summed with the
+    * s1 < s2 half of `oldCo` in one (s1, s2) aggregate and mirrored once
+    * ([[foldHalf]]). Result is BIT-IDENTICAL to [[userCoCounts]] over the
+    * unioned log (the declared query's oracle replays the one-shot build;
+    * GraphCFSpec pins the history-eviction case and a brand-new item
+    * whose old side is empty). Same negative-co corruption tripwire as
+    * [[foldCoDelta]].
     *
     * `oldCo` must be the [[userCoCounts]] of `oldInteractions` at the
     * SAME (maxHistory, maxAudience). A production deployment feeds the
@@ -632,7 +659,7 @@ object GraphCF {
       "oldCo must be a userCoCounts frame with columns (s1, s2, co)")
     // persisted reuse (round 13): oldAgg feeds THREE legs (touched-user
     // slice, relevant-user widening, relevant re-cap), dAgg two, the two
-    // capped touched frames two each (the diff + their co legs), the
+    // capped touched frames two each (the diff + the signed walk), the
     // touched-item set three — un-persisted, every consumer re-ran the
     // full log scan + aggregation at action time (q199 measured ~7 log
     // passes; now 1 per distinct frame). u-partitioned like edgeFrame
@@ -675,24 +702,12 @@ object GraphCF {
       oldAgg.join(relevantU, Seq("u"), "left_semi"), maxHistory))
     val newCappedRel = oldCappedRel.join(touchedU, Seq("u"), "left_anti")
       .unionByName(newCappedTU)
-    val neg = coUserPairs(capAudience(
-        oldCappedRel.join(touchedI, Seq("i"), "left_semi"), maxAudience))
-      .select(col("s1"), col("s2"), (-col("co")).as("co"))
-    val pos = coUserPairs(capAudience(
-        newCappedRel.join(touchedI, Seq("i"), "left_semi"), maxAudience))
-    oldCo.select(col("s1"), col("s2"), col("co"))
-      .unionByName(pos).unionByName(neg)
-      .groupBy(col("s1"), col("s2"))
-      .agg(sum(col("co")).as("co"))
-      .filter(col("co") =!= 0L)
-      .select(col("s1"), col("s2"),
-        when(col("co") < 0L, raise_error(concat(
-          lit("foldUserCoDelta: negative folded co for pair ("),
-          col("s1").cast("string"), lit(", "), col("s2").cast("string"),
-          lit(s") — oldCo does not match oldInteractions at maxHistory=" +
-            s"$maxHistory, maxAudience=$maxAudience (stale frame or " +
-            "different caps)"))))
-          .otherwise(col("co")).as("co"))
+    foldHalf(oldCo, signedHalfWalk(
+        oldCappedRel.join(touchedI, Seq("i"), "left_semi"),
+        newCappedRel.join(touchedI, Seq("i"), "left_semi"),
+        "i", "u", maxAudience),
+      "foldUserCoDelta", s"maxHistory=$maxHistory, maxAudience=" +
+        s"$maxAudience (stale frame or different caps)")
   }
 
   /** Top-`k` P3alpha recommendations per user from an interaction frame.
@@ -1343,8 +1358,8 @@ object GraphCF {
     val nItems = probe.getLong(0)
     val maxNrm = if (probe.isNullAt(1)) 0L else probe.getLong(1)
     // co-occurrence: user-keyed self-join; coPairs builds the s1 < s2
-    // half and mirrors off the materialized cache, so the per-s1
-    // truncation below still sees every row of the symmetric matrix
+    // half and mirrors it in one pass, so the per-s1 truncation below
+    // still sees every row of the symmetric matrix
     val co = coPairs(e)
     // cosineSimQPre enforces the overflow budget on the pre-read max and
     // owns the single quantization point

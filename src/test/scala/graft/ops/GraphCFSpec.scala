@@ -288,6 +288,66 @@ class GraphCFSpec extends SparkTestBase {
     spark.catalog.clearCache()
   }
 
+  test("foldUserCoDelta with a brand-new user on a brand-new item (one-sided walk)") {
+    // item z has no old audience, so the signed walk's old side holds no
+    // rows for it: z's pairs come from the new side alone. u9 is new too
+    // and also lands on the old item a, so both kinds of item fold.
+    val delta = Seq((9L, "z"), (9L, "a"), (2L, "z")).toDF("user", "item")
+    val oldCo = GraphCF.userCoCounts(inter, "user", "item")
+    val folded = GraphCF.foldUserCoDelta(inter, delta, "user", "item", oldCo)
+      .as[(Long, Long, Long)].collect().toSet
+    val rebuilt = GraphCF.userCoCounts(inter.unionByName(delta), "user", "item")
+      .as[(Long, Long, Long)].collect().toSet
+    assert(folded == rebuilt)
+    assert(folded.contains((2L, 9L, 1L)) && folded.contains((9L, 2L, 1L)))
+    spark.catalog.clearCache()
+  }
+
+  test("coCounts / userCoCounts mirror exactly: symmetric, no diagonal, == both-directions aggregate") {
+    val log = Seq((1L, "a"), (1L, "a"), (1L, "b"), (1L, "c"),
+      (2L, "a"), (2L, "b"), (2L, "b"), (2L, "d"),
+      (3L, "b"), (3L, "c"), (3L, "d"), (4L, "a"), (4L, "d"), (4L, "d"))
+      .toDF("user", "item")
+    // the plain reference: the self-join kept in BOTH directions, one
+    // groupBy(s1, s2), no half and no mirror
+    def bothWays(e: org.apache.spark.sql.DataFrame, key: String, s: String) =
+      e.select(col(key), col(s).as("s1"), col("w").as("w1"))
+        .join(e.select(col(key), col(s).as("s2"), col("w").as("w2")), key)
+        .filter($"s1" =!= $"s2")
+        .groupBy($"s1", $"s2").agg(sum($"w1" * $"w2").as("co"))
+    def assertMirror[T](got: Seq[(T, T, Long)], ref: Seq[(T, T, Long)]) = {
+      assert(got.nonEmpty)
+      assert(got.size == got.toSet.size) // each pair exactly once
+      assert(got.toSet == ref.toSet)
+      assert(got.forall { case (a, b, _) => a != b })
+      val m = got.map { case (a, b, c) => (a, b) -> c }.toMap
+      assert(got.forall { case (a, b, c) => m.get((b, a)).contains(c) })
+    }
+    assertMirror(
+      GraphCF.coCounts(log, "user", "item", maxHistory = 2)
+        .as[(String, String, Long)].collect().toSeq,
+      bothWays(GraphCF.edges(log, "user", "item", maxHistory = 2), "u", "i")
+        .as[(String, String, Long)].collect().toSeq)
+    assertMirror(
+      GraphCF.userCoCounts(log, "user", "item")
+        .as[(Long, Long, Long)].collect().toSeq,
+      bothWays(GraphCF.edges(log, "user", "item"), "i", "u")
+        .as[(Long, Long, Long)].collect().toSeq)
+    spark.catalog.clearCache()
+  }
+
+  test("coCounts leaves one cache entry, the capped edge frame; the mirror holds none") {
+    spark.catalog.clearCache()
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    GraphCF.coCounts(inter, "user", "item", maxHistory = 2).collect()
+    val added = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(added.size == 1, s"persisted RDDs added: $added")
+    // ... and it is the capped edge frame (same plan, so the cache serves it)
+    assert(GraphCF.edges(inter, "user", "item", maxHistory = 2).storageLevel !=
+      org.apache.spark.storage.StorageLevel.NONE)
+    spark.catalog.clearCache()
+  }
+
   test("cosineSimQ refuses scale past the exactness budget") {
     // scale ~2^33 with norm^2 near 2^31 would wrap maxNrm*scale negative
     // and slip past the budget check — the require must refuse up front
