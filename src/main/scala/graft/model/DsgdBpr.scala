@@ -1,7 +1,10 @@
 package graft.model
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Checkpoints
 
 /** Stratified distributed SGD for BPR (DSGD schedule, Gemulla et al.,
   * KDD'11 "Large-scale matrix factorization with distributed stochastic
@@ -19,10 +22,12 @@ import org.apache.spark.sql.functions._
   * stratum touches a disjoint user-row and item-column set, so the P
   * concurrent SGD runs are conflict-free and EXACT (no gradient averaging,
   * no stale reads within a stratum). After P sub-epochs every (user, item)
-  * pair has been available exactly once per epoch. Item factors live in
-  * item-block rows that flow through a cogroup join — never broadcast,
-  * never driver-merged; per-sub-epoch data movement is one shuffle of the
-  * item blocks (N·d doubles total, spread over P tasks).
+  * pair has been available exactly once per epoch. User blocks stay in
+  * place (partition b holds user block b for the whole run); item blocks
+  * rotate one partition per sub-epoch and meet their stratum's users
+  * through `zipPartitions` — never broadcast, never driver-merged.
+  * Per-sub-epoch data movement is one shuffle of the item blocks (N·d
+  * doubles total, spread over P tasks), run by one Spark job.
   *
   * Semantics vs [[Bpr]]: negative sampling is popularity-weighted WITHIN
   * the stratum's item block (the stratum owns no other item's factors) —
@@ -68,10 +73,11 @@ object DsgdBpr {
   /** The at-scale training result: factor frames with schema
     * (id INT, features ARRAY<DOUBLE>) — user ids are the rated users,
     * item ids cover 0..numItems-1 (unrated items keep their Gaussian
-    * init, same as [[Bpr.train]]). Backed by the final localCheckpoint,
-    * or by parquet when `factorsDir` was given — nothing factor-sized
-    * touches the driver. Collect into [[Bpr.ModelArrays]] via [[train]]
-    * only at fixture scale. */
+    * init, same as [[Bpr.train]]). Backed by the last stratum's
+    * localCheckpoint (sized by its stored bytes), by the lazy init
+    * frames when `epochs` is 0, or by parquet when `factorsDir` was
+    * given — nothing factor-sized touches the driver. Collect into
+    * [[Bpr.ModelArrays]] via [[train]] only at fixture scale. */
   final case class FactorFrames(userFactors: DataFrame, itemFactors: DataFrame)
 
   @inline private def userBlock(user: Int, p: Int): Int = math.floorMod(user, p)
@@ -94,8 +100,7 @@ object DsgdBpr {
     * genre metadata pass `itemGenresDf` (item INT, genres ARRAY<INT>);
     * the `itemGenres` driver Map stays for the reference-shaped fixture
     * contract. `factorsDir` makes the returned frames parquet-backed
-    * (durable, lineage-free); otherwise they sit on the final
-    * localCheckpoint.
+    * (durable, lineage-free; see [[FactorFrames]] for the other cases).
     *
     * `init` warm-starts the epoch schedule from prior factor frames —
     * the reference's own checkpoint-resume flow for BPR (its epoch loop
@@ -119,7 +124,6 @@ object DsgdBpr {
     import spark.implicits._
     val P = p.blocks
     val scale = p.resolvedInitScale
-    val sc = spark.sparkContext
 
     // Genres ride the item rows (joined at init) instead of a broadcast
     // Array.tabulate(numItems) — at 10^8 items the tabulated array alone
@@ -176,9 +180,7 @@ object DsgdBpr {
           coalesce(col("__pop"), lit(0L)).as("pop"),
           array().cast("array<int>").as("g"))
     }
-    var items: Dataset[ItemRow] = withPop.as[ItemRow]
-      .repartition(P, col("block")).persist()
-    items.count()
+    val initItems: Dataset[ItemRow] = withPop.as[ItemRow]
 
     val usersAgg = positives
       .groupBy(col(userCol)).agg(collect_list(col(itemCol)).as("pos"))
@@ -190,7 +192,7 @@ object DsgdBpr {
       case None =>
         usersAgg.withColumn("__wf", lit(null).cast("array<double>"))
     }
-    var users: Dataset[UserRow] = usersSeeded
+    val initUsers: Dataset[UserRow] = usersSeeded
       .as[(Int, Seq[Int], Option[Seq[Double]])]
       .map { case (u, pos, warm) =>
         val rng = new java.util.Random(p.seed ^ (u.toLong * 2654435761L))
@@ -198,113 +200,55 @@ object DsgdBpr {
           warm.map(_.toArray)
             .getOrElse(Array.fill(p.rank)(rng.nextGaussian() * scale)))
       }
-      .repartition(P, col("block")).persist()
-    users.count()
 
-    val pp = p
+    // Users never move: partition b holds user block b all run. Items
+    // rotate: sub-epoch `sub` keys item block q by (q - sub) mod P, a
+    // partition id that a HashPartitioner keeps, so zipping the sides forms
+    // the strata {(b, (b + sub) mod P)} and only items shuffle. The first
+    // sub-epoch's job computes the lazy init frames.
+    val byKey = new HashPartitioner(P)
+    var users: RDD[UserRow] = initUsers.rdd.keyBy(_.block).partitionBy(byKey).values
+    var items: RDD[ItemRow] = initItems.rdd
+    var last: Option[RDD[StratumOut]] = None
+    def frames(cp: RDD[StratumOut]): (DataFrame, DataFrame) = (
+      Checkpoints.fromRdd(cp.flatMap(_.users).map(ur => (ur.user, ur.u.toSeq))
+        .toDF("id", "features"), cp),
+      Checkpoints.fromRdd(cp.flatMap(_.items).map(ir => (ir.item, ir.f.toSeq))
+        .toDF("id", "features"), cp))
+
     val deltaAcc = new Trace.MaxAccumulator
-    sc.register(deltaAcc, "dsgd_max_item_delta")
+    spark.sparkContext.register(deltaAcc, "dsgd_max_item_delta")
     val epochHist = scala.collection.mutable.ArrayBuffer.empty[Trace.EpochStats]
     for (epoch0 <- 0 until p.epochs; sub <- 0 until P) {
       val epoch = p.epochOffset + epoch0 // global epoch: resume replays exactly
       if (sub == 0) deltaAcc.reset()
-      // stratum for item block q pairs with user block (q - sub) mod P;
-      // key both sides by the ITEM block id
-      val keyedUsers = users.groupByKey(ur => math.floorMod(ur.block + sub, P))
-      val keyedItems = items.groupByKey(_.block)
-      val out = keyedUsers.cogroup(keyedItems) { (q, uIt, iIt) =>
-        val itemRows = iIt.toArray.sortBy(_.item)
-        val blockUsers = uIt.toArray.sortBy(_.user) // deterministic order
-        if (itemRows.isEmpty) Iterator.single(StratumOut(blockUsers, itemRows))
-        else {
-          // epoch-delta bookkeeping: factors are mutated in place, so clone
-          // the stratum's starting values (O(block items x d), small next to
-          // the SGD work itself) and report |final - start| to the max
-          // accumulator — no extra jobs, safe under task re-execution
-          val startF = itemRows.map(_.f.clone())
-          val localIdx = itemRows.iterator.map(_.item).zipWithIndex.toMap
-          // within-block popularity CDF over the block's items — counts
-          // came in ON the rows (r.pop), no global map
-          val weights = itemRows.map(r => math.max(r.pop, 0L).toDouble + 1e-9)
-          val total = weights.sum
-          val cdf = new Array[Double](itemRows.length)
-          var acc = 0.0
-          var i = 0
-          while (i < itemRows.length) { acc += weights(i) / total; cdf(i) = acc; i += 1 }
-          cdf(itemRows.length - 1) = 1.0
-          val d = pp.rank
-          val updatedUsers = blockUsers.map { ur =>
-            val rng = new java.util.Random(
-              pp.seed ^ (ur.user.toLong * 31L) ^ (epoch * 1000003L) ^ (sub * 7919L))
-            val posSet = new java.util.HashSet[Int]()
-            ur.pos.foreach(posSet.add(_))
-            val u = ur.u.clone()
-            ur.pos.foreach { gi =>
-              localIdx.get(gi).foreach { li => // only this stratum's positives
-                val lj = sampleNegativeLocal(rng, cdf, itemRows, posSet,
-                  itemRows(li).g, genreAware, pp.maxSampleRetries)
-                if (lj >= 0) {
-                  val vi = itemRows(li).f
-                  val vj = itemRows(lj).f
-                  var x = 0.0
-                  var k = 0
-                  while (k < d) { x += u(k) * (vi(k) - vj(k)); k += 1 }
-                  val c = Bpr.sigmoidNeg(x)
-                  k = 0
-                  while (k < d) {
-                    val gu = c * (vi(k) - vj(k)) - pp.reg * u(k)
-                    val gvi = c * u(k) - pp.reg * vi(k)
-                    val gvj = -c * u(k) - pp.reg * vj(k)
-                    u(k) += pp.lr * gu
-                    vi(k) += pp.lr * gvi
-                    vj(k) += pp.lr * gvj
-                    k += 1
-                  }
-                }
-              }
-            }
-            ur.copy(u = u)
-          }
-          var md = 0.0
-          var r = 0
-          while (r < itemRows.length) {
-            var k = 0
-            while (k < d) {
-              val dd = math.abs(itemRows(r).f(k) - startF(r)(k))
-              if (dd > md) md = dd
-              k += 1
-            }
-            r += 1
-          }
-          deltaAcc.add(md)
-          Iterator.single(StratumOut(updatedUsers, itemRows))
-        }
-      }.persist()
-      out.count()
-      val prevUsers = users
-      val prevItems = items
+      val rotated = items.keyBy(ir => math.floorMod(ir.block - sub, P))
+        .partitionBy(byKey).values
+      val out = users.zipPartitions(rotated) { (uIt, iIt) =>
+        // deterministic order: the RNG streams and updates follow ids
+        Iterator.single(stratum(uIt.toArray.sortBy(_.user), iIt.toArray.sortBy(_.item),
+          epoch, sub, p, genreAware, deltaAcc))
+      }
       // localCheckpoint: truncate lineage each sub-epoch (epochs x P plan
-      // growth OOMs the driver otherwise — measured on the round-1 trainers)
-      users = out.flatMap(_.users.toIndexedSeq).repartition(P, col("block"))
-        .localCheckpoint(eager = true)
-      items = out.flatMap(_.items.toIndexedSeq).repartition(P, col("block"))
-        .localCheckpoint(eager = true)
-      prevUsers.unpersist(blocking = false)
-      prevItems.unpersist(blocking = false)
-      out.unpersist(blocking = false)
+      // growth OOMs the driver otherwise — measured on the round-1
+      // trainers); the count is the sub-epoch's one job
+      out.localCheckpoint().count()
+      last.foreach(_.unpersist(blocking = false))
+      last = Some(out)
+      users = out.flatMap(_.users)
+      items = out.flatMap(_.items)
 
       if (sub == P - 1) {
         // epoch boundary: report the trace, snapshot on cadence
         val it = epoch + 1
-        def userDf = users.map(ur => (ur.user, ur.u.toSeq)).toDF("id", "features")
-        def itemDf = items.map(ir => (ir.item, ir.f.toSeq)).toDF("id", "features")
+        lazy val (userDf, itemDf) = frames(out)
         val (pk, rk) =
           if (trace.computeMetrics) {
             val pos = positives.select(col(userCol).as("user"), col(itemCol).as("item"))
             val r = trace.metricMaxUsers match {
               case Some(m) => // sampled eval: the product is m x N, not M x N
                 Metrics.precisionRecallAtKSampled(userDf, itemDf, pos,
-                  "user", "item", trace.metricK, m, seed = pp.seed).head()
+                  "user", "item", trace.metricK, m, seed = p.seed).head()
               case None =>
                 val scored = userDf.select(col("id").as("user"), col("features").as("u"))
                   .crossJoin(broadcast(itemDf.select(col("id").as("item"), col("features").as("v"))))
@@ -324,23 +268,94 @@ object DsgdBpr {
         }
       }
     }
+
+    val (userDf, itemDf) = last.map(frames).getOrElse( // epochs = 0: the init frames
+      (initUsers.map(ur => (ur.user, ur.u.toSeq)).toDF("id", "features"),
+        initItems.map(ir => (ir.item, ir.f.toSeq)).toDF("id", "features")))
     trace.snapshotDir.foreach { dir =>
-      Trace.snapshotFactors(dir, "final",
-        users.map(ur => (ur.user, ur.u.toSeq)).toDF("id", "features"),
-        items.map(ir => (ir.item, ir.f.toSeq)).toDF("id", "features"))
+      Trace.snapshotFactors(dir, "final", userDf, itemDf)
       Trace.writeBprHistory(spark, dir, epochHist.toSeq)
     }
-
-    val userDf = users.map(ur => (ur.user, ur.u.toSeq)).toDF("id", "features")
-    val itemDf = items.map(ir => (ir.item, ir.f.toSeq)).toDF("id", "features")
     factorsDir match {
       case Some(dir) =>
         Trace.snapshotFactors(dir, "final", userDf, itemDf)
+        last.foreach(_.unpersist(blocking = false)) // the frames read parquet now
         FactorFrames(spark.read.parquet(s"$dir/final/user_factors"),
           spark.read.parquet(s"$dir/final/item_factors"))
       case None => FactorFrames(userDf, itemDf)
     }
   }
+
+  /** One stratum's SGD over id-sorted rows. Item factors update in place
+    * (this task's own shuffle-read copies); user rows are copied, as they
+    * are the previous stratum's cached output. */
+  private def stratum(blockUsers: Array[UserRow], itemRows: Array[ItemRow], epoch: Int,
+                      sub: Int, pp: Params, genreAware: Boolean,
+                      deltaAcc: Trace.MaxAccumulator): StratumOut =
+    if (itemRows.isEmpty) StratumOut(blockUsers, itemRows)
+    else {
+      // epoch-delta bookkeeping: factors are mutated in place, so clone
+      // the stratum's starting values (O(block items x d), small next to
+      // the SGD work itself) and report |final - start| to the max
+      // accumulator — no extra jobs, safe under task re-execution
+      val startF = itemRows.map(_.f.clone())
+      val localIdx = itemRows.iterator.map(_.item).zipWithIndex.toMap
+      // within-block popularity CDF over the block's items — counts
+      // came in ON the rows (r.pop), no global map
+      val weights = itemRows.map(r => math.max(r.pop, 0L).toDouble + 1e-9)
+      val total = weights.sum
+      val cdf = new Array[Double](itemRows.length)
+      var acc = 0.0
+      var i = 0
+      while (i < itemRows.length) { acc += weights(i) / total; cdf(i) = acc; i += 1 }
+      cdf(itemRows.length - 1) = 1.0
+      val d = pp.rank
+      val updatedUsers = blockUsers.map { ur =>
+        val rng = new java.util.Random(
+          pp.seed ^ (ur.user.toLong * 31L) ^ (epoch * 1000003L) ^ (sub * 7919L))
+        val posSet = new java.util.HashSet[Int]()
+        ur.pos.foreach(posSet.add(_))
+        val u = ur.u.clone()
+        ur.pos.foreach { gi =>
+          localIdx.get(gi).foreach { li => // only this stratum's positives
+            val lj = sampleNegativeLocal(rng, cdf, itemRows, posSet,
+              itemRows(li).g, genreAware, pp.maxSampleRetries)
+            if (lj >= 0) {
+              val vi = itemRows(li).f
+              val vj = itemRows(lj).f
+              var x = 0.0
+              var k = 0
+              while (k < d) { x += u(k) * (vi(k) - vj(k)); k += 1 }
+              val c = Bpr.sigmoidNeg(x)
+              k = 0
+              while (k < d) {
+                val gu = c * (vi(k) - vj(k)) - pp.reg * u(k)
+                val gvi = c * u(k) - pp.reg * vi(k)
+                val gvj = -c * u(k) - pp.reg * vj(k)
+                u(k) += pp.lr * gu
+                vi(k) += pp.lr * gvi
+                vj(k) += pp.lr * gvj
+                k += 1
+              }
+            }
+          }
+        }
+        ur.copy(u = u)
+      }
+      var md = 0.0
+      var r = 0
+      while (r < itemRows.length) {
+        var k = 0
+        while (k < d) {
+          val dd = math.abs(itemRows(r).f(k) - startF(r)(k))
+          if (dd > md) md = dd
+          k += 1
+        }
+        r += 1
+      }
+      deltaAcc.add(md)
+      StratumOut(updatedUsers, itemRows)
+    }
 
   /** Fixture-scale convenience: run [[trainFactors]] and collect the
     * result into in-memory [[Bpr.ModelArrays]] (the [[Bpr]]-compatible

@@ -1,9 +1,12 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.SparkEnv
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.Statistics
 import org.apache.spark.sql.classic.{Dataset, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.RDDBlockId
 
 /** The one graft file under `org.apache.spark.sql` — it needs the
   * `private[sql]` Dataset constructor to re-wrap a checkpointed plan.
@@ -65,5 +68,28 @@ object Checkpoints {
           lr.stream)(ss, stats, None))
       case _ => cp
     }
+  }
+
+  /** `df` — a frame computed from the cached (typically locally
+    * checkpointed) RDD `cached` — re-wrapped in a LogicalRDD whose
+    * statistics are `cached`'s stored bytes. A frame built from an RDD
+    * otherwise estimates `spark.sql.defaultSizeInBytes` (Long.MaxValue by
+    * default), which silently disables auto-broadcast for every caller
+    * that joins it. The bytes are an upper bound when `df` projects only
+    * part of `cached`. They are read synchronously from the block manager
+    * master, which every cached block reports to before its task ends; the
+    * status store [[truncate]] reads lags it by up to the UI's live-update
+    * period. When some partition is not cached the session default stays. */
+  def fromRdd(df: DataFrame, cached: RDD[_]): DataFrame = {
+    val ss = df.sparkSession.asInstanceOf[SparkSession]
+    val master = SparkEnv.get.blockManager.master
+    val sizes = cached.partitions.indices.map { i =>
+      master.getBlockStatus(RDDBlockId(cached.id, i), askStorageEndpoints = false)
+        .values.map(s => s.memSize + s.diskSize).maxOption
+    }
+    val stats = if (sizes.forall(_.isDefined))
+      Some(Statistics(sizeInBytes = BigInt(sizes.flatten.sum))) else None
+    val qe = df.queryExecution
+    Dataset.ofRows(ss, LogicalRDD(qe.analyzed.output, qe.toRdd)(ss, stats, None))
   }
 }

@@ -119,6 +119,69 @@ class DsgdBprSpec extends SparkTestBase {
     uf.foreach { case (u, f) => assert(f.toArray.sameElements(viaMap.userFactors(u)), s"user $u") }
   }
 
+  /** `java.util.Arrays.hashCode` over the IEEE bit patterns of the
+    * id-ordered factors — equal hashes mean bit-identical factors. */
+  private def factorDigest(df: org.apache.spark.sql.DataFrame): Int =
+    java.util.Arrays.hashCode(df.as[(Int, Seq[Double])].collect().sortBy(_._1)
+      .flatMap(_._2).map(java.lang.Double.doubleToLongBits))
+
+  test("golden pin: factors are bit-identical to the recorded digests") {
+    // exact factors for three block counts, one genre-aware: any change to
+    // the schedule, RNG streams, sampling or update order moves a digest
+    val pos = spark.range(3000).selectExpr("cast(id % 97 as int) as user",
+      "cast((id * 7919) % 53 as int) as item").distinct()
+    val genres = (0 until 60).map(i => i -> Array(i % 4)).toMap
+    def digests(blocks: Int, g: Option[Map[Int, Array[Int]]]): (Int, Int) = {
+      val ff = DsgdBpr.trainFactors(pos, "user", "item", 60, DsgdBpr.Params(rank = 6,
+        lr = 0.05, epochs = 3, blocks = blocks, seed = 9L), itemGenres = g)
+      (factorDigest(ff.userFactors), factorDigest(ff.itemFactors))
+    }
+    assert(digests(4, None) == ((787934450, -280974192)))
+    assert(digests(3, Some(genres)) == ((1142659724, -1134034584)))
+    assert(digests(5, None) == ((-1740908015, -2044721291)))
+  }
+
+  test("one Spark job per sub-epoch, plus a small constant for the init") {
+    // the constant: the init frames' AQE shuffle stages (3 for this fixture)
+    val p = DsgdBpr.Params(rank = 3, lr = 0.05, epochs = 3, blocks = 3, seed = 29L,
+      initScale = 0.1)
+    val (_, jobs) = org.apache.spark.sql.graft.JobCount(spark) {
+      DsgdBpr.trainFactors(clusteredPositives, "user", "item", 10, p)
+    }
+    assert(jobs <= p.epochs * p.blocks + 3, s"$jobs jobs")
+  }
+
+  test("returned frames carry a measured size that keeps auto-broadcast working") {
+    // a frame built straight from an RDD would estimate Long.MaxValue bytes
+    val p = DsgdBpr.Params(rank = 3, lr = 0.05, epochs = 2, blocks = 3, seed = 31L,
+      initScale = 0.1)
+    val ff = DsgdBpr.trainFactors(clusteredPositives, "user", "item", 10, p)
+    val threshold = org.apache.spark.sql.internal.SQLConf.get.autoBroadcastJoinThreshold
+    Seq(ff.userFactors, ff.itemFactors).foreach { df =>
+      val size = df.queryExecution.optimizedPlan.stats.sizeInBytes
+      assert(size < threshold, s"sizeInBytes $size >= $threshold")
+    }
+  }
+
+  test("cache lifetime: the last stratum checkpoint stays, none with factorsDir") {
+    val sc = spark.sparkContext
+    val p = DsgdBpr.Params(rank = 2, lr = 0.05, epochs = 2, blocks = 2, seed = 37L,
+      initScale = 0.1)
+    val before = sc.getPersistentRDDs.keySet
+    val ff = DsgdBpr.trainFactors(clusteredPositives, "user", "item", 10, p)
+    val added = sc.getPersistentRDDs.keySet -- before
+    assert(added.size == 1, s"persisted RDDs left behind: $added")
+    assert(ff.userFactors.count() == 8 && ff.itemFactors.count() == 10)
+    added.foreach(id => sc.getPersistentRDDs(id).unpersist(blocking = true))
+
+    val dir = java.nio.file.Files.createTempDirectory("dsgd_cache").toString
+    val before2 = sc.getPersistentRDDs.keySet
+    val pf = DsgdBpr.trainFactors(clusteredPositives, "user", "item", 10, p,
+      factorsDir = Some(dir))
+    assert((sc.getPersistentRDDs.keySet -- before2).isEmpty)
+    assert(pf.userFactors.count() == 8 && pf.itemFactors.count() == 10)
+  }
+
   test("DSGD genre-aware mode trains without violating the skip rule") {
     // items 0-4 share genre 1, items 5-9 share genre 2: for cluster-1 users
     // every negative candidate for a positive in genre 1 must come from
