@@ -1,7 +1,9 @@
 package graft.model
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, RelationalGroupedDataset,
+  SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Checkpoints
 import graft.linalg.Linalg
 import graft.ops.{Aggregators, VectorOps}
 
@@ -19,11 +21,18 @@ import graft.ops.{Aggregators, VectorOps}
   * The self factors never touch the fact table: the bias numerator
   * Σ(r − u·v − b_o) is decomposed as Σr − u·Σv − Σb_o (u is constant per
   * self entity), so the only per-rating work is the other-side factor
-  * join + the grouped Gramian aggregation. The Gramian/vector sums use
-  * custom typed Aggregators with primitive-array buffers, so Spark
-  * partial-aggregates map-side and the shuffle carries one packed buffer
-  * per (entity, partition) — the same data movement as MLlib's
+  * join + the grouped aggregation. The three vector statistics come from
+  * ONE fused typed kernel ([[Aggregators.RidgeStats]]) over one
+  * primitive-array buffer, so each rating's factor array is decoded once;
+  * Spark partial-aggregates it map-side and the shuffle carries one packed
+  * buffer per (entity, partition) — the same data movement as MLlib's
   * InBlock/OutBlock layout, without hand-rolled block management.
+  *
+  * The training loop runs one SQL execution per half-sweep: the sweep's
+  * alignment join also emits each entity's |Δparam|, and the loop reads
+  * its max (the convergence test) and the init frames' entity counts (the
+  * plan choice) through `Dataset.observe` on the checkpoint jobs
+  * themselves, not through extra joins or count() barriers.
   *
   * Bias update (reference semantics, user side):
   *   b_m = λ·Σ(r − u·v − b_n) / (α + λ·n_m)     [prac_1.py:68-77]
@@ -235,10 +244,18 @@ object AlsBias {
                 selfCol: String, otherCol: String, ratingCol: String,
                 p: Params, broadcastOther: Boolean = false,
                 broadcastSelf: Boolean = false,
-                routing: Option[DataFrame] = None): DataFrame = {
+                routing: Option[DataFrame] = None): DataFrame =
+    sweepWithDelta(ratings, selfFactors, otherFactors, selfCol, otherCol, ratingCol, p,
+      broadcastOther, broadcastSelf, routing).drop(DeltaCol)
+
+  /** [[halfSweep]] plus each entity's |Δparam| against `selfFactors` in
+    * [[DeltaCol]]. */
+  private[model] def sweepWithDelta(ratings: DataFrame, selfFactors: DataFrame,
+                                    otherFactors: DataFrame, selfCol: String,
+                                    otherCol: String, ratingCol: String, p: Params,
+                                    broadcastOther: Boolean, broadcastSelf: Boolean,
+                                    routing: Option[DataFrame]): DataFrame = {
     val rank = p.rank
-    val vecSum = udaf(new Aggregators.VectorSum(rank))
-    val gramSum = udaf(new Aggregators.GramianSum(rank))
 
     // non-broadcast factor joins carry a shuffle_hash hint: the build side
     // is the entity-sized factor frame, and a sort-merge plan would SORT
@@ -279,19 +296,13 @@ object AlsBias {
           col("oid")).as("q1"))
       else
         Seq(sum(col("r")).as("sr"), sum(col("bo")).as("sbo"))
-    val preAgg = joined
-      .withColumn("rv", transform(col("v"), x => (col("r") - col("bo")) * x))
     // routed mode groups on (bucket, self) — the bucket is functionally
     // determined by the self id, so the groups are identical, and the
     // fact's HashPartitioning(bucket) satisfies the clustered
     // distribution: the aggregation runs partition-local, no exchange
     val aggKeys =
       if (routing.isDefined) Seq(col(BucketCol), col("sid")) else Seq(col("sid"))
-    val aggd = preAgg
-      .groupBy(aggKeys: _*)
-      .agg(count(lit(1)).as("n"), (biasNum ++ Seq(
-        vecSum(col("rv")).as("srv"), vecSum(col("v")).as("sv"),
-        gramSum(col("v")).as("gram"))): _*)
+    val aggd = ridgeStats(joined.groupBy(aggKeys: _*), rank, biasNum)
       .drop(BucketCol)
 
     // entity-sized tail: join the current self vectors onto the summary,
@@ -318,28 +329,84 @@ object AlsBias {
       solve(col("n"), sresid.as("sresid"), col("srv"), col("sv"), col("gram")).as("ub"))
       .select(col("id"), col("ub._2").as("features"), col("ub._1").as("bias"))
 
-    // entities with zero ratings this sweep: closed form -> zero bias/vector.
-    // Under broadcastSelf the (entity-sized) updated frame broadcasts so
-    // the alignment join adds no exchange either — the co-located sweep
-    // stays exchange-free end to end (PlanShapeSpec pins it)
+    align(selfFactors, updated, broadcastSelf, rank)
+  }
+
+  /** The per-entity aggregate of a half-sweep over the grouped
+    * (r, bo, v) rows: n, the bias-numerator columns `biasNum`, and the
+    * ridge statistics srv = Σ(r−bo)·v, sv = Σv and gram = Σvvᵀ (packed
+    * upper triangle), sliced out of one [[Aggregators.RidgeStats]] buffer. */
+  private[model] def ridgeStats(grouped: RelationalGroupedDataset,
+                                rank: Int, biasNum: Seq[Column]): DataFrame = {
+    val stats = udaf(new Aggregators.RidgeStats(rank))
+    grouped
+      .agg(count(lit(1)).as("n"),
+        (biasNum :+ stats(col("r"), col("bo"), col("v")).as("stats")): _*)
+      .withColumn("srv", slice(col("stats"), 1, rank))
+      .withColumn("sv", slice(col("stats"), rank + 1, rank))
+      .withColumn("gram", slice(col("stats"), 2 * rank + 1, rank * (rank + 1) / 2))
+      .drop("stats")
+  }
+
+  /** A sweep's output over EVERY self entity: the solved (features, bias)
+    * in `updated` where the entity had ratings, the closed form's zero
+    * bias/vector where it had none, and [[DeltaCol]] = its |Δparam|
+    * against the old row of `selfFactors`, which the join already reads.
+    * Under broadcastSelf the (entity-sized) updated frame broadcasts so
+    * the alignment join adds no exchange either — the co-located sweep
+    * stays exchange-free end to end (PlanShapeSpec pins it). */
+  private[model] def align(selfFactors: DataFrame, updated: DataFrame,
+                           broadcastSelf: Boolean, rank: Int): DataFrame = {
     val updJ = if (broadcastSelf) broadcast(updated) else updated.hint("shuffle_hash")
-    selfFactors.select(col("id")).join(updJ, Seq("id"), "left")
-      .select(col("id"),
+    selfFactors.select(col("id"), col("features").as("f0"), col("bias").as("b0"))
+      .join(updJ, Seq("id"), "left")
+      .select(col("id"), col("f0"), col("b0"),
         coalesce(col("features"),
           transform(sequence(lit(0), lit(rank - 1)), _ => lit(0.0))).as("features"),
         coalesce(col("bias"), lit(0.0)).as("bias"))
+      .select(col("id"), col("features"), col("bias"),
+        absDelta(col("f0"), col("b0"), col("features"), col("bias")).as(DeltaCol))
   }
+
+  /** The per-entity |Δparam| column [[sweepWithDelta]] emits. */
+  private[model] val DeltaCol = "__graft_delta"
+
+  /** max(|Δbias|, max_k |Δfeature_k|) of one entity: [[maxDelta]]'s term,
+    * which stays the reference for the max the training loops observe on
+    * their checkpoint jobs. */
+  private def absDelta(f0: Column, b0: Column, f1: Column, b1: Column): Column =
+    greatest(abs(b1 - b0), array_max(zip_with(f0, f1, (a, b) => abs(b - a))))
 
   /** max |Δparam| between two factor frames (convergence test L6,
     * /root/reference/explicit_ratings/prac_1.py:179-187). */
   def maxDelta(oldF: DataFrame, newF: DataFrame): Double = {
     val j = oldF.select(col("id"), col("features").as("f0"), col("bias").as("b0"))
       .join(newF.select(col("id"), col("features").as("f1"), col("bias").as("b1")), Seq("id"))
-      .select(greatest(
-        abs(col("b1") - col("b0")),
-        array_max(zip_with(col("f0"), col("f1"), (a, b) => abs(b - a)))).as("d"))
+      .select(absDelta(col("f0"), col("b0"), col("f1"), col("b1")).as("d"))
     val row = j.agg(max(col("d"))).head()
     if (row.isNullAt(0)) 0.0 else row.getDouble(0)
+  }
+
+  /** [[Checkpoints.truncate]] of `df` without its [[DeltaCol]], and the
+    * one-row aggregate `metric` over `df` — observed on the checkpoint's
+    * own job, so reading it runs no extra SQL execution. The metric is
+    * null when `df` is empty. */
+  private[model] def checkpointObserving(df: DataFrame, metric: Column): (DataFrame, Any) = {
+    val obs = Observation()
+    val cp = Checkpoints.truncate(df.observe(obs, metric.as("m")).drop(DeltaCol))
+    (cp, obs.get("m"))
+  }
+
+  /** A checkpointed sweep output and its max |Δparam| (0 when empty). */
+  private[model] def checkpointSweep(sweep: DataFrame): (DataFrame, Double) = {
+    val (cp, d) = checkpointObserving(sweep, max(col(DeltaCol)))
+    (cp, if (d == null) 0.0 else d.asInstanceOf[Double])
+  }
+
+  /** A checkpointed init factor frame and its entity count. */
+  private[model] def checkpointInit(factors: DataFrame): (DataFrame, Long) = {
+    val (cp, n) = checkpointObserving(factors, count(lit(1)))
+    (cp, n.asInstanceOf[Long])
   }
 
   /** Pick the per-sweep plans and (persisted, materialized) fact copies
@@ -484,9 +551,10 @@ object AlsBias {
     * eager localCheckpoint per sweep, so lineage stays O(1) across
     * iterations and the checkpoint blocks ARE the materialization (an
     * additional persist() would cache the pre-checkpoint plan, which no
-    * unpersist on the checkpointed frame can ever free — a leak). Blocks of
-    * superseded sweeps are reclaimed by the ContextCleaner once the frames
-    * go out of scope. At cluster scale: a reliable checkpoint dir. */
+    * unpersist on the checkpointed frame can ever free — a leak). Each
+    * superseded checkpoint is released as soon as both of its successors
+    * exist, so only the two returned frames stay cached. At cluster scale:
+    * a reliable checkpoint dir. */
   def train(ratings: DataFrame, userCol: String, itemCol: String, ratingCol: String,
             p: Params = Params()): Model =
     trainTraced(ratings, userCol, itemCol, ratingCol, p,
@@ -497,6 +565,12 @@ object AlsBias {
     * `snapshotEvery` sweeps plus a final set, prac_1.py:163-204): returns
     * the model AND the (iter, LL, RMSE, maxDelta) history, invoking
     * `trace.onIter` live.
+    *
+    * One SQL execution per half-sweep — its checkpoint — plus four fixed
+    * ones (the two init checkpoints and the two fact layouts): the max
+    * |Δparam| (the value [[maxDelta]] computes) and the init entity counts
+    * are observed on the checkpoint jobs, and LL/RMSE add their own
+    * executions only when `computeMetrics` is on.
     *
     * `init` warm-starts the sweep loop from a prior model's factors
     * ([[seedFactors]]): a converged model plus a small ratings delta
@@ -516,20 +590,21 @@ object AlsBias {
                   ratingCol: String, p: Params,
                   trace: Trace.Config,
                   init: Option[Model] = None): (Model, Seq[Trace.IterStats]) = {
-    var users = (init match {
+    val (users0, uCount) = checkpointInit(init match {
       case Some(m) => seedFactors(ratings, userCol, p, 1L, m.userFactors)
       case None => initFactors(ratings, userCol, p, 1L)
-    }).transform(org.apache.spark.sql.graft.Checkpoints.truncate)
-    var items = (init match {
+    })
+    val (items0, iCount) = checkpointInit(init match {
       case Some(m) => seedFactors(ratings, itemCol, p, 2L, m.itemFactors)
       case None => initFactors(ratings, itemCol, p, 2L)
-    }).transform(org.apache.spark.sql.graft.Checkpoints.truncate)
-    // two bounded 1-row reads off the checkpointed factor frames pick the
-    // per-side sweep plans (see Params.broadcastEntities); the try opens
+    })
+    var users = users0; var items = items0
+    // the entity counts observed on the init checkpoints pick the per-side
+    // sweep plans (see Params.broadcastEntities); the try opens
     // IMMEDIATELY after the copies exist, so any later failure — conf
     // setup included — releases them
     val (userPlan, itemPlan, copies) =
-      sweepPlans(ratings, userCol, itemCol, users.count(), items.count(), p)
+      sweepPlans(ratings, userCol, itemCol, uCount, iCount, p)
     try {
     withTrainingConfs(ratings.sparkSession, p.aggMemoryBudgetBytes, p.rank) {
     trace.onStart()
@@ -538,19 +613,14 @@ object AlsBias {
     var delta = Double.MaxValue
     while (iter < p.maxIter && delta > p.tol) {
       // Q1 is a movie-loop-only quirk: user sweep always sums
-      val newUsers = halfSweep(userPlan.fact, users, items, userCol, itemCol,
-          ratingCol, p.copy(strictQ1Bias = false),
-          broadcastOther = userPlan.broadcastOther,
-          broadcastSelf = userPlan.broadcastSelf,
-          routing = userPlan.routing)
-        .transform(org.apache.spark.sql.graft.Checkpoints.truncate)
-      val newItems = halfSweep(itemPlan.fact, items, newUsers, itemCol, userCol,
-          ratingCol, p,
-          broadcastOther = itemPlan.broadcastOther,
-          broadcastSelf = itemPlan.broadcastSelf,
-          routing = itemPlan.routing)
-        .transform(org.apache.spark.sql.graft.Checkpoints.truncate)
-      delta = math.max(maxDelta(users, newUsers), maxDelta(items, newItems))
+      val (newUsers, userDelta) = checkpointSweep(sweepWithDelta(userPlan.fact, users,
+        items, userCol, itemCol, ratingCol, p.copy(strictQ1Bias = false),
+        userPlan.broadcastOther, userPlan.broadcastSelf, userPlan.routing))
+      val (newItems, itemDelta) = checkpointSweep(sweepWithDelta(itemPlan.fact, items,
+        newUsers, itemCol, userCol, ratingCol, p,
+        itemPlan.broadcastOther, itemPlan.broadcastSelf, itemPlan.routing))
+      Seq(users, items).foreach(Checkpoints.release)
+      delta = math.max(userDelta, itemDelta)
       users = newUsers; items = newItems
       iter += 1
       val (ll, rm) =

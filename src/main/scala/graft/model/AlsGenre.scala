@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.linalg.Linalg
 import graft.ops.{Aggregators, VectorOps}
+import org.apache.spark.sql.graft.Checkpoints
 
 /** Genre-coupled ALS (/root/reference/explicit_ratings/incl_genre.py): movie
   * vectors get a prior mean assembled from shared genre feature vectors,
@@ -11,9 +12,10 @@ import graft.ops.{Aggregators, VectorOps}
   * (incl_genre.py:185-193), and the 20×d genre matrix F is refit each sweep
   * from the movie vectors (incl_genre.py:199-219).
   *
-  * Spark shape: user sweep reuses AlsBias.halfSweep unchanged; the movie
+  * Spark shape: user sweep reuses AlsBias's half-sweep unchanged; the movie
   * sweep adds one item-sized genre join and one extra term in the
-  * per-movie solve (the fact-side plan is AlsBias's — self factors and
+  * per-movie solve (the fact-side plan, the fused ridge-statistics
+  * aggregate and the alignment join are AlsBias's — self factors and
   * genres join the ENTITY-SIZED aggregate, never the fact); the F update
   * is an explode(movie→genre) + grouped vector aggregation. F is updated
   * Jacobi-style across genres per sweep (the reference iterates genres
@@ -52,10 +54,19 @@ object AlsGenre {
                           genreF: Map[Int, Array[Double]], p: Params,
                           broadcastOther: Boolean = false,
                           broadcastSelf: Boolean = false,
-                          routing: Option[DataFrame] = None): DataFrame = {
+                          routing: Option[DataFrame] = None): DataFrame =
+    movieSweepWithDelta(ratings, itemFactors, userFactors, movieGenres, itemCol, userCol,
+      ratingCol, genreF, p, broadcastOther, broadcastSelf, routing).drop(AlsBias.DeltaCol)
+
+  /** [[movieSweepWithPrior]] plus each movie's |Δparam| in
+    * [[AlsBias.DeltaCol]], as [[AlsBias.sweepWithDelta]]. */
+  private def movieSweepWithDelta(ratings: DataFrame, itemFactors: DataFrame,
+                                  userFactors: DataFrame, movieGenres: DataFrame,
+                                  itemCol: String, userCol: String, ratingCol: String,
+                                  genreF: Map[Int, Array[Double]], p: Params,
+                                  broadcastOther: Boolean, broadcastSelf: Boolean,
+                                  routing: Option[DataFrame]): DataFrame = {
     val rank = p.rank
-    val vecSum = udaf(new Aggregators.VectorSum(rank))
-    val gramSum = udaf(new Aggregators.GramianSum(rank))
 
     // shuffle_hash hints on the non-broadcast joins: build from the
     // entity-sized side, never sort the fact (per-join, not a session
@@ -81,17 +92,11 @@ object AlsGenre {
             Seq("oid"))
     }
 
-    val preAgg = joined
-      .withColumn("rv", transform(col("v"), x => (col("r") - col("bo")) * x))
     val aggKeys =
       if (routing.isDefined) Seq(col(AlsBias.BucketCol), col("sid"))
       else Seq(col("sid"))
-    val aggd = preAgg
-      .groupBy(aggKeys: _*)
-      .agg(count(lit(1)).as("n"), sum(col("r")).as("sr"),
-        sum(col("bo")).as("sbo"),
-        vecSum(col("rv")).as("srv"), vecSum(col("v")).as("sv"),
-        gramSum(col("v")).as("gram"))
+    val aggd = AlsBias.ridgeStats(joined.groupBy(aggKeys: _*), rank,
+        Seq(sum(col("r")).as("sr"), sum(col("bo")).as("sbo")))
       .drop(AlsBias.BucketCol)
 
     // entity-sized tail: current item vectors + genre assignments join the
@@ -128,12 +133,7 @@ object AlsGenre {
         col("genre_values"), coalesce(col("genre_count"), lit(0))).as("ub"))
       .select(col("id"), col("ub._2").as("features"), col("ub._1").as("bias"))
 
-    val updJ = if (broadcastSelf) broadcast(updated) else updated.hint("shuffle_hash")
-    itemFactors.select(col("id")).join(updJ, Seq("id"), "left")
-      .select(col("id"),
-        coalesce(col("features"),
-          transform(sequence(lit(0), lit(rank - 1)), _ => lit(0.0))).as("features"),
-        coalesce(col("bias"), lit(0.0)).as("bias"))
+    AlsBias.align(itemFactors, updated, broadcastSelf, rank)
   }
 
   /** Refit the genre features from the movie vectors (intended closed form
@@ -200,25 +200,26 @@ object AlsGenre {
                   p: Params, trace: Trace.Config,
                   init: Option[Model] = None): (Model, Seq[Trace.IterStats]) = {
     val bp = toBiasParams(p)
-    var users = (init match {
+    val (users0, uCount) = AlsBias.checkpointInit(init match {
       case Some(m) => AlsBias.seedFactors(ratings, userCol, bp, 1L, m.userFactors)
       case None => AlsBias.initFactors(ratings, userCol, bp, 1L)
-    }).transform(org.apache.spark.sql.graft.Checkpoints.truncate)
-    var items = (init match {
+    })
+    val (items0, iCount) = AlsBias.checkpointInit(init match {
       case Some(m) => AlsBias.seedFactors(ratings, itemCol, bp, 2L, m.itemFactors)
       case None => AlsBias.initFactors(ratings, itemCol, bp, 2L)
-    }).transform(org.apache.spark.sql.graft.Checkpoints.truncate)
+    })
+    var users = users0; var items = items0
     val rng = new java.util.Random(p.seed)
     val coldGenreF: Map[Int, Array[Double]] =
       (0 until 20).map(g => g -> Array.fill(p.rank)(rng.nextGaussian())).toMap
     var genreF = init.map(_.genreFactors).getOrElse(coldGenreF)
-    // the AlsBias per-side sweep plans, decided the same way (two bounded
-    // 1-row reads; fact copies partitioned + MATERIALIZED here, before
-    // the first timed sweep — the cold-sweep staging fix); the try opens
-    // IMMEDIATELY after the copies exist, so any later failure — conf
-    // setup included — releases them
+    // the AlsBias per-side sweep plans, decided the same way (the entity
+    // counts observed on the init checkpoints; fact copies partitioned +
+    // MATERIALIZED here, before the first timed sweep — the cold-sweep
+    // staging fix); the try opens IMMEDIATELY after the copies exist, so
+    // any later failure — conf setup included — releases them
     val (userPlan, itemPlan, copies) =
-      AlsBias.sweepPlans(ratings, userCol, itemCol, users.count(), items.count(), bp)
+      AlsBias.sweepPlans(ratings, userCol, itemCol, uCount, iCount, bp)
     try {
     AlsBias.withTrainingConfs(ratings.sparkSession, p.aggMemoryBudgetBytes, p.rank) {
     trace.onStart()
@@ -226,25 +227,22 @@ object AlsGenre {
     var iter = 0
     var delta = Double.MaxValue
     while (iter < p.maxIter && delta > p.tol) {
-      val newUsers = AlsBias.halfSweep(userPlan.fact, users, items, userCol, itemCol,
-          ratingCol, bp,
-          broadcastOther = userPlan.broadcastOther,
-          broadcastSelf = userPlan.broadcastSelf,
-          routing = userPlan.routing)
-        .transform(org.apache.spark.sql.graft.Checkpoints.truncate)
-      val newItems = movieSweepWithPrior(itemPlan.fact, items, newUsers, movieGenres,
-          itemCol, userCol, ratingCol, genreF, p,
-          broadcastOther = itemPlan.broadcastOther,
-          broadcastSelf = itemPlan.broadcastSelf,
-          routing = itemPlan.routing)
-        .transform(org.apache.spark.sql.graft.Checkpoints.truncate)
+      // as in AlsBias's loop: each sweep is one checkpoint execution that
+      // also delivers the sweep's max |Δparam|; the superseded factor
+      // checkpoints are released once both successors exist
+      val (newUsers, userDelta) = AlsBias.checkpointSweep(AlsBias.sweepWithDelta(
+        userPlan.fact, users, items, userCol, itemCol, ratingCol, bp,
+        userPlan.broadcastOther, userPlan.broadcastSelf, userPlan.routing))
+      val (newItems, itemDelta) = AlsBias.checkpointSweep(movieSweepWithDelta(
+        itemPlan.fact, items, newUsers, movieGenres, itemCol, userCol, ratingCol,
+        genreF, p, itemPlan.broadcastOther, itemPlan.broadcastSelf, itemPlan.routing))
+      Seq(users, items).foreach(Checkpoints.release)
       val newGenreF = updateGenreFactors(newItems, movieGenres, genreF, p)
       val fDelta = newGenreF.map { case (g, f) =>
         val old = genreF.getOrElse(g, new Array[Double](p.rank))
         f.indices.map(i => math.abs(f(i) - old(i))).max
       }.foldLeft(0.0)(math.max)
-      delta = math.max(math.max(AlsBias.maxDelta(users, newUsers),
-        AlsBias.maxDelta(items, newItems)), fDelta)
+      delta = math.max(math.max(userDelta, itemDelta), fDelta)
       users = newUsers; items = newItems; genreF = newGenreF
       iter += 1
       val (ll, rm) =

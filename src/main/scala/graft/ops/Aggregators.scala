@@ -12,6 +12,8 @@ import org.apache.spark.sql.expressions.Aggregator
   * Buffers are primitive double arrays; merge is elementwise add, so Spark
   * runs these with map-side partial aggregation — the shuffle carries one
   * d(d+1)/2-length buffer per (entity, partition), not one per rating.
+  * The ALS half-sweeps use the fused [[RidgeStats]], one buffer for all
+  * three of their vector statistics.
   */
 object Aggregators {
 
@@ -70,6 +72,40 @@ object Aggregators {
     def finish(b: Array[Double]): Seq[Double] = b.toSeq
     def bufferEncoder: Encoder[Array[Double]] = enc
     def outputEncoder: Encoder[Seq[Double]] = ExpressionEncoder[Seq[Double]]()
+  }
+
+  /** The ridge-regression statistics of one ALS entity in one pass and one
+    * buffer (the batch-of-aggregates idea of LMFAO, SIGMOD 2019): over rows
+    * (r, b_other, v) it accumulates
+    *   [ Σ(r − b_other)·v | Σv | Σvvᵀ upper triangle, row-major ]
+    * — d + d + d(d+1)/2 doubles. Each factor array is decoded once, as a
+    * primitive array; separate [[VectorSum]]s and a [[GramianSum]] would
+    * each decode it into a boxed Seq, after a per-row (r − b_other)·v array
+    * had been built. The products and sums are the same IEEE operations in
+    * the same order as those three aggregators', so the result is
+    * bit-identical to them; callers `slice` the three parts back out. */
+  class RidgeStats(dim: Int)
+      extends Aggregator[(Double, Double, Array[Double]), Array[Double], Array[Double]] {
+    private val len = 2 * dim + dim * (dim + 1) / 2
+    def zero: Array[Double] = new Array[Double](len)
+    def reduce(b: Array[Double], a: (Double, Double, Array[Double])): Array[Double] = {
+      val w = a._1 - a._2; val v = a._3
+      var i = 0
+      while (i < dim) { b(i) += w * v(i); b(dim + i) += v(i); i += 1 }
+      var k = 2 * dim; i = 0
+      while (i < dim) {
+        var j = i
+        while (j < dim) { b(k) += v(i) * v(j); j += 1; k += 1 }
+        i += 1
+      }
+      b
+    }
+    def merge(x: Array[Double], y: Array[Double]): Array[Double] = {
+      var i = 0; while (i < len) { x(i) += y(i); i += 1 }; x
+    }
+    def finish(b: Array[Double]): Array[Double] = b
+    def bufferEncoder: Encoder[Array[Double]] = enc
+    def outputEncoder: Encoder[Array[Double]] = enc
   }
 
   /** Bounded top-k buffer: parallel arrays sorted by (score desc, item asc),

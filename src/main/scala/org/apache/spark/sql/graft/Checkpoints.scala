@@ -47,27 +47,23 @@ object Checkpoints {
     cp.queryExecution.logical match {
       case lr: LogicalRDD =>
         val ss = cp.sparkSession.asInstanceOf[SparkSession]
-        // point lookup (statusStore.rdd is a KV-store get by id) — the
-        // full getRDDStorageInfo listing walks EVERY cached RDD, which a
-        // per-iteration loop over a session with hundreds of cached
-        // frames pays each round. Trust the measurement only when every
-        // partition reports cached: on a cluster, block-status updates
-        // can lag the checkpoint action, and stamping a PARTIAL size
-        // would understate the stat (and could wrongly qualify a large
-        // frame for auto-broadcast downstream); an incomplete read falls
-        // back to the session-default estimate — conservative and still
-        // iteration-independent, which is the property the loop needs.
-        val measured = (try Some(ss.sparkContext.statusStore.rdd(lr.rdd.id))
-          catch { case _: NoSuchElementException => None })
-          .filter(_.numCachedPartitions == lr.rdd.getNumPartitions)
-          .map(i => BigInt(i.memoryUsed + i.diskUsed))
-          .filter(_ > 0)
-        val stats = measured.map(b => Statistics(sizeInBytes = b))
+        // an empty or not (fully) cached checkpoint keeps the
+        // session-default estimate: conservative, and still
+        // iteration-independent, which is the property the loop needs
+        val stats = storedBytes(lr.rdd).filter(_ > 0).map(b => Statistics(sizeInBytes = b))
         Dataset.ofRows(ss, LogicalRDD(lr.output, lr.rdd,
           lr.outputPartitioning, lr.outputOrdering, lr.isStreaming,
           lr.stream)(ss, stats, None))
       case _ => cp
     }
+  }
+
+  /** Frees the checkpoint blocks behind a [[truncate]]d frame now, rather
+    * than when the ContextCleaner collects it. The frame, and every frame
+    * that still reads it, must not be computed again. */
+  def release(df: DataFrame): Unit = df.queryExecution.logical match {
+    case lr: LogicalRDD => lr.rdd.unpersist(blocking = false)
+    case _ =>
   }
 
   /** `df` — a frame computed from the cached (typically locally
@@ -76,20 +72,27 @@ object Checkpoints {
     * otherwise estimates `spark.sql.defaultSizeInBytes` (Long.MaxValue by
     * default), which silently disables auto-broadcast for every caller
     * that joins it. The bytes are an upper bound when `df` projects only
-    * part of `cached`. They are read synchronously from the block manager
-    * master, which every cached block reports to before its task ends; the
-    * status store [[truncate]] reads lags it by up to the UI's live-update
-    * period. When some partition is not cached the session default stays. */
+    * part of `cached`. When some partition is not cached the session
+    * default stays. */
   def fromRdd(df: DataFrame, cached: RDD[_]): DataFrame = {
     val ss = df.sparkSession.asInstanceOf[SparkSession]
-    val master = SparkEnv.get.blockManager.master
-    val sizes = cached.partitions.indices.map { i =>
-      master.getBlockStatus(RDDBlockId(cached.id, i), askStorageEndpoints = false)
-        .values.map(s => s.memSize + s.diskSize).maxOption
-    }
-    val stats = if (sizes.forall(_.isDefined))
-      Some(Statistics(sizeInBytes = BigInt(sizes.flatten.sum))) else None
+    val stats = storedBytes(cached).map(b => Statistics(sizeInBytes = b))
     val qe = df.queryExecution
     Dataset.ofRows(ss, LogicalRDD(qe.analyzed.output, qe.toRdd)(ss, stats, None))
+  }
+
+  /** The stored bytes (memory + disk) of every partition of the cached
+    * `rdd`, or None when some partition is not cached. Read synchronously
+    * from the block manager master, which every cached block reports to
+    * before its task ends — unlike the app status store, which its
+    * listener updates asynchronously and at most once per live-update
+    * period, so it can still read a just-checkpointed RDD as uncached. */
+  private def storedBytes(rdd: RDD[_]): Option[BigInt] = {
+    val master = SparkEnv.get.blockManager.master
+    val sizes = rdd.partitions.indices.map { i =>
+      master.getBlockStatus(RDDBlockId(rdd.id, i), askStorageEndpoints = false)
+        .values.map(s => s.memSize + s.diskSize).maxOption
+    }
+    if (sizes.forall(_.isDefined)) Some(BigInt(sizes.flatten.sum)) else None
   }
 }

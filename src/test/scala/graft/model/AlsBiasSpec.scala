@@ -124,6 +124,113 @@ class AlsBiasSpec extends SparkTestBase {
     assert(spark.conf.get("spark.sql.requireAllClusterKeysForCoPartition") == "true")
   }
 
+  /** `java.util.Arrays.hashCode` over the IEEE bit patterns of the
+    * id-ordered (features, bias) rows — equal hashes mean bit-identical
+    * factors. */
+  private def factorDigest(df: org.apache.spark.sql.DataFrame): Int =
+    java.util.Arrays.hashCode(df.as[(Int, Seq[Double], Double)].collect().sortBy(_._1)
+      .flatMap(t => t._2 :+ t._3).map(java.lang.Double.doubleToLongBits))
+
+  test("golden pin: every sweep plan's factors and deltas are bit-identical") {
+    // the corpus of the sweep-modes test; one training per sweepPlans
+    // branch, the Q1 quirk and the genre loop. Any change to the kernel's
+    // arithmetic, the summation order or the delta moves a digest
+    val ratings = sweepModesCorpus
+    val base = AlsBias.Params(rank = 3, lambda = 0.5, tau = 0.01, alpha = 0.01,
+      maxIter = 4, tol = 0.0)
+    val cfg = Trace.Config(computeMetrics = false)
+    // the delta sequence as IEEE bit patterns: exact, not within 1e-9
+    def pin(p: AlsBias.Params): (Int, Int, Seq[Long]) = {
+      val (m, hist) = AlsBias.trainTraced(ratings, "u", "i", "r", p, cfg)
+      (factorDigest(m.userFactors), factorDigest(m.itemFactors),
+        hist.map(h => java.lang.Double.doubleToLongBits(h.maxDelta)))
+    }
+    val bcastDeltas = Seq(4621891313016767003L, 4615975651189276949L,
+      4606227017445305896L, 4603586328880780638L)
+    assert(pin(base) == ((-445320672, 453508780, bcastDeltas)))
+    assert(pin(base.copy(broadcastEntities = 20)) == ((-1568173821, -1883636429,
+      Seq(4621891313016767003L, 4615975651189276948L, 4606227017445305892L,
+        4603586328880780640L))))
+    assert(pin(base.copy(broadcastEntities = 5)) == ((-445320672, 453508780, bcastDeltas)))
+    assert(pin(base.copy(strictQ1Bias = true)) == ((1211398413, 47347215,
+      Seq(4621891313016767003L, 4616092784837685071L, 4608081278684815964L,
+        4605544519981301936L))))
+    val movieGenres = (0 until 12)
+      .map(i => (i, Seq(i % 3, 3 + i % 2), 2)).toDF("id", "genre_values", "genre_count")
+    val (gm, ghist) = AlsGenre.trainTraced(ratings, movieGenres, "u", "i", "r",
+      AlsGenre.Params(rank = 3, lambda = 0.5, maxIter = 4, tol = 0.0), cfg)
+    assert((factorDigest(gm.userFactors), factorDigest(gm.itemFactors),
+      ghist.map(h => java.lang.Double.doubleToLongBits(h.maxDelta))) ==
+      ((-746252716, -1974924714, Seq(4621891313016767003L, 4616021930506389553L,
+        4606496630587792672L, 4604441778503789394L))))
+  }
+
+  private def sweepModesCorpus = {
+    val rng = new scala.util.Random(11)
+    (for {
+      u <- 0 until 30; i <- 0 until 12 if rng.nextDouble() < 0.6
+    } yield (u, i, (rng.nextInt(9) + 1) * 0.5)).toDF("u", "i", "r")
+  }
+
+  test("the delta observed on a sweep's checkpoint equals maxDelta of the pair") {
+    val ratings = sweepModesCorpus
+    val p = AlsBias.Params(rank = 3, lambda = 0.5)
+    // user 99 has no ratings: the alignment join's zero fill counts too
+    val users = AlsBias.initFactors(ratings, "u", p, 1L)
+      .union(Seq((99, Seq(0.5, -2.0, 1.0), 0.25)).toDF("id", "features", "bias"))
+    val items = AlsBias.initFactors(ratings, "i", p, 2L)
+    for (bcast <- Seq(true, false)) {
+      val (newUsers, d) = AlsBias.checkpointSweep(AlsBias.sweepWithDelta(ratings, users,
+        items, "u", "i", "r", p, broadcastOther = bcast, broadcastSelf = bcast,
+        routing = None))
+      assert(d == AlsBias.maxDelta(users, newUsers))
+      assert(d >= 2.0) // user 99's feature moved from -2.0 to 0
+      org.apache.spark.sql.graft.Checkpoints.release(newUsers)
+    }
+  }
+
+  test("a training runs 4 + 2·sweeps SQL executions on the both-small plan") {
+    // the init checkpoints and the two fact layouts, then one checkpoint
+    // per half-sweep: no convergence-delta joins, no count() barriers
+    val p = AlsBias.Params(rank = 3, lambda = 0.5, maxIter = 2, tol = 0.0)
+    val ratings = sweepModesCorpus
+    val (_, execs) = org.apache.spark.sql.graft.JobCount.sqlExecutions(spark) {
+      AlsBias.trainTraced(ratings, "u", "i", "r", p, Trace.Config(computeMetrics = false))
+    }
+    assert(execs <= 8, s"$execs SQL executions")
+  }
+
+  test("cache lifetime: only the two returned checkpoints stay cached") {
+    val sc = spark.sparkContext
+    val ratings = sweepModesCorpus
+    def rddId(df: org.apache.spark.sql.DataFrame) = df.queryExecution.logical match {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+    }
+    def check(train: => (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)) = {
+      val before = sc.getPersistentRDDs.keySet
+      val (u, i) = train
+      val added = sc.getPersistentRDDs.keySet.toSet -- before
+      assert(added == Set(rddId(u), rddId(i)), s"persisted RDDs left behind: $added")
+      assert(u.count() == 30 && i.count() == 12)
+      Seq(u, i).foreach(org.apache.spark.sql.graft.Checkpoints.release)
+    }
+    val cfg = Trace.Config(computeMetrics = false)
+    for (bcast <- Seq(1000000L, 20L)) {
+      check {
+        val m = AlsBias.trainTraced(ratings, "u", "i", "r", AlsBias.Params(rank = 3,
+          maxIter = 3, tol = 0.0, broadcastEntities = bcast), cfg)._1
+        (m.userFactors, m.itemFactors)
+      }
+    }
+    val movieGenres = (0 until 12)
+      .map(i => (i, Seq(i % 3, 3 + i % 2), 2)).toDF("id", "genre_values", "genre_count")
+    check {
+      val m = AlsGenre.trainTraced(ratings, movieGenres, "u", "i", "r",
+        AlsGenre.Params(rank = 3, maxIter = 3, tol = 0.0), cfg)._1
+      (m.userFactors, m.itemFactors)
+    }
+  }
+
   test("bucketReps pins bucket j to partition j under Spark's repartition hash") {
     for (n <- Seq(3, 32, 100)) {
       val reps = AlsBias.bucketReps(n)
