@@ -67,6 +67,7 @@ object Bench {
       .config("spark.sql.adaptive.coalescePartitions.minPartitionNum",
         shufflePartitions)
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.warehouse.dir", Verify.runWarehouse())
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // steady-state measurement: first execution of each query is dominated

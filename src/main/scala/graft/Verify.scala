@@ -1,6 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -11,6 +11,7 @@ object Verify {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.warehouse.dir", runWarehouse())
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -42,6 +43,24 @@ object Verify {
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+  }
+
+  /** A warehouse directory of this process alone,
+    * `spark-warehouse/run-<pid>-<nanoTime>`, deleted when the JVM exits.
+    * Runs that share one `spark-warehouse/` drop and rewrite each other's
+    * stores mid-query (q190's transition store read as FILE_NOT_EXIST
+    * under two concurrent runs); a per-run directory keeps them apart. */
+  private[graft] def runWarehouse(): String = {
+    val dir = Paths.get("spark-warehouse",
+      s"run-${ProcessHandle.current().pid()}-${System.nanoTime()}").toAbsolutePath
+    Files.createDirectories(dir)
+    sys.addShutdownHook {
+      val paths = Files.walk(dir)
+      try paths.sorted(java.util.Comparator.reverseOrder[Path]())
+        .forEach(p => Files.deleteIfExists(p))
+      finally paths.close()
+    }
+    dir.toString
   }
 
   /** A quoted JSON string literal: escapes backslash, quote and ALL

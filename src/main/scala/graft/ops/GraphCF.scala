@@ -508,58 +508,69 @@ object GraphCF {
     * arithmetic is exact long sums, so the subtraction is safe — pairs
     * netting to zero drop, matching the one-shot result exactly.
     *
-    * Physical shape: both outer-product terms run as ONE signed co-walk
-    * ([[signedHalfWalk]]) in half space, summed with the s1 < s2 half of
-    * `oldCo` in one (s1, s2) aggregate and mirrored once ([[foldHalf]]).
+    * Physical shape: ONE lazy plan. The log and the delta pass once
+    * through [[taggedEdges]] (each (u, i) row carries its old weight
+    * `wo` and merged weight `wn`); a per-user window keeps the users
+    * with any delta weight, whose `wo > 0` rows are the old side and
+    * `wn` rows the new side of ONE signed co-walk ([[signedHalfWalk]],
+    * which applies the history cap per side) in half space, summed with
+    * the s1 < s2 half of `oldCo` in one (s1, s2) aggregate and mirrored
+    * once ([[foldHalf]]). No persist, no count(), no driver read: the
+    * fold leaves no cache behind.
     *
     * `oldInteractions` is the standing log (scanned once, linearly, to
     * recover the touched users' previous edge vectors; a production
     * deployment keeps the aggregated (u, i, w) edge frame in a keyed
     * store instead and feeds it here — the algebra is identical).
     * `oldCo` must be the [[coCounts]] of that log at the SAME
-    * `maxHistory`. */
+    * `maxHistory`; it stays caller-owned. */
   def foldCoDelta(oldInteractions: DataFrame, delta: DataFrame,
                   userCol: String, itemCol: String, oldCo: DataFrame,
                   maxHistory: Int = Int.MaxValue): DataFrame = {
     require(maxHistory >= 1, "maxHistory must be >= 1")
     require(Seq("s1", "s2", "co").forall(oldCo.columns.contains),
       "oldCo must be a coCounts frame with columns (s1, s2, co)")
-    // UNCAPPED aggregation on both sides: the cap applies to each
-    // touched user's MERGED vector (a delta can evict an old top-C item).
-    // dAgg and oldT each feed two consumers, so both are materialized
-    // (see [[materialized]]) — un-persisted, each re-ran the full log
-    // scan + aggregation (q172 measured 3 log passes; now 1 per frame).
-    // Cache lifetime: the family's caller-owned release (USAGE.md).
-    val oldAgg = prefixKeyed(oldInteractions
-      .select(col(userCol).as("u"), col(itemCol).as("i")), col("u"))
-      .groupBy(col("u"), col("i"))
-      .agg(count(lit(1)).as("w"))
-    val dAgg = materialized(prefixKeyed(delta
-      .select(col(userCol).as("u"), col(itemCol).as("i")), col("u"))
-      .groupBy(col("u"), col("i"))
-      .agg(count(lit(1)).as("w")))
-    val touched = dAgg.select(col("u")).distinct()
-    val oldT = materialized(oldAgg.join(touched, Seq("u"), "left_semi"))
-    // union drops the inputs' partitioning — re-establish hash(u) so the
-    // merge agg runs on one exchange
-    val mergedT = oldT.unionByName(dAgg)
-      .repartition(col("u"))
-      .groupBy(col("u"), col("i")).agg(sum(col("w")).as("w"))
-    foldHalf(oldCo, signedHalfWalk(oldT, mergedT, "u", "i", maxHistory),
+    // UNCAPPED weights on both sides: the cap applies to each touched
+    // user's MERGED vector (a delta can evict an old top-C item)
+    val t = taggedEdges(oldInteractions, delta, userCol, itemCol)
+      .withColumn("__wd", max(col("wd")).over(Window.partitionBy(col("u"))))
+      .filter(col("__wd") > 0L)
+    foldHalf(oldCo, signedHalfWalk(t, "u", "i",
+        when(col("wo") > 0L, col("wo")), col("wn"), maxHistory),
       "foldCoDelta", s"maxHistory=$maxHistory (stale frame or different cap)")
   }
 
-  /** The folds' ONE co-walk over both sides of a delta: old vectors
-    * tagged side −1, new ones +1, each (`key`, side) group cut to its
-    * top-`cap` by (w desc, `s` asc), then one self-join on (`key`, side)
-    * — exchange-free on the cut's window — in half space (s1 < s2), each
-    * pair carrying side·w1·w2 (exact long products; a side with no rows
-    * for a key contributes nothing there). */
-  private def signedHalfWalk(old: DataFrame, nu: DataFrame, key: String,
-                             s: String, cap: Int): DataFrame = {
-    val v = capBy(old.select(col(key), col(s), col("w"), lit(-1L).as("side"))
-      .unionByName(nu.select(col(key), col(s), col("w"), lit(1L).as("side"))),
-      Seq(key, "side"), s, cap)
+  /** The folds' one pass over the log: old rows tagged o = 1 and delta
+    * rows d = 1, unioned, u-keyed ([[prefixKeyed]], so the
+    * `spark.graft.cf.preAggregate` shape applies) and summed per (u, i)
+    * into the old weight `wo`, the delta weight `wd` and the merged
+    * weight `wn` = wo + wd — every uncapped edge weight either fold needs,
+    * on the u partitioning the per-user windows reuse. */
+  private def taggedEdges(old: DataFrame, delta: DataFrame, userCol: String,
+                          itemCol: String): DataFrame = {
+    def rows(df: DataFrame, o: Long) = df.select(col(userCol).as("u"),
+      col(itemCol).as("i"), lit(o).as("o"), lit(1L - o).as("d"))
+    prefixKeyed(rows(old, 1L).unionByName(rows(delta, 0L)), col("u"))
+      .groupBy(col("u"), col("i"))
+      .agg(sum(col("o")).as("wo"), sum(col("d")).as("wd"))
+      .withColumn("wn", col("wo") + col("wd"))
+  }
+
+  /** The folds' ONE co-walk over both sides of a delta, from one pass
+    * over a tagged frame: each row is emitted once per non-null side
+    * weight — `old` as side −1, `nu` as side +1 — each (`key`, side)
+    * group cut to its top-`cap` by (w desc, `s` asc), then one self-join
+    * on (`key`, side) — exchange-free on the cut's window — in half space
+    * (s1 < s2), each pair carrying side·w1·w2 (exact long products; a
+    * side with no rows for a key contributes nothing there). */
+  private def signedHalfWalk(tagged: DataFrame, key: String, s: String,
+                             old: org.apache.spark.sql.Column,
+                             nu: org.apache.spark.sql.Column,
+                             cap: Int): DataFrame = {
+    val v = capBy(tagged.select(col(key), col(s), inline(array(
+        struct(lit(-1L).as("side"), old.as("w")),
+        struct(lit(1L).as("side"), nu.as("w")))))
+      .filter(col("w").isNotNull), Seq(key, "side"), s, cap)
     v.select(col(key), col("side"), col(s).as("s1"), col("w").as("w1"))
       .join(v.select(col(key), col("side"), col(s).as("s2"),
         col("w").as("w2")), Seq(key, "side"))
@@ -629,26 +640,36 @@ object GraphCF {
     * transpose subtler than the item-side fold: a delta row (u, x) can
     * evict item j from u's top-H, changing item j's audience even though
     * j never appears in the delta. The touched-item set is therefore
-    * computed EXACTLY — re-cap the touched users' merged histories and
-    * take the items of every (u, i, w) row that differs between the old
-    * and new capped frames (an item with no differing row has a
-    * bit-identical audience vector and nets zero — skipped). Work: one
-    * linear pass over the old log, history-cap windows over only the
-    * touched items' audiences' users, and the touched items' quadratic
-    * leg. Both outer-product terms run as ONE signed co-walk over the
-    * audience-capped old and new touched-item vectors, joined on (i,
-    * side) in half space ([[signedHalfWalk]]), then summed with the
+    * computed EXACTLY, from ONE tagged pass per user: [[taggedEdges]]
+    * gives every (u, i) row its old weight `wo` and merged weight `wn`,
+    * and two row_number windows on the same u partitioning rank each
+    * user's rows by (wo desc, i) and by (wn desc, i). A row's old capped
+    * weight is `o` = wo when wo > 0 and its old rank is ≤ H, its new
+    * capped weight `n` = wn when its new rank is ≤ H (null otherwise —
+    * a row null on both sides is in neither audience; rows with wo = 0
+    * sort last, so they never displace an old row). The touched items
+    * are those of the rows where o and n differ (presence or weight); an
+    * untouched user has wd = 0, so o == n on all its rows,
+    * and an item with no differing row has a bit-identical audience
+    * vector and nets zero — skipped. On the touched items the `o` rows
+    * (side −1) and `n` rows (side +1) are exactly the old and new capped
+    * audiences, cut to top-A and walked as ONE signed co-walk joined on
+    * (i, side) in half space ([[signedHalfWalk]]), then summed with the
     * s1 < s2 half of `oldCo` in one (s1, s2) aggregate and mirrored once
-    * ([[foldHalf]]). Result is BIT-IDENTICAL to [[userCoCounts]] over the
-    * unioned log (the declared query's oracle replays the one-shot build;
-    * GraphCFSpec pins the history-eviction case and a brand-new item
-    * whose old side is empty). Same negative-co corruption tripwire as
-    * [[foldCoDelta]].
+    * ([[foldHalf]]). The whole fold is ONE lazy plan — no persist, no
+    * count(), no driver read, so it leaves no cache behind; the small
+    * touched-item set is a semi-join AQE broadcasts. Result is
+    * BIT-IDENTICAL to [[userCoCounts]] over the unioned log (the declared
+    * query's oracle replays the one-shot build; GraphCFSpec pins the
+    * history-eviction case, a brand-new item whose old side is empty and
+    * a differential over both caps). Same negative-co corruption
+    * tripwire as [[foldCoDelta]].
     *
     * `oldCo` must be the [[userCoCounts]] of `oldInteractions` at the
-    * SAME (maxHistory, maxAudience). A production deployment feeds the
-    * aggregated (u, i, w) edge frame from a keyed store instead of
-    * re-aggregating the raw log — the algebra is identical. */
+    * SAME (maxHistory, maxAudience); it stays caller-owned. A production
+    * deployment feeds the aggregated (u, i, w) edge frame from a keyed
+    * store instead of re-aggregating the raw log — the algebra is
+    * identical. */
   def foldUserCoDelta(oldInteractions: DataFrame, delta: DataFrame,
                       userCol: String, itemCol: String, oldCo: DataFrame,
                       maxHistory: Int = Int.MaxValue,
@@ -657,55 +678,20 @@ object GraphCF {
     require(maxAudience >= 1, "maxAudience must be >= 1")
     require(Seq("s1", "s2", "co").forall(oldCo.columns.contains),
       "oldCo must be a userCoCounts frame with columns (s1, s2, co)")
-    // persisted reuse (round 13): oldAgg feeds THREE legs (touched-user
-    // slice, relevant-user widening, relevant re-cap), dAgg two, the two
-    // capped touched frames two each (the diff + the signed walk), the
-    // touched-item set three — un-persisted, every consumer re-ran the
-    // full log scan + aggregation at action time (q199 measured ~7 log
-    // passes; now 1 per distinct frame). u-partitioned like edgeFrame
-    // and EAGERLY materialized (see [[materialized]]) so every cap
-    // window and u-keyed join below plans exchange-free off the
-    // finalized caches. Cache lifetime: the family's caller-owned
-    // release contract (USAGE.md).
-    val oldAgg = materialized(prefixKeyed(oldInteractions
-      .select(col(userCol).as("u"), col(itemCol).as("i")), col("u"))
-      .groupBy(col("u"), col("i"))
-      .agg(count(lit(1)).as("w")))
-    val dAgg = materialized(prefixKeyed(delta
-      .select(col(userCol).as("u"), col(itemCol).as("i")), col("u"))
-      .groupBy(col("u"), col("i"))
-      .agg(count(lit(1)).as("w")))
-    val touchedU = dAgg.select(col("u")).distinct()
-    // re-cap the touched users' histories on both sides of the delta
-    val oldTU = oldAgg.join(touchedU, Seq("u"), "left_semi")
-    val oldCappedTU = materialized(capEdges(oldTU, maxHistory))
-    val newCappedTU = materialized(capEdges(
-      oldTU.unionByName(dAgg)
-        .repartition(col("u")) // union drops partitioning; re-key for agg + cap
-        .groupBy(col("u"), col("i"))
-        .agg(sum(col("w")).as("w")), maxHistory))
-    // EXACT touched-item set: items of the rows that differ between the
-    // two capped frames (presence or weight) — everything else nets zero
-    val touchedI = materialized(
-      oldCappedTU.select(col("u"), col("i"), col("w").as("__wo"))
-        .join(newCappedTU.select(col("u"), col("i"), col("w").as("__wn")),
-          Seq("u", "i"), "full")
-        .filter(not(col("__wo") <=> col("__wn")))
-        .select(col("i")).distinct())
-    // audiences of touched items include users OUTSIDE the delta; their
-    // history caps need their FULL vectors, so widen to every user with
-    // an old-log edge on a touched item, window over that subset only
-    val relevantU = oldAgg.join(touchedI, Seq("i"), "left_semi")
-      .select(col("u")).distinct()
-      .unionByName(touchedU).distinct()
-    val oldCappedRel = materialized(capEdges(
-      oldAgg.join(relevantU, Seq("u"), "left_semi"), maxHistory))
-    val newCappedRel = oldCappedRel.join(touchedU, Seq("u"), "left_anti")
-      .unionByName(newCappedTU)
+    // a row survives the history cut when its rank by (w desc, i) is ≤ H
+    def kept(w: String) =
+      if (maxHistory == Int.MaxValue) lit(true)
+      else row_number().over(Window.partitionBy(col("u"))
+        .orderBy(col(w).desc, col("i"))) <= maxHistory
+    val capped = taggedEdges(oldInteractions, delta, userCol, itemCol)
+      .select(col("u"), col("i"),
+        when(col("wo") > 0L && kept("wo"), col("wo")).as("o"),
+        when(kept("wn"), col("wn")).as("n"))
+    val touchedI = capped.filter(not(col("o") <=> col("n")))
+      .select(col("i")).distinct()
     foldHalf(oldCo, signedHalfWalk(
-        oldCappedRel.join(touchedI, Seq("i"), "left_semi"),
-        newCappedRel.join(touchedI, Seq("i"), "left_semi"),
-        "i", "u", maxAudience),
+        capped.join(touchedI, Seq("i"), "left_semi"), "i", "u",
+        col("o"), col("n"), maxAudience),
       "foldUserCoDelta", s"maxHistory=$maxHistory, maxAudience=" +
         s"$maxAudience (stale frame or different caps)")
   }

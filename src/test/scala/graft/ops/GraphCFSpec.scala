@@ -303,6 +303,74 @@ class GraphCFSpec extends SparkTestBase {
     spark.catalog.clearCache()
   }
 
+  /** Fold fixture: u1 {a:3, b:2, c:1}, u2 {a, b, d:2}, u3 {b, c, d}
+    * (a three-way weight tie), u4 {a}. */
+  private val foldLog = (Seq.fill(3)((1L, "a")) ++ Seq.fill(2)((1L, "b")) ++
+    Seq((1L, "c"), (2L, "a"), (2L, "b"), (2L, "d"), (2L, "d"),
+      (3L, "b"), (3L, "c"), (3L, "d"), (4L, "a"))).toDF("user", "item")
+
+  /** The deltas the fold differential covers: none at all; one that only
+    * raises u1's top edge (no rank moves at any cap); and one that evicts
+    * at every history boundary — u3 gets e×2 (displacing its last kept
+    * tie) and u2 gets c×3 (taking u2's top slot). */
+  private val foldDeltas = Seq(
+    "empty" -> Seq.empty[(Long, String)].toDF("user", "item"),
+    "raise" -> Seq((1L, "a")).toDF("user", "item"),
+    "evict" -> (Seq.fill(2)((3L, "e")) ++ Seq.fill(3)((2L, "c")))
+      .toDF("user", "item"))
+
+  test("fold differential: both folds == the one-shot rebuild at caps in {1, 2, 3, max}") {
+    val caps = Seq(1, 2, 3, Int.MaxValue)
+    // every cap on each side, equal and at the two crossed extremes: six
+    // (H, A) pairs, not the 16-pair product, to keep the suite's time down
+    val pairs = caps.zip(caps) ++ Seq((1, Int.MaxValue), (Int.MaxValue, 1))
+    for ((name, delta) <- foldDeltas) {
+      val merged = foldLog.unionByName(delta)
+      for (h <- caps) {
+        val oldCo = GraphCF.coCounts(foldLog, "user", "item", maxHistory = h)
+        val item = GraphCF.foldCoDelta(foldLog, delta, "user", "item", oldCo,
+          maxHistory = h).as[(String, String, Long)].collect().toSet
+        assert(item == GraphCF.coCounts(merged, "user", "item", maxHistory = h)
+          .as[(String, String, Long)].collect().toSet, s"item fold: $name H=$h")
+      }
+      for ((h, a) <- pairs) {
+        val oldCo = GraphCF.userCoCounts(foldLog, "user", "item",
+          maxHistory = h, maxAudience = a)
+        val user = GraphCF.foldUserCoDelta(foldLog, delta, "user", "item",
+          oldCo, maxHistory = h, maxAudience = a)
+          .as[(Long, Long, Long)].collect().toSet
+        assert(user == GraphCF.userCoCounts(merged, "user", "item",
+            maxHistory = h, maxAudience = a)
+          .as[(Long, Long, Long)].collect().toSet,
+          s"user fold: $name H=$h A=$a")
+      }
+      spark.catalog.clearCache()
+    }
+  }
+
+  test("folds leave no cache behind and run one SQL execution") {
+    val delta = foldDeltas.last._2
+    spark.catalog.clearCache()
+    // oldCo's own cache (its materialized edge frame) is caller-owned
+    val oldCo = GraphCF.coCounts(foldLog, "user", "item", maxHistory = 2)
+    val oldUCo = GraphCF.userCoCounts(foldLog, "user", "item",
+      maxHistory = 2, maxAudience = 2)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val (_, itemExecs) = org.apache.spark.sql.graft.JobCount.sqlExecutions(spark) {
+      GraphCF.foldCoDelta(foldLog, delta, "user", "item", oldCo,
+        maxHistory = 2).collect()
+    }
+    val (_, userExecs) = org.apache.spark.sql.graft.JobCount.sqlExecutions(spark) {
+      GraphCF.foldUserCoDelta(foldLog, delta, "user", "item", oldUCo,
+        maxHistory = 2, maxAudience = 2).collect()
+    }
+    val added = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(added.isEmpty, s"persisted RDDs added by the folds: $added")
+    assert(itemExecs == 1, s"foldCoDelta SQL executions: $itemExecs")
+    assert(userExecs == 1, s"foldUserCoDelta SQL executions: $userExecs")
+    spark.catalog.clearCache()
+  }
+
   test("coCounts / userCoCounts mirror exactly: symmetric, no diagonal, == both-directions aggregate") {
     val log = Seq((1L, "a"), (1L, "a"), (1L, "b"), (1L, "c"),
       (2L, "a"), (2L, "b"), (2L, "b"), (2L, "d"),
