@@ -168,6 +168,7 @@ object MoviePipeline {
     val spark = SparkSession.builder()
       .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
       .config("spark.sql.shuffle.partitions", "8")
+      .config("spark.sql.warehouse.dir", Verify.runWarehouse())
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

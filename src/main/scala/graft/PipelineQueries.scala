@@ -1158,7 +1158,7 @@ object PipelineQueries {
             FROM documents GROUP BY 1 ORDER BY shard"""))
 
   /** Incremental near-dup probe: the batch twin of the streaming LSM path
-    * ([[graft.streaming.EventStreams.sinkIncrementalLshDedup]]) — the 20%
+    * ([[graft.streaming.EventStreams.processIncrementalLshBatch]]) — the 20%
     * "new batch" slice (doc_id % 5 == 0) LSH-probed against the 80%
     * "already ingested" store slice, via the same
     * [[graft.ops.Dedup.lshProbeFrames]] primitive the streaming sink and

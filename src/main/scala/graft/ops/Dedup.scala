@@ -336,7 +336,7 @@ object Dedup {
       maxBucketSize)
 
   /** Fold a streaming delta log (as written by
-    * [[graft.streaming.EventStreams.sinkIncrementalLshDedup]]:
+    * [[graft.streaming.EventStreams.processIncrementalLshBatch]]:
     * `deltaPath/batch=B/` directories of (id, sig, band_key) rows) into the
     * bucketed base store — the LSM compaction step of the incremental
     * dedup pipeline. Cost is O(delta): the delta rows pay one shuffle into

@@ -341,7 +341,10 @@ object GraphCF {
     * contract, transposed to baskets), and the Apriori prune is GLOBAL,
     * so it applies at serve time, never in a batch (an item infrequent
     * in one batch may be frequent overall). Batch-id-keyed overwrite =
-    * replay-idempotent. */
+    * replay-idempotent. A stream meets the basket contract by feeding
+    * basket-commit events (e.g. CDC on order close), or a time-sessionized
+    * feed once the watermark finalizes the basket — never an append-only
+    * raw item-add feed. */
   def writeRuleStatsBatch(batch: DataFrame, basketCol: String,
                           itemCol: String, maxBasket: Int, path: String,
                           batchId: Long): Unit = {
@@ -1226,6 +1229,20 @@ object GraphCF {
                            itemCol: String, maxBasket: Int,
                            path: String, batchId: Long): Unit =
     basketTransitions(batch, userCol, basketCol, timeCol, itemCol, maxBasket)
+      .write.mode("overwrite").parquet(s"$path/batch=$batchId")
+
+  /** Per-batch partial for the standing transition store fed by a STREAM
+    * of (prev, next) pairs ([[graft.streaming.EventStreams.transitionDeltas]]):
+    * the batch's pairs land as aggregated (prev, next, cnt) counts under
+    * `batch=<id>`, the layout [[transitionsFromStore]] folds. Unlike
+    * [[writeTransitionBatch]], micro-batches need not be user-sharded: the
+    * stateful pair generator carries each user's last basket across them.
+    * Its checkpointed state makes a replayed micro-batch re-emit the SAME
+    * pairs, so the batch-id-keyed overwrite is replay-idempotent. */
+  def writeTransitionPairBatch(pairs: DataFrame, path: String,
+                               batchId: Long): Unit =
+    pairs.groupBy(col("prev"), col("next"))
+      .agg(count(lit(1)).as("cnt"))
       .write.mode("overwrite").parquet(s"$path/batch=$batchId")
 
   /** The standing transition frame folded from the per-batch partials

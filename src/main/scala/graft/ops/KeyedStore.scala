@@ -67,7 +67,10 @@ object KeyedStore {
     * payload columns) becomes the new current version of its id. One row
     * per id (checked — a batch is a keyed map, and latest-wins needs
     * (id, batch) to totally order versions). Overwrites `log/batch=B`:
-    * re-running a failed write is idempotent. */
+    * re-running a failed write is idempotent. As a stream's
+    * `foreachBatch` writer (CDC ingestion keyed by micro-batch id), run
+    * [[compactKeyedStore]] at cadence from the maintenance job, never
+    * from the stream: one writer per concern. */
   def writeKeyedBatch(df: DataFrame, idCol: String, path: String,
                       batchId: Long): Unit = {
     val payload = df.columns.filter(_ != idCol).toSeq

@@ -113,7 +113,21 @@ object Layout {
     * overwrite (the default mode) would truncate the whole root. The mode
     * is a PER-WRITER option, not a session-conf mutation: concurrent
     * writes in the same session (two streaming sinks, or one refresh next
-    * to an unrelated static overwrite) never see each other's mode. */
+    * to an unrelated static overwrite) never see each other's mode.
+    *
+    * As a stream's `foreachBatch` writer over FINALIZED append-mode
+    * output, a replayed micro-batch rewrites its partitions with identical
+    * content instead of appending duplicates. That needs every micro-batch
+    * to be PARTITION-COMPLETE: each partition value's rows must all
+    * finalize in the same batch. Tumbling-window output partitioned BY ITS
+    * OWN window start qualifies (a window crosses the watermark once,
+    * emitting all its rows together). Session windows do NOT qualify under
+    * a coarser partition key (e.g. session date): two sessions sharing
+    * that key finalize in different batches, and whichever emits later
+    * would overwrite the other's directory. An append-only raw feed does
+    * not qualify either. When in doubt, partition by exactly the
+    * window-start column. No pre-write emptiness probe is needed: an empty
+    * dynamic overwrite touches no partitions. */
   def overwritePartitions(df: DataFrame, path: String, partCols: Seq[String]): Unit = {
     require(partCols.nonEmpty, "partCols must be non-empty")
     df.write.mode("overwrite")
@@ -159,6 +173,26 @@ object Layout {
       .write.mode("overwrite").partitionBy("shard").parquet(path)
     shardManifest(df, idCol, weightCol, nShards)
   }
+
+  /** Streaming twin of [[exportTrainingShards]]: one micro-batch of an
+    * append-only document feed lands as `path/batch=B/shard=K/`, and its
+    * [[shardManifest]] as `manifestPath/batch=B/`. Both are batch-id-keyed
+    * overwrites, so a replayed micro-batch rewrites its own directories.
+    * The shard id is the same [[TextOps.shardAssign]] draw as the batch
+    * exporter, so a doc lands in the same shard whether it arrived by
+    * backfill or by stream; a trainer reads one shard across all batches
+    * via partition pruning on `shard` (both are partition columns under
+    * discovery). The corpus manifest at any point is
+    * [[mergedShardManifest]] over `manifestPath` — a fold of batches ×
+    * nShards rows, never a corpus rescan. Batch-granular small files are
+    * the append trade; [[compact]] per shard directory is the standing
+    * fix. */
+  def writeTrainingShardBatch(docs: DataFrame, idCol: String,
+                              weightCol: Column, nShards: Int, path: String,
+                              manifestPath: String, batchId: Long): Unit =
+    exportTrainingShards(docs, idCol, weightCol, nShards, s"$path/batch=$batchId")
+      .coalesce(1)
+      .write.mode("overwrite").parquet(s"$manifestPath/batch=$batchId")
 
   /** Fold per-batch shard manifests (parquet under `manifestPath`, one
     * directory per micro-batch) into the corpus manifest. The manifest is

@@ -225,8 +225,4 @@ object Projection {
     }
     df.select(df.columns.map(col).toSeq ++ cols: _*).drop(vecCol)
   }
-
-  /** Fit + project to 2-D in one call — the q114 shape: (…other cols, x, y). */
-  def pcaProject2d(df: DataFrame, vecCol: String, dim: Int): DataFrame =
-    projectPca(df, vecCol, fitPca(df, vecCol, dim, 2), Seq("x", "y"))
 }

@@ -204,12 +204,6 @@ object Stores {
       throw new IllegalStateException(
         s"resolve: alias '$alias' has no published version"))
 
-  /** Amortized rewrite: materialize `table` minus its tombstones into
-    * `newTable` with the same cell bucketing (all engine stores bucket and
-    * sort by `cell`), then drop the old table and its tombstone set. One
-    * bucketed write of the surviving rows — the bucket-local sort is the
-    * only per-partition work; no shuffle beyond the bucketing exchange.
-    * Consumers repoint to `newTable` (version-swap, not in-place). */
   /** Align a frame to its bucketed-write layout BEFORE the write:
     * hash-partition into exactly `numBuckets` partitions on the bucket
     * column. Spark's bucket id is pmod(murmur3(col), numBuckets) — the
@@ -228,6 +222,12 @@ object Stores {
                     bucketCol: String): DataFrame =
     df.repartition(numBuckets, col(bucketCol))
 
+  /** Amortized rewrite: materialize `table` minus its tombstones into
+    * `newTable` with the same cell bucketing (all engine stores bucket and
+    * sort by `cell`), then drop the old table and its tombstone set. One
+    * bucketed write of the surviving rows — the bucket-local sort is the
+    * only per-partition work; no shuffle beyond the bucketing exchange.
+    * Consumers repoint to `newTable` (version-swap, not in-place). */
   def compactInto(spark: SparkSession, table: String, newTable: String,
                   numBuckets: Int, bucketCol: String = "cell",
                   publishAlias: Option[String] = None): Unit = {

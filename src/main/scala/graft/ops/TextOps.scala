@@ -43,9 +43,6 @@ object TextOps {
   def nonAlnumCount(text: Column): Column =
     size(regexp_extract_all(text, lit("[^A-Za-z0-9\\s]"), lit(0)))
 
-  def upperCount(text: Column): Column =
-    size(regexp_extract_all(text, lit("[A-Z]"), lit(0)))
-
   /** Within-document repetition ratio over word n-grams — the
     * duplicate-content quality signal large-scale corpus filters cut on
     * (boilerplate/template pages repeat their own n-grams):

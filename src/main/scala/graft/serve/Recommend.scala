@@ -134,7 +134,11 @@ object Recommend {
     * RecommendSpec) — a serve touches ~nProbe/nCells of the catalog bytes
     * instead of cross-scoring users × catalog. Approximate by nature:
     * recall@k vs the exact cross-score is spec-bound, and grows with
-    * `nProbe` (= exact at nProbe = nCells). */
+    * `nProbe` (= exact at nProbe = nCells). A stream of refreshed user
+    * factors is served per micro-batch the same way, landing each batch's
+    * result with a batch-id-keyed overwrite; a micro-batch of U users
+    * costs O(U × probed cells), independent of the user universe, and the
+    * store stays read-only to the stream. */
   def recommendFromStore(spark: org.apache.spark.sql.SparkSession, table: String,
                          userFactors: DataFrame,
                          centroids: Seq[(Long, Seq[Double])], nProbe: Int,

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.storage.StorageLevel
 
 import graft.ops.{Dedup, TextOps}
@@ -13,7 +12,7 @@ import graft.ops.{Dedup, TextOps}
   * micro-batch pays work proportional to ITS OWN size plus bounded probes
   * of persistent stores, and the corpus already curated is never re-read
   * or re-written. This is the production shape at 100 TB: the one-shot
-  * batch pipeline curates the backfill, this sink curates everything that
+  * batch pipeline curates the backfill, this stream curates everything that
   * arrives after.
   *
   * Per micro-batch, in order (first dropping stage claims the doc — the
@@ -46,14 +45,14 @@ import graft.ops.{Dedup, TextOps}
   * connected-component-representative rule needs the whole graph at once.
   * Near-dup "seen" = docs that reached stage 3 (passed gates + exact),
   * whether or not stage 3 then dropped them — the CCNet convention, and
-  * the same rule [[EventStreams.sinkIncrementalLshDedup]] applies.
+  * the same rule [[EventStreams.processIncrementalLshBatch]] applies.
   *
   * Everything written is per-batch directories written with OVERWRITE, and
   * every store read filters `batch < batchId`, so a failure-replayed
   * micro-batch (always the latest) recomputes from exactly the state its
   * first attempt saw and rewrites byte-identical content — exactly-once
-  * output from at-least-once execution, the
-  * [[EventStreams.sinkPartitionedUpsert]] idempotence argument. */
+  * output from at-least-once execution (the replay rule stated on
+  * [[EventStreams]]). */
 object CurateStream {
 
   final case class Config(
@@ -94,8 +93,9 @@ object CurateStream {
   /** Curate ONE batch against the stores' state from batches < `batchId`,
     * label every input doc with its `drop_stage`, and advance the stores.
     * Deterministic given prior-batch store state — a replay rewrites
-    * identical content. Callable directly on a batch frame (how the spec
-    * drives it); [[sink]] wires it into foreachBatch. */
+    * identical content. Callable directly on a batch frame, or as a
+    * stream's writer: `docs.writeStream.foreachBatch { (b: DataFrame,
+    * id: Long) => processBatch(b, id, …) }`. */
   def processBatch(batch: DataFrame, batchId: Long, idCol: String,
                    textCol: String, bench: DataFrame, cfg: Config,
                    stores: Stores): Unit = {
@@ -220,14 +220,4 @@ object CurateStream {
     labeled.groupBy(coalesce(col("drop_stage"), lit("kept")).as("stage"))
       .agg(count(lit(1)).as("n_docs"))
       .orderBy(col("stage"))
-
-  /** Wire [[processBatch]] into an append-mode foreachBatch sink over a
-    * streaming document frame. */
-  def sink(docs: DataFrame, idCol: String, textCol: String, bench: DataFrame,
-           cfg: Config, stores: Stores): DataStreamWriter[Row] =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, idCol, textCol, bench, cfg, stores)
-      }
 }

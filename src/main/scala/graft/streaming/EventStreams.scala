@@ -13,6 +13,30 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * Scale: watermark + windowed aggregation is incremental state in the state
   * store keyed by (window, type) — no unbounded growth; sessionization keeps
   * one small state object per user with an event-time timeout.
+  *
+  * Sinks. Every standing store has a batch writer of the form
+  * `(batch, …, batchId) => Unit`, and a stream lands in it through Spark's
+  * own `foreachBatch`, e.g.
+  * {{{
+  * interactions.writeStream.foreachBatch { (b: DataFrame, id: Long) =>
+  *   GraphCF.writeEdgeBatch(b, "user", "item", path, id) }
+  * }}}
+  * A writer that takes a `SparkSession` gets the batch's own,
+  * `b.sparkSession`: the stream runs each micro-batch in a clone of the
+  * caller's session, and a table store appended through one session can
+  * read back stale through the other (given the caller's session,
+  * `Dedup.appendDigests` left the caller counting 2 of 4 digests).
+  * Micro-batch delivery is at-least-once: after a failure the latest batch
+  * is delivered again under the same id. The stream is exactly-once when
+  * its writer either OVERWRITES a directory keyed by `batchId` (the replay
+  * rewrites identical content — the writer reads only the batch and the
+  * state of earlier batches) or is idempotent BY DERIVATION, as
+  * [[graft.ops.Dedup.appendDigests]] is (the replay finds its own rows
+  * already in the store and appends nothing). A bucketed `append` (e.g.
+  * [[graft.ops.Similarity.appendToIvfStore]]) is neither: under replay it
+  * duplicates rows. Stateful operators upstream of a writer keep the rule,
+  * since the checkpointed state store makes a replayed batch re-emit the
+  * same rows. `BatchReplaySpec` checks the rule writer by writer.
   */
 object EventStreams {
 
@@ -417,220 +441,13 @@ object EventStreams {
         })
   }
 
-  /** Exactly-once partitioned parquet sink for FINALIZED append-mode
-    * output: each micro-batch's rows land via dynamic partition overwrite
-    * ([[graft.ops.Layout.overwritePartitions]]), so a REPLAYED batch
-    * (failure/restart re-delivery) rewrites its partitions with identical
-    * content instead of appending duplicates — idempotence from the
-    * layout, no transaction log needed.
-    *
-    * The partition columns must make every micro-batch PARTITION-COMPLETE:
-    * each partition value's rows must all finalize in the same batch.
-    * Tumbling-window output partitioned BY ITS OWN window start qualifies
-    * (a window crosses the watermark once, emitting all its rows
-    * together). Session windows do NOT qualify under a coarser partition
-    * key (e.g. session date): two sessions sharing that key finalize in
-    * different batches — whichever emits later would overwrite the
-    * other's directory. An append-only raw feed does not qualify either.
-    * When in doubt, partition by exactly the window-start column.
-    *
-    * Each batch runs the incremental plan ONCE (no pre-write emptiness
-    * probe — foreachBatch recomputes its frame per action, and an empty
-    * dynamic overwrite touches no partitions anyway). Caller starts the
-    * returned writer. */
-  def sinkPartitionedUpsert(finalized: DataFrame, path: String,
-                            partCols: Seq[String]): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    finalized.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.ops.Layout.overwritePartitions(batch, path, partCols)
-      }
-
-  /** Streaming training-shard export: an append-only document feed lands
-    * as `path/batch=B/shard=K/` with a per-batch manifest under
-    * `manifestPath/batch=B/` — the streaming twin of
-    * [[graft.ops.Layout.exportTrainingShards]].
-    *
-    * Exactly-once by OVERWRITE-per-batch-directory: a replayed micro-batch
-    * (failure between write and commit) rewrites its own `batch=B`
-    * directories instead of double-appending — the foreachBatch
-    * idempotence recipe, applied to both the data and its manifest. The
-    * shard id is the same replayable [[graft.ops.TextOps.shardAssign]]
-    * draw as the batch exporter, so a doc lands in the same shard whether
-    * it arrived by backfill or by stream; a trainer reads one shard across
-    * all batches via partition pruning on `shard` (both are partition
-    * columns under discovery). The corpus manifest at any point is
-    * [[graft.ops.Layout.mergedShardManifest]] over `manifestPath` — a fold
-    * of batches × nShards rows, never a corpus rescan. Batch-granular
-    * small files are the append trade; [[graft.ops.Layout.compact]] per
-    * shard directory is the standing fix. Caller starts the writer. */
-  def sinkTrainingShards(docs: DataFrame, idCol: String,
-                         weightCol: org.apache.spark.sql.Column, nShards: Int,
-                         path: String, manifestPath: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import graft.ops.{Layout, TextOps}
-        val sharded = batch.withColumn("shard",
-          TextOps.shardAssign(col(idCol), nShards))
-        sharded.repartition(nShards, col("shard"))
-          .sortWithinPartitions(col("shard"), col(idCol))
-          .write.mode("overwrite").partitionBy("shard")
-          .parquet(s"$path/batch=$batchId")
-        Layout.shardManifest(batch, idCol, weightCol, nShards)
-          .coalesce(1)
-          .write.mode("overwrite").parquet(s"$manifestPath/batch=$batchId")
-      }
-
-  /** Streaming ANN serving: a feed of refreshed user factor rows
-    * (`id`, `features` — e.g. the fold-in output for users whose histories
-    * just changed) is served per micro-batch against the STANDING bucketed
-    * catalog store ([[graft.serve.Recommend.writeCatalogStore]] /
-    * `appendToCatalogStore`), landing top-k recommendations at
-    * `outPath/batch=B`. The serve-side economics are the batch path's:
-    * each micro-batch's probe reads ~nProbe/nCells of the catalog bytes
-    * (bucket-pruned IN-list scan) and the TopK tail is bounded — a
-    * micro-batch of U users costs O(U × probed-cells), independent of the
-    * user universe. Overwrite-per-batch-directory = the foreachBatch
-    * replay-idempotence recipe shared by every sink here; the store itself
-    * is read-only to this sink (refreshes are the owner's offline
-    * append/rewrite). Centroids must be the store's codebook, same as any
-    * probe. */
-  def sinkRecommendFromStore(userFactors: DataFrame, table: String,
-                             centroids: Seq[(Long, Seq[Double])],
-                             nProbe: Int, k: Int, outPath: String,
-                             biasDamping: Double = 0.05): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    userFactors.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.serve.Recommend.recommendFromStore(batch.sparkSession, table,
-            batch, centroids, nProbe, k, biasDamping)
-          .write.mode("overwrite").parquet(s"$outPath/batch=$batchId")
-      }
-
-  /** Streaming takedown intake: consume a stream of deleted ids (a
-    * compliance/takedown feed) into per-batch tombstone files against a
-    * standing store ([[graft.ops.Stores.addTombstones]]) — every store
-    * reader (ANN probes, catalog serving, LSH near-dup probes) excludes
-    * the ids from the NEXT micro-batch on, with the store itself untouched
-    * (deletion is O(deleted ids) per batch). The per-batch tombstone
-    * directory is keyed by micro-batch id, so a failure-replayed batch
-    * overwrites its own directory with identical content — the same
-    * replay-idempotence recipe as every sink here. Compaction
-    * ([[graft.ops.Stores.compactInto]]) stays an offline owner op. */
-  def sinkTombstones(deletedIds: DataFrame, idCol: String,
-                     table: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    deletedIds.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ops.Stores.addTombstones(batch, idCol, table, batchId)
-      }
-
-  /** Streaming CDC ingestion into a [[graft.ops.KeyedStore]]: each
-    * micro-batch of changed rows becomes one upsert batch keyed by the
-    * micro-batch id — a REPLAYED micro-batch (failure/restart
-    * re-delivery) overwrites `log/batch=B` with identical content, so the
-    * store is exactly-once by the same overwrite idempotence as every
-    * sink here. Rows must be one-per-id within a micro-batch (the
-    * writeKeyedBatch contract — enforced loudly there); readers get
-    * [[graft.ops.KeyedStore.readLatest]] / snapshot / SCD2 views of the
-    * live stream; run [[graft.ops.KeyedStore.compactKeyedStore]] at
-    * cadence from the maintenance job, NOT from the stream (single-writer
-    * per concern). */
-  def sinkKeyedUpserts(changes: DataFrame, idCol: String,
-                       path: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    changes.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ops.KeyedStore.writeKeyedBatch(batch, idCol, path, batchId)
-      }
-
-  /** Streaming leg of the mergeable PCA fit
-    * ([[graft.ops.Projection.writeFitBatch]]): each micro-batch of
-    * vectors lands its 1-row moment summary keyed by batch id, and the
-    * corpus covariance/PCA folds from the store with no rescan
-    * ([[graft.ops.Projection.fitPcaFromStore]]). Batch-id-keyed
-    * overwrite = replay-idempotent, the recipe of every sink here. */
-  def sinkFitMoments(vectors: DataFrame, vecCol: String, dim: Int,
-                     path: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    vectors.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ops.Projection.writeFitBatch(batch, vecCol, dim, path, batchId)
-      }
-
-  /** Streaming leg of the standing digest store
-    * ([[graft.ops.Dedup.appendDigests]]): each micro-batch of new
-    * documents folds its NOVEL digests into the store, so the next batch
-    * (and every batch-mode probe) dedups against all history. No marker
-    * protocol: the append is replay-idempotent BY DERIVATION — a
-    * failure-replayed batch finds its own hashes already in the store and
-    * appends nothing. */
-  def sinkDigests(docs: DataFrame, idCol: String, textCol: String,
-                  table: String,
-                  numBuckets: Int = 32): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.ops.Dedup.appendDigests(batch.sparkSession, table, batch,
-          idCol, textCol, numBuckets)
-      }
-
-  /** Streaming leg of the standing interaction-edge store
-    * ([[graft.ops.GraphCF.writeEdgeBatch]]): each micro-batch of raw
-    * interactions lands its aggregated (u, i, w) partial keyed by batch
-    * id. Edge counts are additive across batches, so the standing capped
-    * edge frame and its item-item co-counts fold from the store with no
-    * rescan ([[graft.ops.GraphCF.edgesFromStore]] /
-    * [[graft.ops.GraphCF.coFromEdgeStore]] — bit-equal to the one-shot
-    * build; [[graft.ops.GraphCF.foldCoDelta]] serves incremental co
-    * refreshes between folds off the same frames). Batch-id-keyed
-    * overwrite = replay-idempotent, the recipe of every sink here. */
-  def sinkEdgeBatches(interactions: DataFrame, userCol: String,
-                      itemCol: String,
-                      path: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    interactions.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ops.GraphCF.writeEdgeBatch(batch, userCol, itemCol, path, batchId)
-      }
-
-  /** Streaming leg of the standing ASSOCIATION-RULE statistics store
-    * ([[graft.ops.GraphCF.writeRuleStatsBatch]]): each micro-batch of
-    * (basket, item) interactions lands its capped item supports,
-    * UNPRUNED pair counts and basket count keyed by batch id; all three
-    * are sums over disjoint baskets, so
-    * [[graft.ops.GraphCF.liftRulesFromStore]] serves bit-equal to the
-    * one-shot [[graft.ops.GraphCF.liftRules]] over the concatenated
-    * feed, with the Apriori prune applied GLOBALLY at serve time (an
-    * item infrequent in one micro-batch may be frequent overall — the
-    * batch writer's contract). Batch-id-keyed overwrite =
-    * replay-idempotent, the recipe of every sink here.
-    *
-    * Basket-atomic contract (the transition store's user-shard
-    * contract, transposed to baskets): a micro-batch must not SPLIT a
-    * basket — supports and pair counts are within-basket statistics, so
-    * a basket straddling two micro-batches would be counted as two
-    * baskets (missing its cross-batch pairs). Feed basket-commit events
-    * (e.g. CDC on order close), not raw item-add events; a
-    * time-sessionized feed qualifies once the watermark finalizes the
-    * basket, an append-only raw item feed does not. */
-  def sinkRuleStatsBatches(interactions: DataFrame, basketCol: String,
-                           itemCol: String, path: String,
-                           maxBasket: Int = Int.MaxValue): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    interactions.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ops.GraphCF.writeRuleStatsBatch(batch, basketCol, itemCol,
-          maxBasket, path, batchId)
-      }
-
   final case class BasketTState(basketId: Long, tsMicros: Long,
                                 items: Seq[Long])
   final case class TransitionPair(prev: Long, next: Long)
 
-  /** Streaming leg of the Markov transition store, part 1 — the STATEFUL
-    * pair generator: per user, keep the LAST capped basket in state and,
+  /** Streaming leg of the Markov transition store — the STATEFUL pair
+    * generator whose micro-batches land through
+    * [[graft.ops.GraphCF.writeTransitionPairBatch]]: per user, keep the LAST capped basket in state and,
     * as each new basket arrives, emit its (prev item, next item) cross
     * pairs against the stored one. This is what incremental maintenance
     * of [[graft.ops.GraphCF.basketTransitions]] looks like on a stream —
@@ -712,146 +529,14 @@ object EventStreams {
         })
   }
 
-  /** Streaming leg of the Markov transition store, part 2 — the SINK:
-    * each micro-batch's [[transitionDeltas]] pairs land as an aggregated
-    * (prev, next, cnt) partial keyed by batch id, the layout
-    * [[graft.ops.GraphCF.transitionsFromStore]] folds and
-    * [[graft.ops.GraphCF.markovRecsFromStore]] serves from. Pair counts
-    * are additive across batches and the checkpointed state store makes
-    * a replayed micro-batch re-emit the SAME pairs, so batch-id-keyed
-    * overwrite = replay-idempotent — the recipe of every sink here. */
-  def sinkTransitionDeltas(pairs: Dataset[TransitionPair],
-                           path: String): org.apache.spark.sql.streaming.DataStreamWriter[TransitionPair] =
-    pairs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: Dataset[TransitionPair], batchId: Long) =>
-        batch.groupBy(col("prev"), col("next"))
-          .agg(count(lit(1)).as("cnt"))
-          .write.mode("overwrite").parquet(s"$path/batch=$batchId")
-      }
-
-  /** Streaming leg of the standing conversion-counter store
-    * ([[graft.stats.AbDecision.writeUnitCountBatch]]): each micro-batch
-    * of events lands its per-unit success-count partial (zero-success
-    * ACTIVE units keep their rows — the experiment readout must see
-    * every unit), and the A/B decision folds from the store at any
-    * moment with no raw-log replay
-    * ([[graft.stats.AbDecision.unitCounts]] →
-    * [[graft.stats.AbDecision.decideProportions]] — bit-equal to the
-    * one-shot count, long sums being order-free; q182's oracle is that
-    * proof). Batch-id-keyed overwrite = replay-idempotent, the recipe
-    * of every sink here. */
-  def sinkUnitCounts(events: DataFrame, unitCol: org.apache.spark.sql.Column,
-                     successEvent: org.apache.spark.sql.Column,
-                     path: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    events.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.stats.AbDecision.writeUnitCountBatch(batch, unitCol,
-          successEvent, path, batchId)
-      }
-
-  /** Streaming leg of the mergeable k-means moment store
-    * ([[graft.ops.Cluster.writeMomentBatch]]): each micro-batch of
-    * vectors lands its per-cell (n, Σq) moments against the fixed
-    * codebook, and the refreshed centroids fold from the store at
-    * O(k · batches) driver cost with no rescan
-    * ([[graft.ops.Cluster.centroidsFromMoments]] — bit-equal to the
-    * one-shot sweep, long sums being order-free). Batch-id-keyed
-    * overwrite = replay-idempotent, the recipe of every sink here. */
-  def sinkKmeansMoments(vectors: DataFrame, idCol: String, vecCol: String,
-                        centroids: Seq[(Long, Seq[Double])], scale: Long,
-                        path: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    vectors.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ops.Cluster.writeMomentBatch(batch, idCol, vecCol,
-          centroids, scale, path, batchId)
-      }
-
-  /** Streaming leg of the IVF vector index: each micro-batch of new
-    * vectors lands as a cell-assigned delta batch
-    * ([[graft.ops.Similarity.writeIvfDeltaBatch]] — per-batch overwrite,
-    * replay-idempotent, unlike the bucketed append which would duplicate
-    * candidates under replay). Probes union the log in
-    * ([[graft.ops.Similarity.ivfSearchFromStoreWithDeltas]]);
-    * [[graft.ops.Similarity.compactIvfDelta]] is the exactly-once fold. */
-  def sinkIvfDelta(vectors: DataFrame, idCol: String, vecCol: String,
-                   centroids: Seq[(Long, Seq[Double])],
-                   deltaPath: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    vectors.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ops.Similarity.writeIvfDeltaBatch(batch, idCol, vecCol,
-          centroids, deltaPath, batchId)
-      }
-
-  /** Streaming takedowns for the BM25 SEARCH index: each micro-batch of
-    * deleted ids goes through [[graft.ops.Terms.tombstoneBm25Docs]], so a
-    * taken-down document leaves search results (and the scoring
-    * statistics, exactly) within one micro-batch — no index rewrite.
-    * Replay-idempotent like every sink here: the per-batch tombstone dir
-    * and stats adjustment are pure functions of prior-batch state, so a
-    * failure-replayed micro-batch rewrites identical artifacts. Pass the
-    * index's delta log path when one exists so docs still living only in
-    * uncompacted deltas are deletable too. */
-  def sinkBm25Tombstones(deletedIds: DataFrame, idCol: String, table: String,
-                         deltaPath: Option[String] = None): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    deletedIds.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ops.Terms.tombstoneBm25Docs(batch.sparkSession, table, batch,
-          idCol, batchId, deltaPath)
-        ()
-      }
-
-  /** Streaming leg of the mergeable-statistics stores: each micro-batch
-    * writes its own monoid summary keyed by batch id (HLL sketch per
-    * group / value histogram per group — [[graft.ops.Sketches]]), and the
-    * corpus-wide answer folds from the store with no rescan of any batch.
-    * Batch-id-keyed overwrite = replay-idempotent, the recipe of every
-    * sink here. Per-batch cost is one map-side-combined aggregation over
-    * that batch's rows; the store grows by groups × (KB sketch | bins)
-    * per batch regardless of batch size. */
-  def sinkDistinctSketches(df: DataFrame, groupCol: String, valueCol: String,
-                           path: String, lgK: Int = 12): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    df.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ops.Sketches.writeDistinctSketches(batch, groupCol,
-          col(valueCol), path, batchId, lgK)
-      }
-
-  /** See [[sinkDistinctSketches]] — the quantile sibling
-    * ([[graft.ops.Sketches.writeValueHistograms]]). */
-  def sinkValueHistograms(df: DataFrame, groupCol: String, valueCol: String,
-                          path: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    df.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ops.Sketches.writeValueHistograms(batch, groupCol,
-          col(valueCol), path, batchId)
-      }
-
-  /** Streaming BM25 index maintenance: each micro-batch of documents lands
-    * as its own postings + stats delta
-    * ([[graft.ops.Terms.writeBm25DeltaBatch]] — per-batch overwrite,
-    * replay-idempotent); queries see base ∪ deltas through
-    * [[graft.ops.Terms.bm25SearchWithDeltas]] with scores exactly equal to
-    * a full rebuild, and [[graft.ops.Terms.compactBm25Delta]] folds
-    * committed batches into the bucketed base offline. */
-  def sinkBm25Delta(docs: DataFrame, idCol: String, textCol: String,
-                    deltaPath: String): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ops.Terms.writeBm25DeltaBatch(batch, idCol, textCol,
-          deltaPath, batchId)
-      }
-
-  /** One micro-batch of the incremental near-dup pipeline — extracted from
-    * [[sinkIncrementalLshDedup]] so the replay contract is directly
-    * testable. For batch B of a document feed:
+  /** One micro-batch of streaming incremental near-duplicate detection: an
+    * append-only document feed is LSH-probed per micro-batch against
+    * everything that arrived before it — the continuous-ingestion twin of
+    * the batch [[graft.ops.Dedup.lshProbeStore]] path, in the LSM shape: a
+    * bucketed base store (built by [[graft.ops.Dedup.writeLshSignatureStore]]
+    * backfill, probed exchange-free), a replay-idempotent per-batch delta
+    * log, and [[graft.ops.Dedup.compactLshDelta]] folding deltas into the
+    * base offline at O(delta) cost. For batch B of a document feed:
     *
     *  1. signs the batch once ([[graft.ops.Dedup.lshProbeBands]]) and probes
     *     THREE tiers for LSH candidates: the bucketed base store (optional;
@@ -860,7 +545,7 @@ object EventStreams {
     *     the batch itself (first-seen-wins: the larger id is flagged);
     *  2. lands the flagged candidates at `outPath/batch=B` and the batch's
     *     own banded signatures at `deltaPath/batch=B` — both
-    *     overwrite-per-batch-directory, the foreachBatch idempotence recipe.
+    *     overwrite-per-batch-directory, the replay recipe above.
     *
     * Replay safety: a re-delivered batch B probes `batch < B` only (its own
     * half-written delta directory is excluded by partition pruning) and
@@ -918,29 +603,6 @@ object EventStreams {
       asStore.write.mode("overwrite").parquet(s"$deltaPath/batch=$batchId")
     } finally banded.unpersist()
   }
-
-  /** Streaming incremental near-duplicate detection: an append-only
-    * document feed is LSH-probed per micro-batch against everything that
-    * arrived before it — the continuous-ingestion twin of the batch
-    * [[graft.ops.Dedup.lshProbeStore]] path, in the LSM shape: a bucketed
-    * base store (built by [[graft.ops.Dedup.writeLshSignatureStore]]
-    * backfill, probed exchange-free), a replay-idempotent per-batch delta
-    * log, and [[graft.ops.Dedup.compactLshDelta]] folding deltas into the
-    * base offline at O(delta) cost. Flagged candidates land at
-    * `outPath/batch=B` as (probe_id, match_id, est_sim). Caller starts the
-    * returned writer; see [[processIncrementalLshBatch]] for the per-batch
-    * contract. */
-  def sinkIncrementalLshDedup(docs: DataFrame, idCol: String, textCol: String,
-                              baseTable: Option[String], deltaPath: String,
-                              outPath: String, shingleLen: Int = 3,
-                              numHashes: Int = 64, bands: Int = 16,
-                              maxBucketSize: Int = 200): org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processIncrementalLshBatch(batch, batchId, idCol, textCol, baseTable,
-          deltaPath, outPath, shingleLen, numHashes, bands, maxBucketSize)
-      }
 
   /** Streaming quality gate — the train-batch / serve-stream split of the
     * Naive-Bayes classifier ([[graft.ops.Classify]]): an append-only

@@ -65,6 +65,7 @@ object AlsTrainerBench {
       .config("spark.sql.shuffle.partitions", shufflePartitions)
       .config("spark.sql.adaptive.coalescePartitions.minPartitionNum",
         shufflePartitions)
+      .config("spark.sql.warehouse.dir", graft.Verify.runWarehouse())
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -20,6 +20,7 @@ object CfProfile {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.coalescePartitions.minPartitionNum", cpus)
+      .config("spark.sql.warehouse.dir", graft.Verify.runWarehouse())
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -31,6 +31,7 @@ object PlanDump {
       .config("spark.sql.shuffle.partitions", shufflePartitions)
       .config("spark.sql.adaptive.coalescePartitions.minPartitionNum",
         shufflePartitions)
+      .config("spark.sql.warehouse.dir", graft.Verify.runWarehouse())
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

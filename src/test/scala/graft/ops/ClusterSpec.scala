@@ -189,9 +189,9 @@ class ClusterSpec extends SparkTestBase {
     val sdir = java.nio.file.Files.createTempDirectory("km_moments_s").toString
     val rows = corpus.as[(Long, Seq[Float])].collect().toSeq
     val in = MemoryStream[(Long, Seq[Float])]
-    val q = graft.streaming.EventStreams.sinkKmeansMoments(
-        in.toDF().toDF("vec_id", "embedding"), "vec_id", "embedding",
-        seedCents, 100L, sdir)
+    val q = in.toDF().toDF("vec_id", "embedding").writeStream
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+        Cluster.writeMomentBatch(b, "vec_id", "embedding", seedCents, 100L, sdir, id) }
       .option("checkpointLocation",
         java.nio.file.Files.createTempDirectory("km_ckpt").toString)
       .start()

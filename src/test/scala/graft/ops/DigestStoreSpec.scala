@@ -73,9 +73,9 @@ class DigestStoreSpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     val in = MemoryStream[(Long, String)]
-    val q = graft.streaming.EventStreams.sinkDigests(
-        in.toDF().toDF("doc_id", "text"), "doc_id", "text", "tst_digest_s",
-        numBuckets = 4)
+    val q = in.toDF().toDF("doc_id", "text").writeStream
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+        Dedup.appendDigests(b.sparkSession, "tst_digest_s", b, "doc_id", "text", numBuckets = 4) }
       .option("checkpointLocation",
         java.nio.file.Files.createTempDirectory("dg_ckpt").toString)
       .start()

@@ -122,8 +122,9 @@ class ProjectionSpec extends SparkTestBase {
     val sdir = java.nio.file.Files.createTempDirectory("pca_moments_s").toString
     val rows = emb.as[(Long, Seq[Float])].collect().toSeq
     val in = MemoryStream[(Long, Seq[Float])]
-    val q = graft.streaming.EventStreams.sinkFitMoments(
-        in.toDF().toDF("vec_id", "embedding"), "embedding", 64, sdir)
+    val q = in.toDF().toDF("vec_id", "embedding").writeStream
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+        Projection.writeFitBatch(b, "embedding", 64, sdir, id) }
       .option("checkpointLocation",
         java.nio.file.Files.createTempDirectory("pca_ckpt").toString)
       .start()

@@ -236,4 +236,35 @@ class RelationalSpec extends SparkTestBase {
       assert(got == ref, s"buckets=$buckets")
     }
   }
+
+  test("globalCumBelow's only unpartitioned window reads at most `buckets` rows") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.window.WindowExec
+    // the final adaptive plan, descending into materialized query stages
+    def expand(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => expand(a.executedPlan)
+      case q: QueryStageExec => expand(q.plan)
+      case other => other.children.flatMap(expand)
+    })
+    // rows a node receives: the output count of the nearest counting node
+    def rowsInto(p: SparkPlan): Long = p.metrics.get("numOutputRows") match {
+      case Some(m) => m.value
+      case None => p match {
+        case q: QueryStageExec => rowsInto(q.plan)
+        case other => other.children.map(rowsInto).sum
+      }
+    }
+    val buckets = 6
+    val out = Relational.globalCumBelow(
+      spark.range(3000).select(col("id").cast("double").as("k"),
+        (col("id") % 7).as("w")), "k", "w", "below", buckets)
+    assert(out.collect().length == 3000)
+    val global = expand(out.queryExecution.executedPlan).collect {
+      case w: WindowExec if w.partitionSpec.isEmpty => w
+    }
+    assert(global.nonEmpty)
+    for (w <- global)
+      assert(rowsInto(w.child) <= buckets, w.treeString)
+  }
 }

@@ -164,8 +164,9 @@ class SketchSpec extends SparkTestBase {
     val ck2 = java.nio.file.Files.createTempDirectory("s_ck2").toString
     val rows = (0 until 200).map(i => (if (i % 2 == 0) "x" else "y", (i % 13).toLong))
     val in1 = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(String, Long)]
-    val q1 = graft.streaming.EventStreams.sinkValueHistograms(
-        in1.toDF().toDF("g", "v"), "g", "v", hDir)
+    val q1 = in1.toDF().toDF("g", "v").writeStream
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+        Sketches.writeValueHistograms(b, "g", col("v"), hDir, id) }
       .option("checkpointLocation", ck1).start()
     in1.addData(rows.take(120): _*); q1.processAllAvailable()
     in1.addData(rows.drop(120): _*); q1.processAllAvailable()
@@ -177,8 +178,9 @@ class SketchSpec extends SparkTestBase {
       assert(merged(g) == vs(math.ceil(0.5 * vs.size).toInt - 1))
 
     val in2 = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(String, Long)]
-    val q2 = graft.streaming.EventStreams.sinkDistinctSketches(
-        in2.toDF().toDF("g", "v"), "g", "v", dDir)
+    val q2 = in2.toDF().toDF("g", "v").writeStream
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+        Sketches.writeDistinctSketches(b, "g", col("v"), dDir, id) }
       .option("checkpointLocation", ck2).start()
     in2.addData(rows.take(120): _*); q2.processAllAvailable()
     in2.addData(rows.drop(120): _*); q2.processAllAvailable()

@@ -131,8 +131,9 @@ class StoresSpec extends SparkTestBase {
     val dir = java.nio.file.Files.createTempDirectory("tomb_ckpt").toString
     try {
       val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Long]
-      val q = graft.streaming.EventStreams.sinkTombstones(
-          in.toDF().toDF("vec_id"), "vec_id", "st_stream")
+      val q = in.toDF().toDF("vec_id").writeStream
+        .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+          Stores.addTombstones(b, "vec_id", "st_stream", id) }
         .option("checkpointLocation", dir).start()
       in.addData(101L)
       q.processAllAvailable()

@@ -347,8 +347,9 @@ class TermsSpec extends SparkTestBase {
       spark.sql(s"DROP TABLE IF EXISTS $t")
     Terms.writeBm25Store(base, "doc_id", "text", "tst_bm25_str", numBuckets = 8)
     val in = MemoryStream[(Long, String)]
-    val q = graft.streaming.EventStreams.sinkBm25Delta(in.toDF().toDF("doc_id", "text"),
-        "doc_id", "text", delta)
+    val q = in.toDF().toDF("doc_id", "text").writeStream
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+        Terms.writeBm25DeltaBatch(b, "doc_id", "text", delta, id) }
       .option("checkpointLocation",
         java.nio.file.Files.createTempDirectory("bm25_ckpt").toString)
       .start()
@@ -563,8 +564,9 @@ class TermsSpec extends SparkTestBase {
     Terms.dropBm25Store(spark, "tst_bm25_sdel_reb")
     Terms.writeBm25Store(docs, "doc_id", "text", "tst_bm25_sdel", numBuckets = 8)
     val in = MemoryStream[Long]
-    val q = graft.streaming.EventStreams.sinkBm25Tombstones(
-        in.toDF().toDF("doc_id"), "doc_id", "tst_bm25_sdel")
+    val q = in.toDF().toDF("doc_id").writeStream
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+        Terms.tombstoneBm25Docs(b.sparkSession, "tst_bm25_sdel", b, "doc_id", id); () }
       .option("checkpointLocation",
         java.nio.file.Files.createTempDirectory("bm25_sdel_ckpt").toString)
       .start()

@@ -176,9 +176,11 @@ class RecommendSpec extends SparkTestBase {
       numBuckets = 8)
     try {
       val in = MemoryStream[(Int, Seq[Double])]
-      val q = graft.streaming.EventStreams.sinkRecommendFromStore(
-          in.toDF().toDF("id", "features"), "rec_stream_store", centroids,
-          nProbe = 4, k = 5, outDir)
+      val q = in.toDF().toDF("id", "features").writeStream
+        .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+          Recommend.recommendFromStore(b.sparkSession, "rec_stream_store", b, centroids,
+              nProbe = 4, k = 5)
+            .write.mode("overwrite").parquet(s"$outDir/batch=$id") }
         .start()
       val batch0 = users.as[(Int, Seq[Double], Double)].collect()
         .map { case (id, f, _) => (id, f) }

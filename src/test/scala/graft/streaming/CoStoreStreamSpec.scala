@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
 /** Batch-equality contract for the streaming interaction-edge store:
-  * micro-batched ingest through [[EventStreams.sinkEdgeBatches]] must
+  * micro-batched ingest through [[GraphCF.writeEdgeBatch]] must
   * yield the SAME standing edge frame and co-counts as the one-shot
   * build over the concatenated interactions — edge counts are additive
   * across batches and the history cut is deterministic, so equality is
@@ -20,8 +20,9 @@ class CoStoreStreamSpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     val dir = Files.createTempDirectory("edge_store").toString
     val in = MemoryStream[(Long, String)]
-    val q = EventStreams.sinkEdgeBatches(
-      in.toDF().toDF("user", "item"), "user", "item", dir).start()
+    val q = in.toDF().toDF("user", "item").writeStream
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+        GraphCF.writeEdgeBatch(b, "user", "item", dir, id) }.start()
     // same (user, item) pair split ACROSS batches — the fold must merge
     // the partial counts, and u1's cap-2 membership is decided only by
     // the cross-batch total (c reaches w=3 only after batch 3)

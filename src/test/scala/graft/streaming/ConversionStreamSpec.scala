@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
 /** Batch-equality contract for the streaming conversion-counter store:
-  * micro-batched ingest through [[EventStreams.sinkUnitCounts]] must
+  * micro-batched ingest through [[AbDecision.writeUnitCountBatch]] must
   * yield the SAME standing per-unit totals — and therefore the same A/B
   * decision rows — as the one-shot count over the concatenated events
   * (success counts are additive across batches; zero-success active
@@ -20,9 +20,10 @@ class ConversionStreamSpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     val dir = Files.createTempDirectory("conv_store").toString
     val in = MemoryStream[(Long, String)]
-    val q = EventStreams.sinkUnitCounts(
-      in.toDF().toDF("user_id", "event_type"),
-      col("user_id"), col("event_type") === "purchase", dir).start()
+    val q = in.toDF().toDF("user_id", "event_type").writeStream
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+        AbDecision.writeUnitCountBatch(b, col("user_id"),
+          col("event_type") === "purchase", dir, id) }.start()
     // user 10 converts (>= 2 purchases) only on the CROSS-batch total;
     // user 11 stays a zero-success unit through every batch
     in.addData((10L, "purchase"), (11L, "view"), (20L, "view"))

@@ -42,8 +42,9 @@ class CurateStreamSpec extends SparkTestBase {
     val cfg = CurateStream.Config()
 
     val in = MemoryStream[(Long, String)]
-    val q = CurateStream.sink(in.toDF().toDF("doc_id", "text"),
-        "doc_id", "text", bench, cfg, stores)
+    val q = in.toDF().toDF("doc_id", "text").writeStream
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+        CurateStream.processBatch(b, id, "doc_id", "text", bench, cfg, stores) }
       .start()
     // batch 0: kept / quality / lang / within-batch exact dup / contaminated
     in.addData((1L, tA), (2L, tShort), (3L, tGerman), (4L, tA), (5L, tContam))

@@ -35,9 +35,10 @@ class IncrementalLshDedupSpec extends SparkTestBase {
       "doc_id", "text", "lsh_sb", numBuckets = 4)
     try {
       val in = MemoryStream[(Long, String)]
-      val q = EventStreams.sinkIncrementalLshDedup(
-          in.toDF().toDF("doc_id", "text"), "doc_id", "text",
-          Some("lsh_sb"), deltaDir, outDir)
+      val q = in.toDF().toDF("doc_id", "text").writeStream
+        .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+          EventStreams.processIncrementalLshBatch(b, id, "doc_id", "text",
+            Some("lsh_sb"), deltaDir, outDir) }
         .start()
       // batch 0: 10 dups base doc 1; 11 is new content
       val b0 = Seq((10L, tA), (11L, tC))
@@ -137,9 +138,10 @@ class IncrementalLshDedupSpec extends SparkTestBase {
     val outDir = Files.createTempDirectory("lsh_out_nb").toString
     val deltaDir = Files.createTempDirectory("lsh_delta_nb").toString
     val in = MemoryStream[(Long, String)]
-    val q = EventStreams.sinkIncrementalLshDedup(
-        in.toDF().toDF("doc_id", "text"), "doc_id", "text",
-        None, deltaDir, outDir)
+    val q = in.toDF().toDF("doc_id", "text").writeStream
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+        EventStreams.processIncrementalLshBatch(b, id, "doc_id", "text",
+          None, deltaDir, outDir) }
       .start()
     in.addData((1L, tA), (2L, tB)); q.processAllAvailable()
     in.addData((3L, tA)); q.processAllAvailable()

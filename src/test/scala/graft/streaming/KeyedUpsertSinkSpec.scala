@@ -13,8 +13,9 @@ class KeyedUpsertSinkSpec extends SparkTestBase {
       spark.conf.get("spark.sql.warehouse.dir"), "ks_stream").toString
     KeyedStore.dropKeyedStore(spark, path)
     val in = MemoryStream[(Long, String, Double)]
-    val q = EventStreams.sinkKeyedUpserts(
-        in.toDF().toDF("id", "name", "score"), "id", path)
+    val q = in.toDF().toDF("id", "name", "score").writeStream
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+        KeyedStore.writeKeyedBatch(b, "id", path, id) }
       .start()
     try {
       in.addData((1L, "a", 1.0), (2L, "b", 2.0))

@@ -9,7 +9,7 @@ import java.nio.file.Files
 
 /** Batch-equality contract for the streaming association-rule statistics
   * store: micro-batched ingest through
-  * [[EventStreams.sinkRuleStatsBatches]] must serve the SAME rules as
+  * [[GraphCF.writeRuleStatsBatch]] must serve the SAME rules as
   * the one-shot [[GraphCF.liftRules]] over the concatenated
   * interactions — supports, pair counts and basket counts are additive
   * over disjoint baskets and the Apriori prune is global-at-serve, so
@@ -23,9 +23,9 @@ class RuleStatsStreamSpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     val dir = Files.createTempDirectory("rule_stats_stream").toString
     val in = MemoryStream[(Long, Long)]
-    val q = EventStreams.sinkRuleStatsBatches(
-      in.toDF().toDF("basket", "item"), "basket", "item", dir,
-      maxBasket = 3).start()
+    val q = in.toDF().toDF("basket", "item").writeStream
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+        GraphCF.writeRuleStatsBatch(b, "basket", "item", 3, dir, id) }.start()
     // batches are basket-atomic; item 30's support and the (10, 20)
     // pair's count accumulate ACROSS batches, and item 40 is infrequent
     // in every single batch but frequent overall — the global-prune case

@@ -90,14 +90,14 @@ class StreamSinkSpec extends SparkTestBase {
     val in = MemoryStream[(Long, java.sql.Timestamp, String, Double)]
     val dir = Files.createTempDirectory("upsert_ckpt_sink").toString
     val ckpt = Files.createTempDirectory("upsert_ckpt").toString
-    def start() = EventStreams.sinkPartitionedUpsert(
-        EventStreams.tumblingCounts(
-            in.toDF().toDF("event_id", "ts", "event_type", "value"),
-            window_ = "1 hour", watermark = "0 seconds")
-          .select(col("window.start").as("wstart"), col("event_type"),
-            col("cnt"), col("sum_value"))
-          .withColumn("part", date_format(col("wstart"), "yyyyMMddHH")),
-        dir, Seq("part"))
+    def start() = EventStreams.tumblingCounts(
+          in.toDF().toDF("event_id", "ts", "event_type", "value"),
+          window_ = "1 hour", watermark = "0 seconds")
+      .select(col("window.start").as("wstart"), col("event_type"),
+        col("cnt"), col("sum_value"))
+      .withColumn("part", date_format(col("wstart"), "yyyyMMddHH"))
+      .writeStream.foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+        graft.ops.Layout.overwritePartitions(b, dir, Seq("part")) }
       .option("checkpointLocation", ckpt)
       .start()
 
@@ -134,7 +134,8 @@ class StreamSinkSpec extends SparkTestBase {
       .select(col("window.start").as("wstart"), col("event_type"),
         col("cnt"), col("sum_value"))
       .withColumn("part", date_format(col("wstart"), "yyyyMMddHH"))
-    val q = EventStreams.sinkPartitionedUpsert(finalized, dir, Seq("part")).start()
+    val q = finalized.writeStream.foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+      graft.ops.Layout.overwritePartitions(b, dir, Seq("part")) }.start()
     // hour-0 traffic, then hour-2 traffic to finalize hour 0
     in.addData((1L, ts(100), "click", 1.0), (2L, ts(200), "click", 2.0),
       (3L, ts(300), "view", 4.0))
@@ -168,9 +169,10 @@ class StreamSinkSpec extends SparkTestBase {
     val dir = Files.createTempDirectory("shard_sink").toString
     val mdir = Files.createTempDirectory("shard_manifest").toString
     val n = 4
-    val q = EventStreams.sinkTrainingShards(
-        in.toDF().toDF("doc_id", "text"), "doc_id",
-        TextOps.wsTokenCount(col("text")), n, dir, mdir)
+    val q = in.toDF().toDF("doc_id", "text").writeStream
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+        Layout.writeTrainingShardBatch(b, "doc_id",
+          TextOps.wsTokenCount(col("text")), n, dir, mdir, id) }
       .start()
     val batch1 = (0L until 20L).map(i => (i, s"doc $i body words"))
     val batch2 = (20L until 50L).map(i => (i, s"late doc $i arrives"))

@@ -9,7 +9,7 @@ import java.nio.file.Files
 
 /** Batch-equality contract for the streaming Markov transition store:
   * stateful pair generation ([[EventStreams.transitionDeltas]]) through
-  * the per-batch sink ([[EventStreams.sinkTransitionDeltas]]) must fold
+  * the per-batch writer ([[GraphCF.writeTransitionPairBatch]]) must fold
   * to the SAME transition counts as the one-shot
   * [[graft.ops.GraphCF.basketTransitions]] over the concatenated log —
   * including transitions whose two baskets arrive in DIFFERENT
@@ -39,10 +39,11 @@ class TransitionStreamSpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     val dir = Files.createTempDirectory("trans_store").toString
     val in = MemoryStream[(Long, Long, Long, Long)]
-    val q = EventStreams.sinkTransitionDeltas(
-      EventStreams.transitionDeltas(
+    val q = EventStreams.transitionDeltas(
         rows(in.toDF().toDF("user", "bsk", "ts_ms", "item")),
-        "user", "bsk", "ts", "item", maxBasket = 8), dir).start()
+        "user", "bsk", "ts", "item", maxBasket = 8).toDF().writeStream
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+        GraphCF.writeTransitionPairBatch(b, dir, id) }.start()
     // CUT BETWEEN BASKETS: u1's basket 5 arrives a micro-batch after
     // basket 9, and basket 2 another batch later — every u1 transition
     // crosses a micro-batch boundary and exists only because the state
@@ -74,10 +75,11 @@ class TransitionStreamSpec extends SparkTestBase {
       (1L, 1L, 1000L, 1L), (1L, 1L, 1000L, 1L), (1L, 1L, 1000L, 2L),
       (1L, 2L, 2000L, 3L))
     val in = MemoryStream[(Long, Long, Long, Long)]
-    val q = EventStreams.sinkTransitionDeltas(
-      EventStreams.transitionDeltas(
+    val q = EventStreams.transitionDeltas(
         rows(in.toDF().toDF("user", "bsk", "ts_ms", "item")),
-        "user", "bsk", "ts", "item", maxBasket = 1), dir).start()
+        "user", "bsk", "ts", "item", maxBasket = 1).toDF().writeStream
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+        GraphCF.writeTransitionPairBatch(b, dir, id) }.start()
     in.addData(capLog.take(3): _*)
     q.processAllAvailable()
     in.addData(capLog.drop(3): _*)
@@ -101,10 +103,11 @@ class TransitionStreamSpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     val dir = Files.createTempDirectory("trans_store_late").toString
     val in = MemoryStream[(Long, Long, Long, Long)]
-    val q = EventStreams.sinkTransitionDeltas(
-      EventStreams.transitionDeltas(
+    val q = EventStreams.transitionDeltas(
         rows(in.toDF().toDF("user", "bsk", "ts_ms", "item")),
-        "user", "bsk", "ts", "item", maxBasket = 8), dir).start()
+        "user", "bsk", "ts", "item", maxBasket = 8).toDF().writeStream
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+        GraphCF.writeTransitionPairBatch(b, dir, id) }.start()
     // batch 1: basket 9 at t=2000 {a, b}
     in.addData((1L, 9L, 2000L, 1L), (1L, 9L, 2000L, 2L))
     q.processAllAvailable()
