@@ -1,97 +1,19 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import java.util.concurrent.atomic.AtomicLong
-
-/** Accumulates stage-level data-movement metrics so the bench artifact
-  * records not just WALL TIME but the data-movement profile behind it —
-  * the auditable form of every "no corpus-sized shuffle" claim in
-  * PLANS.md/OPERATORS.md. Stage events are aggregated task metrics; reads
-  * happen outside the timers, after a settle wait (the listener bus is
-  * async and its drain API is private), so instrumentation cost never
-  * lands in a timed window. */
-final class MovementListener extends SparkListener {
-  val inputBytes = new AtomicLong; val inputRecords = new AtomicLong
-  val shuffleWriteBytes = new AtomicLong; val shuffleWriteRecords = new AtomicLong
-  val spillDiskBytes = new AtomicLong
-  // stamp of the last event seen, for the settle wait
-  val lastEvent = new AtomicLong
-  def reset(): Unit =
-    Seq(inputBytes, inputRecords, shuffleWriteBytes, shuffleWriteRecords,
-      spillDiskBytes).foreach(_.set(0))
-  override def onStageCompleted(ev: SparkListenerStageCompleted): Unit = {
-    val m = ev.stageInfo.taskMetrics
-    if (m != null) {
-      inputBytes.addAndGet(m.inputMetrics.bytesRead)
-      inputRecords.addAndGet(m.inputMetrics.recordsRead)
-      shuffleWriteBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-      shuffleWriteRecords.addAndGet(m.shuffleWriteMetrics.recordsWritten)
-      spillDiskBytes.addAndGet(m.diskBytesSpilled)
-    }
-    lastEvent.set(System.nanoTime())
-  }
-  /** Wait until no stage event has arrived for `quietMs` (bounded). */
-  def settle(quietMs: Long = 200, maxMs: Long = 3000): Unit = {
-    val deadline = System.nanoTime() + maxMs * 1000000L
-    var quietSince = System.nanoTime()
-    while (System.nanoTime() < deadline &&
-           System.nanoTime() - math.max(lastEvent.get(), quietSince) < quietMs * 1000000L) {
-      Thread.sleep(20)
-    }
-  }
-}
+import graft.tools.Harness
+import graft.tools.Harness.{MovementListener, jsonString}
 
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // shuffle partitions default to the core count (right for the gate
-    // scales), overridable for scale probes: partitions are THE knob every
-    // real deployment sizes to its data, and the x100 CF-family probe runs
-    // with them sized (e.g. 256) to show the co-walk exchange clean — AQE
-    // (on by default) coalesces small exchanges back down, so oversizing
-    // doesn't tax the light queries
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      // floor AQE's partition coalescing at the knob too: coalescing is
-      // advisory on INPUT bytes and otherwise floors at defaultParallelism
-      // (= cpus here), so a join whose OUTPUT fans out quadratically (the
-      // CF co-walk) would run its [join → partial agg] stage at cpus-many
-      // same-heap tasks no matter what the knob says — exactly the ~1 GB
-      // x100-probe spill measured invariant to the knob until this floor
-      // (see GraphCF.coPairs' physical note; on a real cluster the floor
-      // is the cluster's cores and per-task memory is per-executor)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionNum",
-        shufflePartitions)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", Verify.runWarehouse())
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
+    val cpus = spark.sparkContext.defaultParallelism
+    val shufflePartitions = spark.conf.get("spark.sql.shuffle.partitions")
     // steady-state measurement: first execution of each query is dominated
     // by JVM JIT + whole-stage-codegen compilation (measured 2-3x the warm
     // time), so run once uncounted, then time the second execution. A query
     // that throws is recorded as failed (time -1, listed in "failed") — NOT
     // timed as if its fast-fail wall time were a result.
     val failed = scala.collection.mutable.ArrayBuffer[String]()
-    // SPARK_GRAFT_ONLY=q54_dup_clusters,q42_ngram_jaccard — local profiling
-    // aid; unset (the driver's mode) runs the full suite
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-    // drop state an execution left behind (persisted frames, checkpoint
-    // RDDs) and nudge a GC — run BETWEEN executions, outside the timers,
-    // so each timed run pays its own persists (as a driver cold run would)
-    // but not the previous execution's leftovers: queries with per-round
-    // localCheckpoints were measured 2-3x slower on their second timed run
-    // purely from accumulated memory-store pressure
-    def cleanup(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      System.gc()
-    }
     // materialize via the no-op DSv2 sink, NOT count(): count() lets
     // Catalyst prune every unreferenced column, and for a query whose last
     // operator is a left join against an aggregated (unique-key) subtree
@@ -104,22 +26,14 @@ object Bench {
     val movement = new MovementListener
     spark.sparkContext.addSparkListener(movement)
     val moved = scala.collection.mutable.LinkedHashMap[String, String]()
-    val results = selected.map { case (name, fn) =>
+    val results = Harness.selected(SparkEntry.queries).map { case (name, fn) =>
       try {
         run(fn(spark, sfDir)) // warm-up (JIT + codegen)
-        // min of 2 timed runs: the host is shared, and a transient load
-        // spike during a single timed run was measured to inflate one query
-        // 8x — min-of-k is the standard steady-state estimator for that.
         // Movement metrics are captured on the LAST run only (they are
         // plan-deterministic, unlike wall time) and read after the timer
         // stops, post listener settle.
-        val t = (0 until 2).map { i =>
-          cleanup()
-          if (i == 1) { movement.settle(); movement.reset() }
-          val t0 = System.nanoTime()
-          run(fn(spark, sfDir))
-          (System.nanoTime() - t0) / 1e9
-        }.min
+        val t = Harness.minOf2(spark, Seq(name -> (() => run(fn(spark, sfDir)))),
+          beforeSecond = () => { movement.settle(); movement.reset() }).head._2
         movement.settle()
         moved(name) =
           s"""{"input_mb":${movement.inputBytes.get / 1048576.0},""" +
@@ -134,12 +48,10 @@ object Bench {
           System.err.println(s"BENCH FAIL $name: ${e.getClass.getName}: ${e.getMessage}")
           name -> -1.0
       } finally {
-        // isolate queries: Spark's ContextCleaner only reclaims shuffle
-        // files / broadcasts when the JVM collects their references, and
-        // 79 queries x 3 executions otherwise accumulate enough driver
-        // state that late-suite queries were measured 5-10x slower from GC
-        // pressure
-        cleanup()
+        // isolate queries: 79 queries x 3 executions otherwise accumulate
+        // enough driver state that late-suite queries were measured 5-10x
+        // slower from GC pressure
+        Harness.cleanup(spark)
       }
     }
     // per-phase timings for the store-backed queries: the headline number
@@ -148,28 +60,16 @@ object Bench {
     // probe are timed separately (same min-of-2, same noop sink for the
     // frame-returning phase). Phases run in declaration order per pass —
     // each probe measurement sees the store its own pass just built.
-    val phased = SparkEntry.queryPhases.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-    val phaseTimes = phased.flatMap { case (name, ps) =>
+    val phaseTimes = Harness.selected(SparkEntry.queryPhases).flatMap { case (name, ps) =>
       try {
-        val passes = (0 until 2).map { _ =>
-          ps.map { case (pname, fn) =>
-            cleanup()
-            val t0 = System.nanoTime()
-            fn(spark, sfDir).foreach(run)
-            pname -> (System.nanoTime() - t0) / 1e9
-          }
-        }
-        val best = ps.map(_._1).zipWithIndex.map { case (pname, i) =>
-          pname -> passes.map(_(i)._2).min
-        }
-        Some(name -> best)
+        Some(name -> Harness.minOf2(spark,
+          ps.map { case (pname, fn) => pname -> (() => fn(spark, sfDir).foreach(run)) }))
       } catch {
         case e: Throwable =>
           System.err.println(
             s"BENCH PHASE FAIL $name: ${e.getClass.getName}: ${e.getMessage}")
           None
-      } finally cleanup()
+      } finally Harness.cleanup(spark)
     }
     val ph = phaseTimes.map { case (name, ts) =>
       "\"" + name + "\":" +
@@ -182,7 +82,7 @@ object Bench {
     val mv = moved.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val line =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$fl,"movement":$mv,"phases":$ph,"sf":${Verify.jsonString(sfDir)},"cpus":$cpus,"shuffle_partitions":$shufflePartitions}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"failed":$fl,"movement":$mv,"phases":$ph,"sf":${jsonString(sfDir)},"cpus":$cpus,"shuffle_partitions":$shufflePartitions}"""
     println(line)
     // the driver's artifact truncates long stdout tails, which has left the
     // per-query map unauditable in past rounds — persist the identical JSON
@@ -202,7 +102,7 @@ object Bench {
     // list, scale knobs, and a pointer to the full-map file written above.
     // The full line still prints first (old numbers kept, per the contract).
     val compact =
-      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"failed":$fl,"sf":${Verify.jsonString(sfDir)},"cpus":$cpus,"shuffle_partitions":$shufflePartitions,"detail":${Verify.jsonString(out)}}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","n_queries":${results.size},"failed":$fl,"sf":${jsonString(sfDir)},"cpus":$cpus,"shuffle_partitions":$shufflePartitions,"detail":${jsonString(out)}}"""
     println(compact)
     spark.stop()
   }

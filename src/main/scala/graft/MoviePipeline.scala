@@ -165,13 +165,7 @@ object MoviePipeline {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.warehouse.dir", Verify.runWarehouse())
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.tools.Harness.session()
     runAll(spark).toSeq.sortBy(_._1)
       .foreach { case (k, v) => println(f"$k%-20s $v%.6f") }
     spark.stop()

@@ -1235,7 +1235,7 @@ object PipelineQueries {
       val codebook = fixedCodebook(emb)
       graft.serve.Recommend.writeCatalogStore(items, counts, codebook,
         "q106_store", numBuckets = codebook.size)
-      graft.serve.Recommend.recommendFromStore(s, "q106_store", users,
+      graft.serve.Recommend.recommendFromStore("q106_store", users,
           codebook, nProbe = codebook.size, k = 5)
         .select(col("user_id"), col("item_id"),
           round(col("score"), 6).as("score"), col("rank").cast("long").as("rnk"))
@@ -2330,10 +2330,10 @@ object PipelineQueries {
     (s, d) => {
       val docs = documents(s, d)
       Terms.writeBm25Store(docs, "doc_id", "text", "q136_store")
-      Terms.tombstoneBm25Docs(s, "q136_store",
+      Terms.tombstoneBm25Docs("q136_store",
         docs.filter(col("doc_id") % 7 === 3).select(col("doc_id")),
         "doc_id", batchId = 1L)
-      Terms.tombstoneBm25Docs(s, "q136_store",
+      Terms.tombstoneBm25Docs("q136_store",
         docs.filter(col("doc_id") % 3 === 0).select(col("doc_id")),
         "doc_id", batchId = 2L)
       Terms.bm25SearchFromStore(s, "q136_store",
@@ -5717,10 +5717,10 @@ object PipelineQueries {
       },
       "delete" -> ph { (s, d) =>
         val docs = documents(s, d)
-        Terms.tombstoneBm25Docs(s, "q136_store",
+        Terms.tombstoneBm25Docs("q136_store",
           docs.filter(col("doc_id") % 7 === 3).select(col("doc_id")),
           "doc_id", batchId = 1L)
-        Terms.tombstoneBm25Docs(s, "q136_store",
+        Terms.tombstoneBm25Docs("q136_store",
           docs.filter(col("doc_id") % 3 === 0).select(col("doc_id")),
           "doc_id", batchId = 2L)
         None

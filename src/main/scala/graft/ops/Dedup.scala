@@ -90,10 +90,10 @@ object Dedup {
     * `compactDigestStore` is the size repair if duplicate rows ever
     * accumulate. `numBuckets` must match the store's write (Spark rejects
     * a mismatched bucket spec). */
-  def appendDigests(spark: SparkSession, table: String, batch: DataFrame,
+  def appendDigests(table: String, batch: DataFrame,
                     idCol: String, textCol: String,
                     numBuckets: Int = 32): Unit = {
-    val verdicts = dedupAgainstStore(spark, table, batch, idCol, textCol)
+    val verdicts = dedupAgainstStore(batch.sparkSession, table, batch, idCol, textCol)
     Stores.bucketAligned(verdicts.filter(col("keep"))
         .select(col("text_hash"), col("doc_id").as("first_id")),
         numBuckets, "text_hash")

@@ -610,10 +610,10 @@ object Terms {
     * When the index also has an uncompacted delta log
     * ([[writeBm25DeltaBatch]]), pass it so docs living only in deltas are
     * deletable too; their adjustment rows fold the same way. */
-  def tombstoneBm25Docs(spark: org.apache.spark.sql.SparkSession,
-                        table: String, ids: DataFrame, idCol: String,
+  def tombstoneBm25Docs(table: String, ids: DataFrame, idCol: String,
                         batchId: Long,
                         deltaPath: Option[String] = None): Long = {
+    val spark = ids.sparkSession
     val baseDocs = spark.table(s"${table}_docs").select(col("doc_id"), col("dl"))
     val docs = deltaPath match {
       case Some(p) if hasBatchDirs(spark, s"$p/docs") =>

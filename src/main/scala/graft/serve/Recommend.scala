@@ -139,8 +139,7 @@ object Recommend {
     * result with a batch-id-keyed overwrite; a micro-batch of U users
     * costs O(U × probed cells), independent of the user universe, and the
     * store stays read-only to the stream. */
-  def recommendFromStore(spark: org.apache.spark.sql.SparkSession, table: String,
-                         userFactors: DataFrame,
+  def recommendFromStore(table: String, userFactors: DataFrame,
                          centroids: Seq[(Long, Seq[Double])], nProbe: Int,
                          k: Int = 20, biasDamping: Double = 0.05): DataFrame = {
     val probes = userFactors
@@ -154,7 +153,8 @@ object Recommend {
     // deleted (tombstoned) catalog items are anti-joined out of the
     // bucket-pruned slice — zero-cost until the first recorded delete
     val scored = graft.ops.Stores.minusTombstones(
-        spark.table(table).filter(col("cell").isin(probedCells: _*)),
+        userFactors.sparkSession.table(table)
+          .filter(col("cell").isin(probedCells: _*)),
         table, idName = "id")
       .join(broadcast(probes), Seq("cell"))
       .withColumn("score", VectorOps.dot(col("u"), col("vec")) + lit(biasDamping) * col("bias"))
@@ -201,7 +201,7 @@ object Recommend {
         writeCatalogStore(itemFactors, itemRatingCounts, centroids, table,
           numBuckets = centroids.size, popularityFloor = popularityFloor)
         // the store is written: the returned frame reads the table only
-        recommendFromStore(itemFactors.sparkSession, table, userFactors,
+        recommendFromStore(table, userFactors,
           centroids, annProbe, k, biasDamping)
       }
     } finally eligible.unpersist(blocking = false)

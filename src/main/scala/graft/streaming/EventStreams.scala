@@ -21,11 +21,6 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * interactions.writeStream.foreachBatch { (b: DataFrame, id: Long) =>
   *   GraphCF.writeEdgeBatch(b, "user", "item", path, id) }
   * }}}
-  * A writer that takes a `SparkSession` gets the batch's own,
-  * `b.sparkSession`: the stream runs each micro-batch in a clone of the
-  * caller's session, and a table store appended through one session can
-  * read back stale through the other (given the caller's session,
-  * `Dedup.appendDigests` left the caller counting 2 of 4 digests).
   * Micro-batch delivery is at-least-once: after a failure the latest batch
   * is delivered again under the same id. The stream is exactly-once when
   * its writer either OVERWRITES a directory keyed by `batchId` (the replay

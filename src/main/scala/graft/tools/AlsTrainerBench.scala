@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** At-scale validation of the custom EXPLICIT-ALS trainers — the
@@ -12,7 +11,7 @@ import org.apache.spark.sql.functions._
   * MovieLens-25M-SHAPED explicit corpus DISTRIBUTIVELY (spark.range +
   * hash math, nothing corpus-sized on the driver), train a fixed number
   * of sweeps, and print per-sweep wall time plus the run's data-movement
-  * profile (shuffle/spill via [[graft.MovementListener]] — the auditable
+  * profile (shuffle/spill via [[Harness.MovementListener]] — the auditable
   * form of "the aggregation is map-side partial").
   *
   * Corpus shape: movie popularity is Zipf-skewed (square-law transform of
@@ -57,29 +56,12 @@ object AlsTrainerBench {
     val warmMode = args.length > 5 && args(5) == "warm"
     val bcastEntities =
       if (args.length > 6) args(6).toLong else 10000000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val shufflePartitions =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionNum",
-        shufflePartitions)
-      .config("spark.sql.warehouse.dir", graft.Verify.runWarehouse())
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val mv = new graft.MovementListener
+    val spark = Harness.session()
+    val mv = new Harness.MovementListener
     spark.sparkContext.addSparkListener(mv)
 
-    // per-(user, draw) Zipf-skewed movie pick + half-star rating grid
-    val u01 = pmod(xxhash64(col("user"), col("j")), lit(1000003L))
-      .cast("double") / 1000003.0
-    val ratings = spark.range(nUsers.toLong)
-      .select(col("id").cast("int").as("user"))
-      .crossJoin(spark.range(ratingsPerUser.toLong).select(col("id").as("j")))
-      .select(col("user"), floor(u01 * u01 * nItems).cast("int").as("movie"))
-      .distinct() // per-user duplicate draws collapse, like a ratings dedup
+    // Zipf-skewed movie picks + a half-star rating grid
+    val ratings = TrainerBench.zipfCorpus(spark, nUsers, nItems, ratingsPerUser, "movie")
       .withColumn("rating",
         (pmod(xxhash64(col("user"), col("movie"), lit(7L)), lit(10L))
           .cast("double") + 1.0) * 0.5)

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** At-scale trainer validation: synthesize a MovieLens-shaped implicit
@@ -27,27 +27,8 @@ object TrainerBench {
     require(args.length == 5,
       "usage: TrainerBench <nUsers> <nItems> <posPerUser> <epochs> <blocks>")
     val Array(nUsers, nItems, posPerUser, epochs, blocks) = args.map(_.toInt)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.warehouse.dir", graft.Verify.runWarehouse())
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // per-(user, draw) deterministic skewed item pick: u01 in [0,1) from a
-    // 64-bit hash, item = floor(N * u01^2) — quadratic transform piles
-    // mass on low item ids (a Zipf-ish head) without any driver state
-    val u01 = pmod(xxhash64(col("user"), col("j")), lit(1000003L))
-      .cast("double") / 1000003.0
-    val positives = spark.range(nUsers.toLong)
-      .select(col("id").cast("int").as("user"))
-      .crossJoin(spark.range(posPerUser.toLong).select(col("id").as("j")))
-      .select(col("user"),
-        floor(u01 * u01 * nItems).cast("int").as("item"))
-      .distinct() // collisions within a user collapse, like a ratings dedup
-      .persist()
+    val spark = Harness.session()
+    val positives = zipfCorpus(spark, nUsers, nItems, posPerUser, "item").persist()
     val nPos = positives.count()
 
     val t0 = System.nanoTime()
@@ -67,5 +48,23 @@ object TrainerBench {
       f""""per_epoch_sec":${trainSec / epochs}%.2f,"eval_sec":$evalSec%.2f,""" +
       f""""p_at_50":${pr.getDouble(0)}%.4f,"r_at_50":${pr.getDouble(1)}%.4f}""")
     spark.stop()
+  }
+
+  /** The synthetic corpus of the trainer benches, built distributively
+    * (spark.range + hash math, nothing corpus-sized on the driver):
+    * `(user, itemCol)` rows, `perUser` draws per user. Per-(user, draw)
+    * deterministic skewed item pick: u01 in [0,1) from a 64-bit hash,
+    * item = floor(nItems * u01^2) — the quadratic transform piles mass on
+    * low item ids (a Zipf-ish head) without any driver state. Duplicate
+    * draws within a user collapse, like a ratings dedup. */
+  def zipfCorpus(spark: SparkSession, nUsers: Int, nItems: Int, perUser: Int,
+                 itemCol: String): DataFrame = {
+    val u01 = pmod(xxhash64(col("user"), col("j")), lit(1000003L))
+      .cast("double") / 1000003.0
+    spark.range(nUsers.toLong)
+      .select(col("id").cast("int").as("user"))
+      .crossJoin(spark.range(perUser.toLong).select(col("id").as("j")))
+      .select(col("user"), floor(u01 * u01 * nItems).cast("int").as(itemCol))
+      .distinct()
   }
 }

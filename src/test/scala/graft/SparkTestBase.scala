@@ -12,6 +12,7 @@ object SparkTestBase {
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
+    .config("spark.sql.warehouse.dir", graft.tools.Harness.runWarehouse())
     .getOrCreate()
 }
 

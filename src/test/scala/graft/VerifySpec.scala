@@ -10,7 +10,7 @@ class VerifySpec extends AnyFunSuite {
     for (s <- Seq("/data/sf0.1", "C:\\bench\\out.json", "/tmp/x\"y",
       "tab\there\r\nline\u0001end", "")) {
       // a field of a result line, as Bench prints it
-      val tree = mapper.readTree(s"""{"sf":${Verify.jsonString(s)},"cpus":4}""")
+      val tree = mapper.readTree(s"""{"sf":${tools.Harness.jsonString(s)},"cpus":4}""")
       assert(tree.get("sf").asText() == s)
     }
   }

@@ -36,12 +36,12 @@ class DigestStoreSpec extends SparkTestBase {
   test("append folds only keeps; replayed append appends nothing") {
     Stores.dropStore(spark, "tst_digest_a")
     Dedup.writeDigestStore(corpus, "doc_id", "text", "tst_digest_a", numBuckets = 4)
-    Dedup.appendDigests(spark, "tst_digest_a", batch, "doc_id", "text", numBuckets = 4)
+    Dedup.appendDigests("tst_digest_a", batch, "doc_id", "text", numBuckets = 4)
     assert(spark.table("tst_digest_a").count() == 4L) // +fresh, +entirely new
     // re-probe: everything in the batch is now a corpus dup
     assert(verdicts("tst_digest_a").forall { case (_, dup, keep) => dup && !keep })
     // replay the SAME append: keep set is empty against the current store
-    Dedup.appendDigests(spark, "tst_digest_a", batch, "doc_id", "text", numBuckets = 4)
+    Dedup.appendDigests("tst_digest_a", batch, "doc_id", "text", numBuckets = 4)
     assert(spark.table("tst_digest_a").count() == 4L)
     Stores.dropStore(spark, "tst_digest_a")
   }
@@ -75,7 +75,7 @@ class DigestStoreSpec extends SparkTestBase {
     val in = MemoryStream[(Long, String)]
     val q = in.toDF().toDF("doc_id", "text").writeStream
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-        Dedup.appendDigests(b.sparkSession, "tst_digest_s", b, "doc_id", "text", numBuckets = 4) }
+        Dedup.appendDigests("tst_digest_s", b, "doc_id", "text", numBuckets = 4) }
       .option("checkpointLocation",
         java.nio.file.Files.createTempDirectory("dg_ckpt").toString)
       .start()

@@ -157,7 +157,7 @@ class StoresSpec extends SparkTestBase {
       "st_cat", numBuckets = 2)
     try {
       Stores.addTombstones(Seq(100L, 202L).toDF("id"), "id", "st_cat", 0L)
-      val served = graft.serve.Recommend.recommendFromStore(spark, "st_cat",
+      val served = graft.serve.Recommend.recommendFromStore("st_cat",
           users, centroids, nProbe = 2, k = 10)
         .select($"item_id").as[Long].collect().toSet
       assert(served == Set(101L, 102L, 200L, 201L))
@@ -210,7 +210,7 @@ class StoresSpec extends SparkTestBase {
     Terms.dropBm25Store(spark, "st_bm25_g1"); Terms.dropBm25Store(spark, "st_bm25_g2")
     Terms.writeBm25Store(docs, "doc_id", "text", "st_bm25_g1", numBuckets = 4)
     Stores.publishVersion(spark, alias, "st_bm25_g1")
-    Terms.tombstoneBm25Docs(spark, "st_bm25_g1", Seq(2L).toDF("doc_id"),
+    Terms.tombstoneBm25Docs("st_bm25_g1", Seq(2L).toDF("doc_id"),
       "doc_id", batchId = 0L)
     Terms.compactBm25Store(spark, "st_bm25_g1", "st_bm25_g2",
       numBuckets = 4, publishAlias = Some(alias))

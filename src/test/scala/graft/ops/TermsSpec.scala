@@ -403,9 +403,9 @@ class TermsSpec extends SparkTestBase {
     // batch 1: a content doc, the zero-token doc, and a never-indexed id
     // (ignored); batch 2 OVERLAPS batch 1 on doc 2 — the already-tombstoned
     // exclusion must keep the stats adjustment exact
-    assert(Terms.tombstoneBm25Docs(spark, "tst_bm25_del",
+    assert(Terms.tombstoneBm25Docs("tst_bm25_del",
       Seq(2L, 4L, 99L).toDF("doc_id"), "doc_id", batchId = 1L) == 2L)
-    assert(Terms.tombstoneBm25Docs(spark, "tst_bm25_del",
+    assert(Terms.tombstoneBm25Docs("tst_bm25_del",
       Seq(2L, 6L).toDF("doc_id"), "doc_id", batchId = 2L) == 1L)
     Terms.writeBm25Store(docs.filter(!col("doc_id").isin(2L, 4L, 6L)),
       "doc_id", "text", "tst_bm25_del_reb", numBuckets = 8)
@@ -424,7 +424,7 @@ class TermsSpec extends SparkTestBase {
         searchRows("tst_bm25_del_reb", ts).map(r => (r._1, r._3, r._4)),
         s"batch query $qid")
     // replaying delete batch 2 rewrites identical artifacts — no double-subtract
-    assert(Terms.tombstoneBm25Docs(spark, "tst_bm25_del",
+    assert(Terms.tombstoneBm25Docs("tst_bm25_del",
       Seq(2L, 6L).toDF("doc_id"), "doc_id", batchId = 2L) == 1L)
     for (q <- qs)
       assert(searchRows("tst_bm25_del", q) == searchRows("tst_bm25_del_reb", q),
@@ -458,7 +458,7 @@ class TermsSpec extends SparkTestBase {
     Terms.writeBm25DeltaBatch(b0, "doc_id", "text", delta, 0L)
     Terms.writeBm25DeltaBatch(b1, "doc_id", "text", delta, 1L)
     // doc 3 exists ONLY in delta batch 0; doc 2 in the base
-    assert(Terms.tombstoneBm25Docs(spark, "tst_bm25_dd",
+    assert(Terms.tombstoneBm25Docs("tst_bm25_dd",
       Seq(3L, 2L).toDF("doc_id"), "doc_id", batchId = 1L,
       deltaPath = Some(delta)) == 2L)
     Terms.writeBm25Store(base.filter(col("doc_id") =!= 2L).unionByName(b1),
@@ -530,7 +530,7 @@ class TermsSpec extends SparkTestBase {
     Terms.writeBm25Store(base, "doc_id", "text", "tst_bm25_bd", numBuckets = 8)
     Terms.writeBm25DeltaBatch(b0, "doc_id", "text", delta, 0L)
     // also delete a doc so the batch+delta path sees tombstones
-    assert(Terms.tombstoneBm25Docs(spark, "tst_bm25_bd",
+    assert(Terms.tombstoneBm25Docs("tst_bm25_bd",
       Seq(2L).toDF("doc_id"), "doc_id", batchId = 0L,
       deltaPath = Some(delta)) == 1L)
     val sets = Map(0L -> Seq("vector", "filter"), 1L -> Seq("apple"),
@@ -566,7 +566,7 @@ class TermsSpec extends SparkTestBase {
     val in = MemoryStream[Long]
     val q = in.toDF().toDF("doc_id").writeStream
       .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-        Terms.tombstoneBm25Docs(b.sparkSession, "tst_bm25_sdel", b, "doc_id", id); () }
+        Terms.tombstoneBm25Docs("tst_bm25_sdel", b, "doc_id", id); () }
       .option("checkpointLocation",
         java.nio.file.Files.createTempDirectory("bm25_sdel_ckpt").toString)
       .start()

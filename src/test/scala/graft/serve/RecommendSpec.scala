@@ -33,12 +33,12 @@ class RecommendSpec extends SparkTestBase {
       items.select("features"), "features", 8, seed = 7L)
     Recommend.writeCatalogStore(items, counts, centroids, "rec_store", numBuckets = 8)
     try {
-      val ann = Recommend.recommendFromStore(spark, "rec_store", users,
+      val ann = Recommend.recommendFromStore("rec_store", users,
         centroids, nProbe = 4, k = 20)
       // bucket pruning: the store scan must read fewer buckets than exist
       // when the probed cell set is a strict subset (not guaranteed for
       // every seed, so assert the scan at nProbe=1 on one user)
-      val oneUser = Recommend.recommendFromStore(spark, "rec_store",
+      val oneUser = Recommend.recommendFromStore("rec_store",
         users.filter(col("id") === 0), centroids, nProbe = 1, k = 20)
       val scanLine = oneUser.queryExecution.executedPlan.toString.linesIterator
         .find(_.contains("SelectedBucketsCount"))
@@ -65,7 +65,7 @@ class RecommendSpec extends SparkTestBase {
     try {
       val exact = Recommend.recommend(users, items, counts, k = 20)
         .as[(Int, Int, Double, Int)].collect().toSet
-      val full = Recommend.recommendFromStore(spark, "rec_store_full", users,
+      val full = Recommend.recommendFromStore("rec_store_full", users,
         centroids, nProbe = 8, k = 20)
         .as[(Int, Int, Double, Int)].collect().toSet
       assert(full == exact) // all cells probed = the same scored set
@@ -153,9 +153,9 @@ class RecommendSpec extends SparkTestBase {
     try {
       Recommend.appendToCatalogStore(newItems, newCounts, centroids,
         "rec_store_inc", numBuckets = 8)
-      val inc = Recommend.recommendFromStore(spark, "rec_store_inc", users,
+      val inc = Recommend.recommendFromStore("rec_store_inc", users,
         centroids, nProbe = 8, k = 20).as[(Int, Int, Double, Int)].collect().toSet
-      val rw = Recommend.recommendFromStore(spark, "rec_store_rw", users,
+      val rw = Recommend.recommendFromStore("rec_store_rw", users,
         centroids, nProbe = 8, k = 20).as[(Int, Int, Double, Int)].collect().toSet
       assert(inc == rw)
       assert(inc.exists(_._2 == 1000), "servable newcomer must be rankable")
@@ -178,7 +178,7 @@ class RecommendSpec extends SparkTestBase {
       val in = MemoryStream[(Int, Seq[Double])]
       val q = in.toDF().toDF("id", "features").writeStream
         .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-          Recommend.recommendFromStore(b.sparkSession, "rec_stream_store", b, centroids,
+          Recommend.recommendFromStore("rec_stream_store", b, centroids,
               nProbe = 4, k = 5)
             .write.mode("overwrite").parquet(s"$outDir/batch=$id") }
         .start()
@@ -190,7 +190,7 @@ class RecommendSpec extends SparkTestBase {
       def served(dir: String) = spark.read.parquet(dir)
         .as[(Int, Int, Double, Int)].collect().toSet
       def batchServe(us: Seq[(Int, Seq[Double])]) =
-        Recommend.recommendFromStore(spark, "rec_stream_store",
+        Recommend.recommendFromStore("rec_stream_store",
             us.toDF("id", "features"), centroids, nProbe = 4, k = 5)
           .as[(Int, Int, Double, Int)].collect().toSet
       assert(served(s"$outDir/batch=0") == batchServe(batch0.take(10).toSeq))

@@ -105,7 +105,7 @@ class BatchReplaySpec extends SparkTestBase {
       root => Seq("post", "docs", "stats").flatMap(d => parquetRows(s"$root/$d"))),
     Store("Terms.tombstoneBm25Docs",
       () => Seq(1L).toDF("doc_id"), () => Seq(1L, 2L).toDF("doc_id"),
-      (root, b, id) => { Terms.tombstoneBm25Docs(spark, tableOf(root), b, "doc_id", id); () },
+      (root, b, id) => { Terms.tombstoneBm25Docs(tableOf(root), b, "doc_id", id); () },
       root => parquetRows(warehouse(s"${tableOf(root)}_tombstones")) ++
         parquetRows(warehouse(s"${tableOf(root)}_stats_tomb")),
       setup = root => Terms.writeBm25Store(
@@ -119,7 +119,7 @@ class BatchReplaySpec extends SparkTestBase {
       teardown = root => Stores.dropStore(spark, tableOf(root))),
     Store("Dedup.appendDigests",
       docs((10L, "hello world")), docs((11L, "fresh content"), (12L, "hello world")),
-      (root, b, _) => Dedup.appendDigests(spark, tableOf(root), b, "doc_id", "text",
+      (root, b, _) => Dedup.appendDigests(tableOf(root), b, "doc_id", "text",
         numBuckets = 2),
       root => rows(spark.table(tableOf(root))),
       setup = root => Dedup.writeDigestStore(Seq((1L, "old text")).toDF("doc_id", "text"),
