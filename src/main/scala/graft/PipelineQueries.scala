@@ -3078,7 +3078,8 @@ object PipelineQueries {
            |       round(n / CAST(sum(n) OVER (PARTITION BY from_type) AS DOUBLE), 6) AS p
            |FROM c ORDER BY from_type, to_type""".stripMargin))
 
-  /** Graph random-walk recommendations ([[graft.ops.GraphCF.p3alphaRecs]]):
+  /** Graph random-walk recommendations
+    * ([[graft.ops.GraphCF.p3alphaRecsFromEdges]]):
     * top-10 P3alpha items per user over the customer-supplier interaction
     * graph (orders ⋈ lineitem), transitions quantized to integer
     * fixed-point so the whole 3-hop walk is order-free long arithmetic —
@@ -3097,8 +3098,9 @@ object PipelineQueries {
         .join(lineitem(s, d).select(col("l_orderkey"), col("l_suppkey")),
           col("o_orderkey") === col("l_orderkey"))
         .select(col("o_custkey").as("cust"), col("l_suppkey").as("supp"))
-      GraphCF.p3alphaRecs(inter, "cust", "supp", k = 10, neighbors = 20,
-          maxHistory = 50)
+      GraphCF.p3alphaRecsFromEdges(
+          GraphCF.edges(inter, "cust", "supp", maxHistory = 50),
+          "cust", "supp", k = 10, neighbors = 20)
         .orderBy(col("cust"), col("rnk"))
     },
     Some("""WITH e0 AS (SELECT o_custkey AS u, l_suppkey AS i,
@@ -3173,9 +3175,10 @@ object PipelineQueries {
       def inter(o: org.apache.spark.sql.DataFrame) =
         o.join(li, col("o_orderkey") === col("l_orderkey"))
           .select(col("o_custkey").as("cust"), col("l_suppkey").as("supp"))
-      val recs = GraphCF.p3alphaRecs(
-        inter(ordAll.filter(col("o_orderdate") < cut)),
-        "cust", "supp", k = 10, neighbors = 20, maxHistory = 50)
+      val recs = GraphCF.p3alphaRecsFromEdges(
+        GraphCF.edges(inter(ordAll.filter(col("o_orderdate") < cut)),
+          "cust", "supp", maxHistory = 50),
+        "cust", "supp", k = 10, neighbors = 20)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val test = inter(ordAll.filter(col("o_orderdate") >= cut)).distinct()
       val hits = recs.join(test, Seq("cust", "supp"))
@@ -3238,7 +3241,8 @@ object PipelineQueries {
            |         AS hit_rate
            |FROM ev""".stripMargin))
 
-  /** ItemKNN-cosine recommendations ([[graft.ops.GraphCF.itemKnnRecs]]):
+  /** ItemKNN-cosine recommendations
+    * ([[graft.ops.GraphCF.itemKnnRecsFromEdges]]):
     * top-10 items per user by truncated item-item cosine over the same
     * customer-supplier interaction graph as q160 — the model-free
     * neighborhood baseline beside the random-walk one. Co-counts and
@@ -3255,8 +3259,9 @@ object PipelineQueries {
         .join(lineitem(s, d).select(col("l_orderkey"), col("l_suppkey")),
           col("o_orderkey") === col("l_orderkey"))
         .select(col("o_custkey").as("cust"), col("l_suppkey").as("supp"))
-      GraphCF.itemKnnRecs(inter, "cust", "supp", k = 10, neighbors = 20,
-          maxHistory = 50)
+      GraphCF.itemKnnRecsFromEdges(
+          GraphCF.edges(inter, "cust", "supp", maxHistory = 50),
+          "cust", "supp", k = 10, neighbors = 20)
         .orderBy(col("cust"), col("rnk"))
     },
     Some("""WITH e0 AS (SELECT o_custkey AS u, l_suppkey AS i,
@@ -3537,9 +3542,10 @@ object PipelineQueries {
 
   /** Big-catalog neighborhood recommendations — ItemKNN over the
     * customer-PART graph, a catalog 20× the supplier one (20k parts at
-    * sf0.1, past the 10k broadcast threshold): above `broadcastItems`
-    * the truncated similarity matrix stays DISTRIBUTED and shuffle-joins
-    * on the item key instead of broadcasting — the plan that carries a
+    * sf0.1, past GraphCF's 10k broadcast threshold): the input's
+    * distinct-item count picks the join, and above the threshold the
+    * truncated similarity matrix stays DISTRIBUTED and shuffle-joins on
+    * the item key instead of broadcasting — the plan that carries a
     * 59k-movie catalog (the reference's own MovieLens shape,
     * explicit_ratings/functions.py:33-36) or a 100-TB item catalog.
     * Both modes are bit-identical (GraphCFSpec differential), so the
@@ -3553,8 +3559,9 @@ object PipelineQueries {
         .join(lineitem(s, d).select(col("l_orderkey"), col("l_partkey")),
           col("o_orderkey") === col("l_orderkey"))
         .select(col("o_custkey").as("cust"), col("l_partkey").as("part"))
-      GraphCF.itemKnnRecs(inter, "cust", "part", k = 5, neighbors = 10,
-          maxHistory = 20)
+      GraphCF.itemKnnRecsFromEdges(
+          GraphCF.edges(inter, "cust", "part", maxHistory = 20),
+          "cust", "part", k = 5, neighbors = 10)
         .orderBy(col("cust"), col("rnk"))
     },
     Some("""WITH e0 AS (SELECT o_custkey AS u, l_partkey AS i,
@@ -3607,9 +3614,10 @@ object PipelineQueries {
           .select(col("o_custkey").as("cust"), col("l_suppkey").as("supp"))
       val test = inter(ordAll.filter(col("o_orderdate") >= cut))
         .distinct().persist(lvl)
-      val recs = GraphCF.p3alphaRecs(
-        inter(ordAll.filter(col("o_orderdate") < cut)),
-        "cust", "supp", k = 10, neighbors = 20, maxHistory = 50)
+      val recs = GraphCF.p3alphaRecsFromEdges(
+        GraphCF.edges(inter(ordAll.filter(col("o_orderdate") < cut)),
+          "cust", "supp", maxHistory = 50),
+        "cust", "supp", k = 10, neighbors = 20)
         .persist(lvl)
       // hit rows carry their rank; the tiny k-grid joins on rnk <= k so
       // every grid point reads the SAME scored frame (no model re-run)
@@ -3687,8 +3695,9 @@ object PipelineQueries {
         .join(lineitem(s, d).select(col("l_orderkey"), col("l_suppkey")),
           col("o_orderkey") === col("l_orderkey"))
         .select(col("o_custkey").as("cust"), col("l_suppkey").as("supp"))
-      val recs = GraphCF.itemKnnRecs(inter, "cust", "supp", k = 10,
-          neighbors = 20, maxHistory = 50)
+      val recs = GraphCF.itemKnnRecsFromEdges(
+          GraphCF.edges(inter, "cust", "supp", maxHistory = 50),
+          "cust", "supp", k = 10, neighbors = 20)
         .persist(lvl)
       val catalog = supplier(s, d).agg(count(lit(1)).as("n_catalog"))
       val grid = Seq(5L, 10L).toDF("k")
@@ -3799,7 +3808,8 @@ object PipelineQueries {
 
   /** ItemKNN served OFF THE STANDING EDGE STORE
     * ([[graft.ops.GraphCF.writeEdgeBatch]] /
-    * [[graft.ops.GraphCF.itemKnnRecsFromStore]]): the interaction log
+    * [[graft.ops.GraphCF.edgesFromStore]] +
+    * [[graft.ops.GraphCF.itemKnnRecsFromEdges]]): the interaction log
     * lands as FOUR batch partials (mod-4 on the order key, so a
     * (customer, supplier) pair's counts split across batches and the
     * fold must merge them), then recs serve from the folded store. Edge
@@ -3839,8 +3849,9 @@ object PipelineQueries {
   private val q173 = Q("q173_store_recs",
     (s, d) => {
       val dir = custSuppEdgeStore(s, d, "q173_edges")
-      GraphCF.itemKnnRecsFromStore(s, dir, "cust", "supp",
-          k = 10, neighbors = 20, maxHistory = 50)
+      GraphCF.itemKnnRecsFromEdges(
+          GraphCF.edgesFromStore(s, dir, maxHistory = 50),
+          "cust", "supp", k = 10, neighbors = 20)
         .orderBy(col("cust"), col("rnk"))
     },
     Some("""WITH e0 AS (SELECT o_custkey AS u, l_suppkey AS i,
@@ -3979,7 +3990,8 @@ object PipelineQueries {
         "round(avg(value), 6) AS value FROM events GROUP BY user_id")))
 
   /** P3alpha served OFF THE STANDING EDGE STORE
-    * ([[graft.ops.GraphCF.p3alphaRecsFromStore]]) — the q173 pattern for
+    * ([[graft.ops.GraphCF.edgesFromStore]] +
+    * [[graft.ops.GraphCF.p3alphaRecsFromEdges]]) — the q173 pattern for
     * the family's OTHER model: the log lands as four mod-4 batch
     * partials, the walk state (du/di/pui/piu) derives from the folded
     * (u, i, w) frame, and the oracle replays the ONE-SHOT build over the
@@ -3991,8 +4003,9 @@ object PipelineQueries {
   private val q175 = Q("q175_store_p3alpha",
     (s, d) => {
       val dir = custSuppEdgeStore(s, d, "q175_edges")
-      GraphCF.p3alphaRecsFromStore(s, dir, "cust", "supp",
-          k = 10, neighbors = 20, maxHistory = 50)
+      GraphCF.p3alphaRecsFromEdges(
+          GraphCF.edgesFromStore(s, dir, maxHistory = 50),
+          "cust", "supp", k = 10, neighbors = 20)
         .orderBy(col("cust"), col("rnk"))
     },
     Some("""WITH e0 AS (SELECT o_custkey AS u, l_suppkey AS i,
@@ -4138,9 +4151,10 @@ object PipelineQueries {
           .select(col("o_custkey").as("cust"), col("l_suppkey").as("supp"))
       val test = inter(ordAll.filter(col("o_orderdate") >= cut))
         .distinct().persist(lvl)
-      val recs = GraphCF.p3alphaRecs(
-        inter(ordAll.filter(col("o_orderdate") < cut)),
-        "cust", "supp", k = 10, neighbors = 20, maxHistory = 50)
+      val recs = GraphCF.p3alphaRecsFromEdges(
+        GraphCF.edges(inter(ordAll.filter(col("o_orderdate") < cut)),
+          "cust", "supp", maxHistory = 50),
+        "cust", "supp", k = 10, neighbors = 20)
         .persist(lvl)
       graft.model.Metrics.rankingMetricsQ(recs, test, "cust", "supp",
           "rnk", 10)
@@ -4165,8 +4179,9 @@ object PipelineQueries {
         .join(lineitem(s, d).select(col("l_orderkey"), col("l_suppkey")),
           col("o_orderkey") === col("l_orderkey"))
         .select(col("o_custkey").as("cust"), col("l_suppkey").as("supp"))
-      val recs = GraphCF.itemKnnRecs(inter, "cust", "supp", k = 10,
-          neighbors = 20, maxHistory = 50)
+      val recs = GraphCF.itemKnnRecsFromEdges(
+          GraphCF.edges(inter, "cust", "supp", maxHistory = 50),
+          "cust", "supp", k = 10, neighbors = 20)
         .persist(lvl)
       graft.model.Metrics.recConcentrationQ(recs,
         supplier(s, d).select(col("s_suppkey").as("supp")), "supp")
@@ -4518,7 +4533,7 @@ object PipelineQueries {
     })
 
   /** USER-KNN cosine recommendations
-    * ([[graft.ops.GraphCF.userKnnRecs]]): the third classical
+    * ([[graft.ops.GraphCF.userKnnRecsFromEdges]]): the third classical
     * neighborhood model beside ItemKNN (q163) and P3alpha (q160) —
     * similar users vote with their histories. Both scale caps are
     * exercised at the driver gate: per-user histories (maxHistory = 50)
@@ -4534,8 +4549,9 @@ object PipelineQueries {
         .join(lineitem(s, d).select(col("l_orderkey"), col("l_suppkey")),
           col("o_orderkey") === col("l_orderkey"))
         .select(col("o_custkey").as("cust"), col("l_suppkey").as("supp"))
-      GraphCF.userKnnRecs(inter, "cust", "supp", k = 10,
-          neighbors = 20, maxHistory = 50, maxAudience = 50)
+      GraphCF.userKnnRecsFromEdges(
+          GraphCF.edges(inter, "cust", "supp", maxHistory = 50),
+          "cust", "supp", k = 10, neighbors = 20, maxAudience = 50)
         .orderBy(col("cust"), col("rnk"))
     },
     Some("""WITH e0 AS (SELECT o_custkey AS u, l_suppkey AS i,
@@ -4790,8 +4806,10 @@ object PipelineQueries {
         o.join(li, col("o_orderkey") === col("l_orderkey"))
           .select(col("o_custkey").as("cust"), col("l_suppkey").as("supp"))
       val test = inter(ro.filter(col("__rn") === 1)).distinct().persist(lvl)
-      val recs = GraphCF.itemKnnRecs(inter(ro.filter(col("__rn") > 1)),
-          "cust", "supp", k = 10, neighbors = 20, maxHistory = 50)
+      val recs = GraphCF.itemKnnRecsFromEdges(
+          GraphCF.edges(inter(ro.filter(col("__rn") > 1)),
+            "cust", "supp", maxHistory = 50),
+          "cust", "supp", k = 10, neighbors = 20)
         .persist(lvl)
       graft.model.Metrics.rankingMetricsQ(recs, test, "cust", "supp",
           "rnk", 10)
@@ -5262,8 +5280,8 @@ object PipelineQueries {
   private val q196 = Q("q196_related_items",
     (s, d) => {
       val dir = custSuppEdgeStore(s, d, "q196_edges")
-      GraphCF.similarItemsFromStore(s, dir, neighbors = 10,
-          maxHistory = 50)
+      GraphCF.similarItems(GraphCF.edgesFromStore(s, dir, maxHistory = 50),
+          neighbors = 10)
         .orderBy(col("item"), col("rnk"))
     },
     Some(s"""WITH $sqlFullEdgesCtes,
@@ -5882,8 +5900,9 @@ object PipelineQueries {
       "probe" -> ph { (s, d) =>
         val dir = new org.apache.hadoop.fs.Path(
           s.conf.get("spark.sql.warehouse.dir"), "q173_edges").toString
-        Some(GraphCF.itemKnnRecsFromStore(s, dir, "cust", "supp",
-            k = 10, neighbors = 20, maxHistory = 50)
+        Some(GraphCF.itemKnnRecsFromEdges(
+            GraphCF.edgesFromStore(s, dir, maxHistory = 50),
+            "cust", "supp", k = 10, neighbors = 20)
           .orderBy(col("cust"), col("rnk")))
       }),
     "q175_store_p3alpha" -> Seq(
@@ -5893,8 +5912,9 @@ object PipelineQueries {
       "probe" -> ph { (s, d) =>
         val dir = new org.apache.hadoop.fs.Path(
           s.conf.get("spark.sql.warehouse.dir"), "q175_edges").toString
-        Some(GraphCF.p3alphaRecsFromStore(s, dir, "cust", "supp",
-            k = 10, neighbors = 20, maxHistory = 50)
+        Some(GraphCF.p3alphaRecsFromEdges(
+            GraphCF.edgesFromStore(s, dir, maxHistory = 50),
+            "cust", "supp", k = 10, neighbors = 20)
           .orderBy(col("cust"), col("rnk")))
       }),
     "q196_related_items" -> Seq(
@@ -5904,8 +5924,8 @@ object PipelineQueries {
       "probe" -> ph { (s, d) =>
         val dir = new org.apache.hadoop.fs.Path(
           s.conf.get("spark.sql.warehouse.dir"), "q196_edges").toString
-        Some(GraphCF.similarItemsFromStore(s, dir, neighbors = 10,
-            maxHistory = 50)
+        Some(GraphCF.similarItems(
+            GraphCF.edgesFromStore(s, dir, maxHistory = 50), neighbors = 10)
           .orderBy(col("item"), col("rnk")))
       }),
     "q190_markov_from_store" -> Seq(

@@ -31,15 +31,17 @@ import org.apache.spark.sql.functions._
   *     entries (integer mass, id tie-break) before the user-side scoring
   *     join — caps that fanout at edges × N instead of edges × |catalog|
   *     (measured 5× on q160).
-  *  3. `broadcastItems` picks the physical join for the truncated
-  *     similarity matrix (≤ |items|·neighbors rows): small catalogs
-  *     broadcast it (the classic small-matrix contract — the user side
-  *     never shuffles for scoring); big catalogs keep it DISTRIBUTED and
-  *     shuffle-join on the item key, so there is no catalog-size cliff —
-  *     a 59k-movie catalog (the reference's own MovieLens shape,
-  *     explicit_ratings/functions.py:33-36) runs the same plan a 10k one
-  *     does, just with one more exchange. Both modes are bit-identical;
-  *     GraphCFSpec pins the differential.
+  *  3. The input's size picks the physical join for the truncated
+  *     similarity matrix (≤ |items|·neighbors rows): up to
+  *     [[broadcastKeys]] distinct keys (items; users for UserKNN; `prev`
+  *     items for Markov) broadcast it (the classic small-matrix contract —
+  *     the user side never shuffles for scoring); bigger inputs keep it
+  *     DISTRIBUTED and shuffle-join on the key, so there is no
+  *     catalog-size cliff — a 59k-movie catalog (the reference's own
+  *     MovieLens shape, explicit_ratings/functions.py:33-36) runs the same
+  *     plan a 10k one does, just with one more exchange. Both modes are
+  *     bit-identical; GraphCFSpec pins the differential by padding a
+  *     fixture past the threshold.
   *
   * Overflow budgets (documented, enforced): p3alpha transition rows are
   * sub-stochastic after quantization (Σ_i p(u→i) ≤ scale), so every walk
@@ -50,6 +52,11 @@ import org.apache.spark.sql.functions._
   * frame — and refuses corpora where n₁·n₂ could overflow a long or
   * co·scale could leave the 2⁵³ exact-double range. */
 object GraphCF {
+
+  /** Above this many distinct keys the truncated similarity (or
+    * transition) matrix is shuffle-joined instead of broadcast — lever 3
+    * of the object doc, read off the input by one bounded driver probe. */
+  private[ops] val broadcastKeys = 10000L
 
   /** Aggregate (user,item,weight) edges, optionally capped to each user's
     * top-`maxHistory` interactions by (weight desc, item asc) — an exact,
@@ -66,45 +73,30 @@ object GraphCF {
     * 2× aggregated bytes moved vs 1× raw bytes here, a win whenever the
     * log's repetition ratio raw/distinct(u,i) < 2 (measured 1.28 on the
     * declared cust-supp shape; exactly 1.0 on MovieLens-shaped ratings,
-    * the reference's own data). Repeat-heavy corpora past that ratio
-    * should pre-aggregate upstream and enter via [[edgesFromStore]]-style
-    * partials. The repartition picks up `spark.sql.shuffle.partitions`
-    * and stays AQE-coalescible — no constant tuned to either scale. */
+    * the reference's own data). A repeat-heavy corpus (ratio > 2) moves
+    * MORE bytes this way — the exchange carries raw rows with no map-side
+    * combine and a hot prefix lands in one task un-combined — so such
+    * corpora pre-aggregate upstream and enter through [[edgesFromStore]]
+    * or the `*RecsFromEdges` entry points. Every raw-row builder in this
+    * family (edges, baskets, the folds' tagged pass) uses the same
+    * prefix-keyed layout. The repartition picks up
+    * `spark.sql.shuffle.partitions` and stays AQE-coalescible — no
+    * constant tuned to either scale. */
   private def edgeFrame(interactions: DataFrame, userCol: String,
                         itemCol: String, maxHistory: Int): DataFrame =
-    capEdges(prefixKeyed(interactions
-      .select(col(userCol).as("u"), col(itemCol).as("i")), col("u"))
+    capEdges(interactions
+      .select(col(userCol).as("u"), col(itemCol).as("i"))
+      .repartition(col("u"))
       .groupBy(col("u"), col("i"))
       .agg(count(lit(1)).as("w")), maxHistory)
-
-  /** The one-exchange layout's guard (round 14, closing the round-13
-    * scaladoc rule as code): hash-partition RAW rows on the prefix key so
-    * the aggregation, the cap window and any prefix-keyed self-join all
-    * share ONE exchange — the right trade whenever the log's repetition
-    * ratio raw/distinct(group keys) is < 2 (measured 1.28 on the declared
-    * cust-supp shape, exactly 1.0 on MovieLens-shaped ratings). A
-    * repeat-heavy corpus (ratio > 2) moves MORE bytes this way — the
-    * exchange carries raw rows with no map-side combine (guide §2.3) and
-    * a hot prefix lands in one task un-combined (§2.5) — so such corpora
-    * set `spark.graft.cf.preAggregate=true`, which skips the raw
-    * repartition: the aggregation keeps its own (full-key) exchange with
-    * map-side combine and the window/join pays a second, aggregated-row
-    * exchange — the pre-round-13 shape. Both shapes are bit-identical
-    * (GraphCFSpec pins the differential); the knob is per-corpus session
-    * conf, set where the repetition ratio is known (ingest statistics),
-    * NOT probed per query — an exact probe would cost the very
-    * aggregation it is trying to place. */
-  private def prefixKeyed(raw: DataFrame, key: org.apache.spark.sql.Column): DataFrame =
-    if (raw.sparkSession.conf.get("spark.graft.cf.preAggregate", "false").toBoolean) raw
-    else raw.repartition(key)
 
   /** The history cut alone, on an already-aggregated (u, i, w) frame. */
   private def capEdges(e: DataFrame, maxHistory: Int): DataFrame =
     capBy(e, Seq("u"), "i", maxHistory)
 
   /** Each `by` group keeps its top-`n` rows by (w desc, `tie` asc) — the
-    * one exact, replayable cut behind the history cap, the audience cap
-    * and the folds' per-side caps. */
+    * one exact, replayable cut behind the history cap, the audience cap,
+    * the basket caps and the folds' per-side caps. */
   private def capBy(e: DataFrame, by: Seq[String], tie: String,
                     n: Int): DataFrame =
     if (n == Int.MaxValue) e
@@ -112,10 +104,13 @@ object GraphCF {
       Seq(col("w").desc, col(tie)), n, rankName = "__rc")
       .drop("__rc")
 
-  /** Item-item co-occurrence counts from an aggregated (u, i, w) edge
-    * frame: co(i,j) = Σ_u w_ui·w_uj, both (i,j) directions, exact long
-    * sums. The user-keyed self-join's intermediate is Σ_u deg(u)² pair
-    * rows — the family's quadratic leg (cap histories upstream).
+  /** Co-occurrence counts from an aggregated (u, i, w) edge frame,
+    * walked through `key` between two `s` values: co(s1,s2) =
+    * Σ_key w·w, both directions, exact long sums. Item-item co-counts
+    * walk through users (`key` = u, `s` = i; the self-join's intermediate
+    * is Σ_u deg(u)² pair rows — the family's quadratic leg, cap histories
+    * upstream); user-user co-counts are the transpose (`key` = i,
+    * `s` = u; Σ_i aud(i)² pair rows, cap audiences upstream).
     *
     * Physical shape: the matrix is SYMMETRIC (the product w1·w2
     * commutes), so only the s1 < s2 HALF is generated and aggregated —
@@ -141,12 +136,13 @@ object GraphCF {
     * (`spark.sql.adaptive.coalescePartitions.minPartitionNum`), which
     * graft.Bench sets alongside the partitions knob; measured: the same
     * probe at 256 floored partitions spills ZERO bytes. */
-  private def coPairs(e: DataFrame): DataFrame = halfMirror(
-    e.select(col("u"), col("i").as("s1"), col("w").as("w1"))
-      .join(e.select(col("u"), col("i").as("s2"), col("w").as("w2")), "u")
-      .filter(col("s1") < col("s2"))
-      .groupBy(col("s1"), col("s2"))
-      .agg(sum(col("w1") * col("w2")).as("co")))
+  private def coPairs(e: DataFrame, key: String, s: String): DataFrame =
+    halfMirror(
+      e.select(col(key), col(s).as("s1"), col("w").as("w1"))
+        .join(e.select(col(key), col(s).as("s2"), col("w").as("w2")), key)
+        .filter(col("s1") < col("s2"))
+        .groupBy(col("s1"), col("s2"))
+        .agg(sum(col("w1") * col("w2")).as("co")))
 
   /** Mirror a strictly-upper-triangular (s1 < s2) co frame to the full
     * symmetric matrix in ONE pass: each half row is emitted twice by a
@@ -171,19 +167,6 @@ object GraphCF {
     * quadratic leg at Σ_i min(aud, A)². */
   private def capAudience(e: DataFrame, maxAudience: Int): DataFrame =
     capBy(e, Seq("i"), "u", maxAudience)
-
-  /** User-user co-occurrence counts from an aggregated (u, i, w) edge
-    * frame: co(u1,u2) = Σ_i w_u1i·w_u2i, both directions, exact long
-    * sums — [[coPairs]] transposed (the item-keyed self-join's
-    * intermediate is Σ_i aud(i)² pair rows; cap audiences upstream).
-    * Same half-pair + one-pass mirror layout as [[coPairs]]: the matrix
-    * is symmetric, so only s1 < s2 is generated and aggregated. */
-  private def coUserPairs(e: DataFrame): DataFrame = halfMirror(
-    e.select(col("i"), col("u").as("s1"), col("w").as("w1"))
-      .join(e.select(col("i"), col("u").as("s2"), col("w").as("w2")), "i")
-      .filter(col("s1") < col("s2"))
-      .groupBy(col("s1"), col("s2"))
-      .agg(sum(col("w1") * col("w2")).as("co")))
 
   /** The aggregated, history-capped (u, i, w) edge frame — the compact
     * standing representation of an interaction log (distinct user-item
@@ -215,31 +198,17 @@ object GraphCF {
                     maxHistory: Int = Int.MaxValue): DataFrame = {
     require(maxHistory >= 1, "maxHistory must be >= 1")
     val w = col(weightCol).cast("long")
-    capEdges(prefixKeyed(interactions
+    capEdges(interactions
       .select(col(userCol).as("u"), col(itemCol).as("i"),
         when(w <= 0L, raise_error(concat(
           lit("edgesWeighted: non-positive weight "), w.cast("string"),
           lit(s" in $weightCol — weights must be positive integers"))))
-          .otherwise(w).as("__w")), col("u")) // one u-keyed exchange serves agg + cap + co-walk (edgeFrame's layout)
+          .otherwise(w).as("__w"))
+      .repartition(col("u")) // one u-keyed exchange serves agg + cap + co-walk (edgeFrame's layout)
       .groupBy(col("u"), col("i"))
       .agg(sum(col("__w")).as("w")), maxHistory)
   }
 
-  /** Top-`k` most-popular unseen items per user — the non-personalized
-    * BASELINE every comparative recommender eval needs (the reference's
-    * experiment flow compares models against a control arm,
-    * explicit_ratings/ab_test.py; offline, the control is popularity).
-    * pop(i) = Σ_u w_ui over the capped edge frame; ties broken by item
-    * id, so lists are bit-replayable.
-    *
-    * Scale shape: a user's top-k unseen items always sit inside the
-    * global top-(k + deg(u)) by popularity, so the candidate pool is the
-    * global top-(k + maxSeen) — a bounded BROADCAST list (maxSeen ≤
-    * maxHistory once histories are capped; one bounded 1-row driver read,
-    * the cosineSimQ guard pattern) — and the per-user leg is a
-    * |users|·|pool| fanout anti-joined against the edge frame, never a
-    * users × catalog product. Exactness is by the pool argument above,
-    * not an approximation. */
   /** Association rules over baskets — support / confidence / lift, the
     * classical "customers also bought" market-basket surface (Agrawal &
     * Srikant 1994's measures; only 1→1 rules, the serving shape): for
@@ -270,35 +239,46 @@ object GraphCF {
     require(scale >= 10L && scale <= 1000000L,
       "scale must be in [10, 10^6] (the exactness budget)")
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    // one b-keyed exchange serves the (b,i) count, the basket-cap window
-    // AND — because the persisted frame keeps the partitioning — the
-    // basket-keyed pair self-join and the distinct-basket count below,
-    // all exchange-free off the cache (the edgeFrame layout argument)
-    val biAgg = prefixKeyed(interactions
-      .select(col(basketCol).as("b"), col(itemCol).as("i")), col("b"))
-      .groupBy(col("b"), col("i"))
-      .agg(count(lit(1)).as("w"))
-    val biCap =
-      if (maxBasket == Int.MaxValue) biAgg
-      else Relational.topKPerGroup(biAgg, Seq(col("b")),
-        Seq(col("w").desc, col("i")), maxBasket, rankName = "__rw")
-        .drop("__rw")
     // cache lifetime: caller-owned release after materialization, the
     // family's documented contract (USAGE.md / GraphCFSpec no-orphan)
-    val bi = biCap.select(col("b"), col("i")).persist(lvl)
+    val bi = basketSets(interactions, basketCol, itemCol, maxBasket)
+      .persist(lvl)
     val itemN = bi.groupBy(col("i")).agg(count(lit(1)).as("s")).persist(lvl)
     val frequent = itemN.filter(col("s") >= minSupport)
-    val biF = bi.join(frequent.select(col("i")), Seq("i"), "left_semi")
-    // pair supports are symmetric (baskets containing {a, c} contain
-    // {c, a}) — the coPairs half-pair + one-pass mirror layout
-    val pairs = halfMirrorCols(biF.select(col("b"), col("i").as("ante"))
-      .join(biF.select(col("b"), col("i").as("cons")), "b")
-      .filter(col("ante") < col("cons"))
-      .groupBy(col("ante"), col("cons"))
-      .agg(count(lit(1)).as("pair_n")), "ante", "cons", "pair_n")
+    val pairs = pairSupports(
+      bi.join(frequent.select(col("i")), Seq("i"), "left_semi"))
     val n = bi.select(col("b")).distinct().count()
     rulesFromStats(itemN, pairs, n, minSupport, k, scale)
   }
+
+  /** The capped (b, i) basket sets behind [[liftRules]] and
+    * [[writeRuleStatsBatch]]: each basket's distinct items, cut to its
+    * top-`maxBasket` by (multiplicity desc, item asc). One b-keyed
+    * exchange serves the (b, i) count, the cap window AND — once the
+    * caller persists the frame, which keeps the partitioning — the
+    * basket-keyed pair self-join and the distinct-basket count,
+    * exchange-free off the cache (the [[edgeFrame]] layout argument). */
+  private def basketSets(interactions: DataFrame, basketCol: String,
+                         itemCol: String, maxBasket: Int): DataFrame =
+    capBy(interactions
+      .select(col(basketCol).as("b"), col(itemCol).as("i"))
+      .repartition(col("b"))
+      .groupBy(col("b"), col("i"))
+      .agg(count(lit(1)).as("w")), Seq("b"), "i", maxBasket)
+      .select(col("b"), col("i"))
+
+  /** (ante, cons, pair_n) basket supports of every item pair of a (b, i)
+    * frame. Supports are symmetric (baskets containing {a, c} contain
+    * {c, a}), so only the ante < cons half is joined and aggregated and
+    * then mirrored in the aggregate's stage — the [[coPairs]] layout,
+    * halving the basket self-join's B² fanout through the partial
+    * aggregation. */
+  private def pairSupports(bi: DataFrame): DataFrame =
+    halfMirrorCols(bi.select(col("b"), col("i").as("ante"))
+      .join(bi.select(col("b"), col("i").as("cons")), "b")
+      .filter(col("ante") < col("cons"))
+      .groupBy(col("ante"), col("cons"))
+      .agg(count(lit(1)).as("pair_n")), "ante", "cons", "pair_n")
 
   /** The shared serving tail of [[liftRules]] / [[liftRulesFromStore]]:
     * thresholds, the quantized confidence/lift projection, and the
@@ -351,27 +331,11 @@ object GraphCF {
     require(maxBasket >= 1, "maxBasket must be >= 1")
     // liftRules' b-partitioned build: the cached bi feeds the pair
     // self-join and the distinct-basket count exchange-free
-    val biAgg = prefixKeyed(batch
-      .select(col(basketCol).as("b"), col(itemCol).as("i")), col("b"))
-      .groupBy(col("b"), col("i"))
-      .agg(count(lit(1)).as("w"))
-    val biCap =
-      if (maxBasket == Int.MaxValue) biAgg
-      else Relational.topKPerGroup(biAgg, Seq(col("b")),
-        Seq(col("w").desc, col("i")), maxBasket, rankName = "__rw")
-        .drop("__rw")
-    val bi = biCap.select(col("b"), col("i"))
+    val bi = basketSets(batch, basketCol, itemCol, maxBasket)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     bi.groupBy(col("i")).agg(count(lit(1)).as("s"))
       .write.mode("overwrite").parquet(s"$path/items/batch=$batchId")
-    // symmetric pair supports: build the s1 < s2 half and mirror it in
-    // the aggregate's stage (the liftRules/coPairs layout) — halves the
-    // basket self-join's B² fanout through the partial aggregation
-    halfMirrorCols(bi.select(col("b"), col("i").as("ante"))
-      .join(bi.select(col("b"), col("i").as("cons")), "b")
-      .filter(col("ante") < col("cons"))
-      .groupBy(col("ante"), col("cons"))
-      .agg(count(lit(1)).as("pair_n")), "ante", "cons", "pair_n")
+    pairSupports(bi)
       .write.mode("overwrite").parquet(s"$path/pairs/batch=$batchId")
     bi.groupBy().agg(countDistinct(col("b")).as("n"))
       .write.mode("overwrite").parquet(s"$path/baskets/batch=$batchId")
@@ -401,6 +365,21 @@ object GraphCF {
     rulesFromStats(itemN, pairs, n, minSupport, k, scale)
   }
 
+  /** Top-`k` most-popular unseen items per user — the non-personalized
+    * BASELINE every comparative recommender eval needs (the reference's
+    * experiment flow compares models against a control arm,
+    * explicit_ratings/ab_test.py; offline, the control is popularity).
+    * pop(i) = Σ_u w_ui over the capped edge frame; ties broken by item
+    * id, so lists are bit-replayable.
+    *
+    * Scale shape: a user's top-k unseen items always sit inside the
+    * global top-(k + deg(u)) by popularity, so the candidate pool is the
+    * global top-(k + maxSeen) — a bounded BROADCAST list (maxSeen ≤
+    * maxHistory once histories are capped; one bounded 1-row driver read,
+    * the cosineSimQ guard pattern) — and the per-user leg is a
+    * |users|·|pool| fanout anti-joined against the edge frame, never a
+    * users × catalog product. Exactness is by the pool argument above,
+    * not an approximation. */
   def popularityRecs(interactions: DataFrame, userCol: String,
                      itemCol: String, k: Int,
                      maxHistory: Int = Int.MaxValue): DataFrame = {
@@ -448,8 +427,9 @@ object GraphCF {
   def edgesFromStore(spark: org.apache.spark.sql.SparkSession, path: String,
                      maxHistory: Int = Int.MaxValue): DataFrame = {
     require(maxHistory >= 1, "maxHistory must be >= 1")
-    capEdges(prefixKeyed(spark.read.option("basePath", path).parquet(path)
-      .select(col("u"), col("i"), col("w")), col("u")) // one u-keyed exchange serves fold + cap + co-walk (edgeFrame's layout)
+    capEdges(spark.read.option("basePath", path).parquet(path)
+      .select(col("u"), col("i"), col("w"))
+      .repartition(col("u")) // one u-keyed exchange serves fold + cap + co-walk (edgeFrame's layout)
       .groupBy(col("u"), col("i")).agg(sum(col("w")).as("w")), maxHistory)
   }
 
@@ -465,8 +445,8 @@ object GraphCF {
     // AdaptiveSparkPlan is un-finalized), so the u-keyed self-join would
     // re-shuffle BOTH cache legs — measured +10M shuffle rows on q172's
     // sibling path; materialized, the cache reports hash(u) and the join
-    // plans exchange-free (the knnFromEdges probe pattern).
-    coPairs(materialized(edgesFromStore(spark, path, maxHistory)))
+    // plans exchange-free (the ItemKNN probe pattern).
+    coPairs(materialized(edgesFromStore(spark, path, maxHistory)), "u", "i")
 
   /** persist(MEMORY_AND_DISK) + eager materialization, so downstream
     * plans see the cache's FINALIZED partitioning instead of unknown —
@@ -481,19 +461,20 @@ object GraphCF {
   }
 
   /** Standing (s1, s2, co) co-occurrence counts from an interaction log
-    * — the maintained state behind an ItemKNN serving layer (aggregated
-    * and history-capped exactly as [[itemKnnRecs]] does it). Keep THIS
-    * frame (and the log's aggregated edges), not the similarity matrix:
-    * co-counts are the additive representation that [[foldCoDelta]] can
-    * maintain incrementally; similarities re-derive from co + norms in
-    * one linear pass. */
+    * — the maintained state behind an ItemKNN serving layer
+    * ([[itemKnnRecsFromEdges]]), aggregated and history-capped exactly as
+    * [[edges]] does it. Keep THIS frame (and the log's aggregated edges),
+    * not the similarity matrix: co-counts are the additive
+    * representation that [[foldCoDelta]] can maintain incrementally;
+    * similarities re-derive from co + norms in one linear pass. */
   def coCounts(interactions: DataFrame, userCol: String, itemCol: String,
                maxHistory: Int = Int.MaxValue): DataFrame = {
     require(maxHistory >= 1, "maxHistory must be >= 1")
     // persist + eager count (see materialized): the co self-join reads
     // the capped frame twice, and only a FINALIZED cache keeps hash(u)
     // so the join plans exchange-free (round 13; caller-owned release)
-    coPairs(materialized(edgeFrame(interactions, userCol, itemCol, maxHistory)))
+    coPairs(materialized(edgeFrame(interactions, userCol, itemCol, maxHistory)),
+      "u", "i")
   }
 
   /** Fold a DELTA of interactions into standing co-occurrence counts
@@ -544,16 +525,16 @@ object GraphCF {
   }
 
   /** The folds' one pass over the log: old rows tagged o = 1 and delta
-    * rows d = 1, unioned, u-keyed ([[prefixKeyed]], so the
-    * `spark.graft.cf.preAggregate` shape applies) and summed per (u, i)
-    * into the old weight `wo`, the delta weight `wd` and the merged
+    * rows d = 1, unioned, u-keyed (the [[edgeFrame]] layout) and summed
+    * per (u, i) into the old weight `wo`, the delta weight `wd` and the merged
     * weight `wn` = wo + wd — every uncapped edge weight either fold needs,
     * on the u partitioning the per-user windows reuse. */
   private def taggedEdges(old: DataFrame, delta: DataFrame, userCol: String,
                           itemCol: String): DataFrame = {
     def rows(df: DataFrame, o: Long) = df.select(col(userCol).as("u"),
       col(itemCol).as("i"), lit(o).as("o"), lit(1L - o).as("d"))
-    prefixKeyed(rows(old, 1L).unionByName(rows(delta, 0L)), col("u"))
+    rows(old, 1L).unionByName(rows(delta, 0L))
+      .repartition(col("u"))
       .groupBy(col("u"), col("i"))
       .agg(sum(col("o")).as("wo"), sum(col("d")).as("wd"))
       .withColumn("wn", col("wo") + col("wd"))
@@ -608,10 +589,10 @@ object GraphCF {
           .otherwise(col("co")).as("co")))
 
   /** Standing USER-user co-occurrence counts from an interaction log —
-    * the maintained state behind a UserKNN serving layer ([[userKnnRecs]]),
-    * aggregated and capped exactly as it does: per-user histories cut to
-    * top-`maxHistory`, then per-item audiences cut to top-`maxAudience`
-    * (the order matters and is the serving path's order). Keep THIS
+    * the maintained state behind a UserKNN serving layer
+    * ([[userKnnRecsFromEdges]]), aggregated and capped exactly as it
+    * does: per-user histories cut to top-`maxHistory`, then per-item
+    * audiences cut to top-`maxAudience` (the order matters and is the serving path's order). Keep THIS
     * frame, not the similarity matrix: co-counts are the additive
     * representation [[foldUserCoDelta]] maintains incrementally;
     * similarities re-derive from co + norms in one linear pass
@@ -625,8 +606,9 @@ object GraphCF {
     // persist + eager count (see materialized): the co self-join reads
     // the capped frame twice, and only a FINALIZED cache keeps hash(i)
     // so the join plans exchange-free (round 13; caller-owned release)
-    coUserPairs(materialized(capAudience(
-      edgeFrame(interactions, userCol, itemCol, maxHistory), maxAudience)))
+    coPairs(materialized(capAudience(
+      edgeFrame(interactions, userCol, itemCol, maxHistory), maxAudience)),
+      "i", "u")
   }
 
   /** Fold a DELTA of interactions into standing USER-user co-counts
@@ -699,67 +681,36 @@ object GraphCF {
         s"$maxAudience (stale frame or different caps)")
   }
 
-  /** Top-`k` P3alpha recommendations per user from an interaction frame.
-    * Returns (user, item, score, rnk) with `score` the exact integer
-    * fixed-point walk mass (scale³ ≈ probability·10¹²), ties broken by
-    * smallest item id; already-interacted items excluded; zero-mass
-    * candidates dropped. Persists the aggregated edge frame (five legs of
-    * the plan reuse it) — the engine's documented cache contract applies
-    * (clear between corpora).
+  /** Top-`k` P3alpha recommendations per user from an ALREADY-AGGREGATED,
+    * history-capped (u, i, w) edge frame — [[edges]] over a raw log,
+    * [[edgesFromStore]] over the standing edge store. Returns (user,
+    * item, score, rnk) with `score` the exact integer fixed-point walk
+    * mass (scale³ ≈ probability·10¹²), ties broken by smallest item id;
+    * already-interacted items excluded; zero-mass candidates dropped.
     *
-    * `maxHistory` bounds the co-walk (see the object doc — the scale
-    * lever for heavy users); `neighbors` truncates each item's walk row
-    * to its top-N similar items before the scoring join (the KNN
-    * neighborhood bound — pass `neighbors` ≥ |catalog| for the
-    * untruncated walk); `broadcastItems` switches the truncated matrix
-    * from broadcast to a distributed shuffle join above that catalog
-    * size (no hard catalog limit — both modes bit-identical). */
-  def p3alphaRecs(interactions: DataFrame, userCol: String, itemCol: String,
-                  k: Int, scale: Long = 10000L,
-                  neighbors: Int = 50,
-                  maxHistory: Int = Int.MaxValue,
-                  broadcastItems: Long = 10000L): DataFrame = {
-    require(maxHistory >= 1, "maxHistory must be >= 1")
-    p3FromEdges(edgeFrame(interactions, userCol, itemCol, maxHistory),
-      userCol, itemCol, k, scale, neighbors, broadcastItems)
-  }
-
-  /** [[p3alphaRecs]] over an ALREADY-AGGREGATED, history-capped (u, i, w)
-    * edge frame ([[edges]]) — the sharing entry point: a comparative
-    * evaluation (two models on one train split) or a standing deployment
-    * builds the capped edge frame ONCE and feeds every model from it,
-    * instead of each model re-running the groupBy + history window over
-    * the raw log. Bit-identical to [[p3alphaRecs]] over the log the frame
-    * was aggregated from (GraphCFSpec pins the differential). The frame is
-    * persisted here (five legs of the plan reuse it) — re-persisting a
-    * frame the caller already persisted is a no-op, same cache contract. */
+    * `maxHistory` on the edge builder bounds the co-walk (see the object
+    * doc — the scale lever for heavy users); `neighbors` truncates each
+    * item's walk row to its top-N similar items before the scoring join
+    * (the KNN neighborhood bound — pass `neighbors` ≥ |catalog| for the
+    * untruncated walk); above [[broadcastKeys]] distinct items the
+    * truncated matrix is shuffle-joined instead of broadcast (no hard
+    * catalog limit — both modes bit-identical).
+    *
+    * Sharing: a comparative evaluation (several models on one train
+    * split) or a standing deployment builds the capped edge frame ONCE and
+    * feeds every model from it, instead of each model re-running the
+    * groupBy + history window over the raw log. Store-served, the walk
+    * state (du/di/pui/piu) derives from the folded (u, i, w) frame, so
+    * serving needs no raw-log replay and the recs are bit-equal to the
+    * one-shot build over the concatenated batches (reference analogue:
+    * serving loads persisted params instead of retraining,
+    * explicit_ratings/ab_test.py:73-85). The frame is persisted here
+    * (five legs of the plan reuse it) — re-persisting a frame the caller
+    * already persisted is a no-op; the engine's documented cache
+    * contract applies (clear between corpora). */
   def p3alphaRecsFromEdges(edges0: DataFrame, userCol: String,
                            itemCol: String, k: Int, scale: Long = 10000L,
-                           neighbors: Int = 50,
-                           broadcastItems: Long = 10000L): DataFrame =
-    p3FromEdges(edges0.select(col("u"), col("i"), col("w")),
-      userCol, itemCol, k, scale, neighbors, broadcastItems)
-
-  /** [[p3alphaRecs]] served off the standing edge store
-    * ([[writeEdgeBatch]] / [[edgesFromStore]]) — the P3alpha sibling of
-    * [[itemKnnRecsFromStore]]: the walk state (du/di/pui/piu) derives
-    * from the folded (u, i, w) frame, so serving needs no raw-log replay
-    * and the recs are bit-equal to the one-shot build over the
-    * concatenated batches. Reference analogue: serving loads persisted
-    * params instead of retraining (explicit_ratings/ab_test.py:73-85). */
-  def p3alphaRecsFromStore(spark: org.apache.spark.sql.SparkSession,
-                           path: String, userCol: String, itemCol: String,
-                           k: Int, scale: Long = 10000L,
-                           neighbors: Int = 50,
-                           maxHistory: Int = Int.MaxValue,
-                           broadcastItems: Long = 10000L): DataFrame =
-    p3FromEdges(
-      edgesFromStore(spark, path, maxHistory).select(col("u"), col("i"), col("w")),
-      userCol, itemCol, k, scale, neighbors, broadcastItems)
-
-  private def p3FromEdges(edges0: DataFrame, userCol: String,
-                          itemCol: String, k: Int, scale: Long,
-                          neighbors: Int, broadcastItems: Long): DataFrame = {
+                           neighbors: Int = 50): DataFrame = {
     require(k >= 1, "k must be >= 1")
     require(neighbors >= 1, "neighbors must be >= 1")
     require(scale >= 10L, "scale < 10 quantizes transitions to noise")
@@ -768,7 +719,7 @@ object GraphCF {
     require(scale <= 1000000L,
       "scale > 10^6 risks long overflow: walk sums are bounded by scale^3")
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val e = edges0.persist(lvl)
+    val e = edges0.select(col("u"), col("i"), col("w")).persist(lvl)
     // row-normalized transitions, quantized to integer fixed-point:
     // floor(scale*w/deg) — exact in IEEE doubles (operands < 2^53) and
     // exactly DuckDB's integer `//` on the same longs
@@ -807,7 +758,7 @@ object GraphCF {
     // broadcast the truncated matrix (user side never shuffles); big
     // catalogs shuffle-join on s1 — same result, one more exchange, no
     // catalog-size cliff (the matrix is |items|*neighbors, distributed)
-    val ssJ = if (nItems <= broadcastItems) broadcast(ss) else ss
+    val ssJ = if (nItems <= broadcastKeys) broadcast(ss) else ss
     val scores = pUi.select(col("u"), col("i").as("s1"), col("p"))
       .join(ssJ, "s1")
       .groupBy(col("u"), col("s2"))
@@ -826,115 +777,49 @@ object GraphCF {
         col("score"), col("rnk"))
   }
 
-  /** Top-`k` ItemKNN-cosine recommendations per user — the OTHER classical
-    * neighborhood baseline next to [[p3alphaRecs]]: item-item COSINE over
-    * the interaction-count vectors (cos(i,j) = Σ_u w_ui·w_uj /
-    * √(Σw_ui²·Σw_uj²)) instead of the random-walk mass. Reference
-    * analogue: the implicit-feedback scoring loop (implicit_bpr) ranks by
-    * a learned dot product; ItemKNN is the model-free production
-    * first-pass ranker alongside it.
-    *
-    * Replayability: co-counts and squared norms are exact long sums; the
-    * similarity is quantized ONCE per (i,j) — `floor(scale·co/√(nᵢ·nⱼ))`,
-    * a single correctly-rounded IEEE expression identical in DuckDB — and
-    * every downstream sum (user scoring) is order-free long arithmetic,
-    * so results are bit-identical under any partitioning.
-    *
-    * Scale shape: identical to [[p3alphaRecs]] and shares its three
-    * levers — `maxHistory` bounds the Σ_u deg(u)² co-occurrence
-    * intermediate, `neighbors` truncates the similarity matrix,
-    * `broadcastItems` switches the scoring join from broadcast to a
-    * distributed shuffle join above that catalog size. Overflow guard:
-    * co ≤ √(n₁·n₂) ≤ max(norm²), so the operator requires
-    * max(norm²) < 2³¹ (keeps n₁·n₂ < 2⁶²) and max(norm²)·scale < 2⁵³
-    * (keeps the floor() exact in IEEE doubles) — checked with ONE bounded
-    * 1-row driver read off the |items|-row norm frame; corpora past the
-    * budget should binarize weights (dedup interactions) or lower scale.
-    * Returns (user, item, score, rnk), `score` = Σ w_ui·simQ(i,j) in
-    * fixed-point (≈ scale·Σw·cos), ties to the smallest item id. */
-  def itemKnnRecs(interactions: DataFrame, userCol: String, itemCol: String,
-                  k: Int, scale: Long = 10000L,
-                  neighbors: Int = 20,
-                  maxHistory: Int = Int.MaxValue,
-                  broadcastItems: Long = 10000L): DataFrame = {
-    require(maxHistory >= 1, "maxHistory must be >= 1")
-    knnFromEdges(edgeFrame(interactions, userCol, itemCol, maxHistory),
-      userCol, itemCol, k, scale, neighbors, broadcastItems)
-  }
-
-  /** [[itemKnnRecs]] served off the standing edge store
-    * ([[writeEdgeBatch]] / [[edgesFromStore]]): identical scoring tail,
-    * so the recs are bit-equal to the one-shot build over the
-    * concatenated batches — the store just replaces the raw-log
-    * aggregation with the partial-count fold. Same cache contract. */
-  def itemKnnRecsFromStore(spark: org.apache.spark.sql.SparkSession,
-                           path: String, userCol: String, itemCol: String,
-                           k: Int, scale: Long = 10000L,
-                           neighbors: Int = 20,
-                           maxHistory: Int = Int.MaxValue,
-                           broadcastItems: Long = 10000L): DataFrame =
-    knnFromEdges(
-      edgesFromStore(spark, path, maxHistory).select(col("u"), col("i"), col("w")),
-      userCol, itemCol, k, scale, neighbors, broadcastItems)
-
-  /** [[itemKnnRecs]] over an already-aggregated, history-capped (u, i, w)
-    * edge frame ([[edges]]) — the sharing entry point, sibling of
-    * [[p3alphaRecsFromEdges]] (see its doc for the contract). */
-  def itemKnnRecsFromEdges(edges0: DataFrame, userCol: String,
-                           itemCol: String, k: Int, scale: Long = 10000L,
-                           neighbors: Int = 20,
-                           broadcastItems: Long = 10000L): DataFrame =
-    knnFromEdges(edges0.select(col("u"), col("i"), col("w")),
-      userCol, itemCol, k, scale, neighbors, broadcastItems)
-
-  /** Top-`k` USER-KNN cosine recommendations — the third classical
-    * neighborhood model beside [[itemKnnRecs]] and [[p3alphaRecs]]
-    * (user-based CF, Resnick et al. 1994): similar USERS vote with
-    * their histories. sim(u,u') = quantized cosine of the two users'
-    * item vectors ([[cosineSimQ]], the shared guarded derivation);
-    * score(u,i) = Σ_{u'∈N(u)} simQ(u,u')·w(u',i); seen items
-    * anti-joined; ties to the smallest ids everywhere — bit-replayable.
+  /** Top-`k` USER-KNN cosine recommendations from an already-aggregated,
+    * history-capped (u, i, w) edge frame ([[edges]] / [[edgesFromStore]])
+    * — the third classical neighborhood model beside
+    * [[itemKnnRecsFromEdges]] and [[p3alphaRecsFromEdges]] (user-based
+    * CF, Resnick et al. 1994): similar USERS vote with their histories.
+    * sim(u,u') = quantized cosine of the two users' item vectors
+    * ([[cosineSimQ]], the shared guarded derivation); score(u,i) =
+    * Σ_{u'∈N(u)} simQ(u,u')·w(u',i); seen items anti-joined; ties to the
+    * smallest ids everywhere — bit-replayable. Store-served recs are
+    * bit-equal to the one-shot build over the concatenated batches, so
+    * all THREE neighborhood recommenders serve from standing state.
     *
     * Scale levers, the exact mirror of the item side:
-    *  - `maxHistory` caps each USER's edges (top-C by weight, id
-    *    tie-break) — bounds vector length;
+    *  - `maxHistory` (on the edge builder) caps each USER's edges (top-C
+    *    by weight, id tie-break) — bounds vector length;
     *  - `maxAudience` caps each ITEM's user list the same way — the
     *    user-user co-walk's quadratic leg is Σ_i min(audience, A)²,
     *    the transpose of ItemKNN's Σ_u min(deg, C)² (a popular item's
     *    audience² is THE user-KNN scale killer; the cap is an exact,
-    *    replayable cut applied AFTER the history cap);
-    *  - `broadcastUsers` two-mode joins: cohorts ≤ threshold broadcast
+    *    replayable cut applied AFTER the history cap, and a property of
+    *    the similarity computation, not of the standing frame);
+    *  - two-mode joins: cohorts of ≤ [[broadcastKeys]] users broadcast
     *    the truncated similarity matrix AND the norm frame; bigger
     *    cohorts shuffle-join both — no cohort-size cliff.
     * Similarities derive from the audience-capped frame; scoring and
-    * the seen-item anti-join use the full history-capped frame. */
-  def userKnnRecs(interactions: DataFrame, userCol: String, itemCol: String,
-                  k: Int, scale: Long = 10000L,
-                  neighbors: Int = 20,
-                  maxHistory: Int = Int.MaxValue,
-                  maxAudience: Int = Int.MaxValue,
-                  broadcastUsers: Long = 10000L): DataFrame = {
-    require(maxHistory >= 1, "maxHistory must be >= 1")
-    userKnnFromEdges(edgeFrame(interactions, userCol, itemCol, maxHistory),
-      userCol, itemCol, k, scale, neighbors, maxAudience, broadcastUsers)
-  }
-
-  /** Shared body of the UserKNN entry points. Cache lifetime: the edge
-    * frame stays persisted — it feeds the norm, co-count, scoring and
-    * anti-join legs of the LAZY returned plan; the caller owns the
-    * release via `spark.catalog.clearCache()` once the result is
-    * materialized (USAGE.md's between-corpora contract; GraphCFSpec pins
-    * the no-orphan release). Same contract as [[p3alphaRecs]] /
-    * [[knnFromEdges]] / [[similarItems]]. */
-  private def userKnnFromEdges(edges0: DataFrame, userCol: String,
-                               itemCol: String, k: Int, scale: Long,
-                               neighbors: Int, maxAudience: Int,
-                               broadcastUsers: Long): DataFrame = {
+    * the seen-item anti-join use the full history-capped frame.
+    *
+    * Cache lifetime: the edge frame stays persisted — it feeds the norm,
+    * co-count, scoring and anti-join legs of the LAZY returned plan; the
+    * caller owns the release via `spark.catalog.clearCache()` once the
+    * result is materialized (USAGE.md's between-corpora contract;
+    * GraphCFSpec pins the no-orphan release). Same contract as
+    * [[p3alphaRecsFromEdges]] / [[itemKnnRecsFromEdges]] /
+    * [[similarItems]]. */
+  def userKnnRecsFromEdges(edges0: DataFrame, userCol: String,
+                           itemCol: String, k: Int, scale: Long = 10000L,
+                           neighbors: Int = 20,
+                           maxAudience: Int = Int.MaxValue): DataFrame = {
     require(k >= 1, "k must be >= 1")
     require(neighbors >= 1, "neighbors must be >= 1")
     require(maxAudience >= 1, "maxAudience must be >= 1")
     val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val e = edges0.persist(lvl)
+    val e = edges0.select(col("u"), col("i"), col("w")).persist(lvl)
     // the audience-capped frame feeds THREE legs (norms + both sides of
     // the i-keyed co self-join) — persist so the audience window runs
     // once instead of per leg (round 13; same cache contract as e)
@@ -942,7 +827,7 @@ object GraphCF {
     // user squared norms and user-user co-counts from the audience-capped
     // frame: the i-keyed self-join's intermediate is Σ_i min(aud, A)²
     val nrm = ea.groupBy(col("u").as("i")).agg(sum(col("w") * col("w")).as("nrm"))
-    // ONE driver action serves both probes (the knnFromEdges fold):
+    // ONE driver action serves both probes (the ItemKNN fold):
     // nUsers (the broadcast-mode switch — distinct u over the FULL edge
     // frame, the pre-cap cohort as before) and the overflow budget's
     // max(norm²) off the audience-capped norm frame, cross-joined 1×1
@@ -950,8 +835,8 @@ object GraphCF {
       .crossJoin(e.agg(countDistinct(col("u")).as("n"))).head()
     val maxNrm = if (probe.isNullAt(0)) 0L else probe.getLong(0)
     val nUsers = probe.getLong(1)
-    val small = nUsers <= broadcastUsers
-    val co = coUserPairs(ea)
+    val small = nUsers <= broadcastKeys
+    val co = coPairs(ea, "i", "u")
     val sim =
       try cosineSimQPre(co, nrm, scale, maxNrm, broadcastNorms = small)
       catch { case t: Throwable => e.unpersist(); throw t }
@@ -973,43 +858,17 @@ object GraphCF {
         col("score"), col("rnk"))
   }
 
-  /** [[userKnnRecs]] over an already-aggregated, history-capped (u, i, w)
-    * edge frame ([[edges]]) — the sharing entry point, sibling of
-    * [[itemKnnRecsFromEdges]] (see [[p3alphaRecsFromEdges]] for the
-    * contract). The audience cap still applies here (it is a property
-    * of the similarity computation, not of the standing frame). */
-  def userKnnRecsFromEdges(edges0: DataFrame, userCol: String,
-                           itemCol: String, k: Int, scale: Long = 10000L,
-                           neighbors: Int = 20,
-                           maxAudience: Int = Int.MaxValue,
-                           broadcastUsers: Long = 10000L): DataFrame =
-    userKnnFromEdges(edges0.select(col("u"), col("i"), col("w")),
-      userCol, itemCol, k, scale, neighbors, maxAudience, broadcastUsers)
-
-  /** [[userKnnRecs]] served off the standing edge store
-    * ([[writeEdgeBatch]] / [[edgesFromStore]]) — bit-equal to the
-    * one-shot build over the concatenated batches, closing the family:
-    * all THREE neighborhood recommenders serve from standing state. */
-  def userKnnRecsFromStore(spark: org.apache.spark.sql.SparkSession,
-                           path: String, userCol: String, itemCol: String,
-                           k: Int, scale: Long = 10000L,
-                           neighbors: Int = 20,
-                           maxHistory: Int = Int.MaxValue,
-                           maxAudience: Int = Int.MaxValue,
-                           broadcastUsers: Long = 10000L): DataFrame =
-    userKnnFromEdges(
-      edgesFromStore(spark, path, maxHistory).select(col("u"), col("i"), col("w")),
-      userCol, itemCol, k, scale, neighbors, maxAudience, broadcastUsers)
-
   /** Top-`neighbors` most-similar items PER ITEM — the "related items"
     * serving surface of an item-item recommender (the OTHER endpoint
     * beside per-user recs: every item page hits it), exposed as its own
     * frame: (item, neighbor, q, rnk) with q the guarded quantized cosine
     * ([[cosineSimQ]]) and the exact (q desc, id) truncation cut. This is
-    * precisely the matrix [[itemKnnRecs]] builds internally before
-    * scoring — here it IS the product. Same scale shape: the co-walk's
-    * Σ_u min(deg,C)² leg (cap histories upstream), ≤ |items|·neighbors
-    * output rows.
+    * precisely the matrix [[itemKnnRecsFromEdges]] builds internally
+    * before scoring — here it IS the product. Same scale shape: the
+    * co-walk's Σ_u min(deg,C)² leg (cap histories upstream), ≤
+    * |items|·neighbors output rows. A deployment refreshes it from the
+    * standing edge store ([[edgesFromStore]]), bit-equal to the one-shot
+    * build over the concatenated batches.
     *
     * Cache lifetime: the edge frame stays persisted because the RETURNED
     * frame is lazy and reads it on every action — unpersisting here
@@ -1026,23 +885,13 @@ object GraphCF {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val nrm = e.groupBy(col("i")).agg(sum(col("w") * col("w")).as("nrm"))
     val sim =
-      try cosineSimQ(coPairs(e), nrm, scale)
+      try cosineSimQ(coPairs(e, "u", "i"), nrm, scale)
       catch { case t: Throwable => e.unpersist(); throw t }
     Relational.topKPerGroup(sim, Seq(col("s1")),
         Seq(col("q").desc, col("s2")), neighbors, rankName = "rnk")
       .select(col("s1").as("item"), col("s2").as("neighbor"),
         col("q"), col("rnk"))
   }
-
-  /** [[similarItems]] off the standing edge store ([[writeEdgeBatch]] /
-    * [[edgesFromStore]]) — bit-equal to the one-shot build over the
-    * concatenated batches; the related-items endpoint a deployment
-    * refreshes from standing state, never from the raw log. */
-  def similarItemsFromStore(spark: org.apache.spark.sql.SparkSession,
-                            path: String, neighbors: Int = 10,
-                            scale: Long = 10000L,
-                            maxHistory: Int = Int.MaxValue): DataFrame =
-    similarItems(edgesFromStore(spark, path, maxHistory), neighbors, scale)
 
   /** Quantized cosine similarities from standing co-counts + squared
     * norms — THE one guarded derivation every ItemKNN path shares
@@ -1057,7 +906,7 @@ object GraphCF {
     * `nrm` must be the (i, nrm) squared-norm frame of the SAME edge
     * frame `co` was derived from. Rows with q = 0 are dropped.
     * `broadcastNorms = false` shuffle-joins the norm frame instead —
-    * the [[userKnnRecs]] path, where norms are USER-sized and a
+    * the [[userKnnRecsFromEdges]] path, where norms are USER-sized and a
     * broadcast would not survive a large cohort. */
   def cosineSimQ(co: DataFrame, nrm: DataFrame, scale: Long,
                  broadcastNorms: Boolean = true): DataFrame = {
@@ -1074,7 +923,7 @@ object GraphCF {
 
   /** [[cosineSimQ]] with the max(norm²) probe value already read — lets a
     * caller that needs its own bounded 1-row read off the norm frame (the
-    * knnFromEdges mode probe) fold the budget guard's read into it: one
+    * ItemKNN mode probe) fold the budget guard's read into it: one
     * driver action instead of two. Same guard, same result. */
   private[ops] def cosineSimQPre(co: DataFrame, nrm: DataFrame, scale: Long,
                                  maxNrm: Long,
@@ -1106,13 +955,13 @@ object GraphCF {
   /** Reciprocal-Rank-Fusion of two or more ranked top-k lists (Cormack,
     * Clarke & Buettcher 2009) — the standard model-ensembling step a
     * production ranker runs over its candidate generators (here: any mix
-    * of [[p3alphaRecs]] / [[itemKnnRecs]] / [[userKnnRecs]] /
-    * [[popularityRecs]] / [[markovRecs]] frames): each list contributes
-    * `1/(rrfK + rank)` per item and the fused list ranks by the summed
-    * mass. Rank positions — not model scores — are fused, so models with
-    * incomparable score scales (walk mass vs quantized cosine vs raw
-    * popularity) combine without normalization, which is RRF's whole
-    * point.
+    * of [[p3alphaRecsFromEdges]] / [[itemKnnRecsFromEdges]] /
+    * [[userKnnRecsFromEdges]] / [[popularityRecs]] / [[markovRecs]]
+    * frames): each list contributes `1/(rrfK + rank)` per item and the
+    * fused list ranks by the summed mass. Rank positions — not model
+    * scores — are fused, so models with incomparable score scales (walk
+    * mass vs quantized cosine vs raw popularity) combine without
+    * normalization, which is RRF's whole point.
     *
     * Exactness: the contribution is quantized ONCE per (list, row) as
     * `10⁶ div (rrfK + rank)` — integer division on longs, replayed
@@ -1173,17 +1022,14 @@ object GraphCF {
     // key) — the plain groupBy paid three exchanges for the same chain
     // (the edgeFrame layout argument; basket rows are near-unique per
     // (u,b,i), so raw ≈ aggregated bytes)
-    val bi = prefixKeyed(interactions
+    val bi = interactions
       .select(col(userCol).as("u"), col(basketCol).as("b"),
-        col(timeCol).as("t"), col(itemCol).as("i")), col("u"))
+        col(timeCol).as("t"), col(itemCol).as("i"))
+      .repartition(col("u"))
       .groupBy(col("u"), col("b"), col("t"), col("i"))
       .agg(count(lit(1)).as("w"))
-    val capped =
-      if (maxBasket == Int.MaxValue) bi
-      else Relational.topKPerGroup(bi, Seq(col("u"), col("b")),
-        Seq(col("w").desc, col("i")), maxBasket, rankName = "__rw")
-        .drop("__rw")
-    capped.withColumn("rb", dense_rank().over(
+    capBy(bi, Seq("u", "b"), "i", maxBasket)
+      .withColumn("rb", dense_rank().over(
         Window.partitionBy(col("u")).orderBy(col("t"), col("b")))
       .cast("long"))
       .select(col("u"), col("b"), col("rb"), col("i"))
@@ -1268,20 +1114,20 @@ object GraphCF {
     * Scale levers, mirroring the neighborhood family: `maxBasket` bounds
     * the transition fanout (see [[basketTransitions]]); `neighbors`
     * truncates each item's transition row (cnt desc, next-id tie-break —
-    * exact cut) before the serving join; `broadcastItems` switches the
-    * truncated matrix from broadcast to a distributed shuffle join above
-    * that catalog size (both modes bit-identical — the knnFromEdges
+    * exact cut) before the serving join; above [[broadcastKeys]]
+    * distinct `prev` items the truncated matrix is shuffle-joined
+    * instead of broadcast (both modes bit-identical — the ItemKNN
     * two-mode contract). The serving leg is |users|·maxBasket·neighbors
     * at most — never users × catalog. */
   def markovRecs(interactions: DataFrame, userCol: String, basketCol: String,
                  timeCol: String, itemCol: String, k: Int,
-                 neighbors: Int = 20, maxBasket: Int = Int.MaxValue,
-                 broadcastItems: Long = 10000L): DataFrame = {
+                 neighbors: Int = 20,
+                 maxBasket: Int = Int.MaxValue): DataFrame = {
     val bi = basketItems(interactions, userCol, basketCol, timeCol, itemCol,
         maxBasket)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     markovServe(transitionsFromBasketItems(bi), lastBasket(bi), userCol,
-      itemCol, k, neighbors, broadcastItems)
+      itemCol, k, neighbors)
   }
 
   /** [[markovRecs]] served off the standing transition store
@@ -1294,8 +1140,7 @@ object GraphCF {
                           userCol: String, basketCol: String,
                           timeCol: String, itemCol: String, k: Int,
                           neighbors: Int = 20,
-                          maxBasket: Int = Int.MaxValue,
-                          broadcastItems: Long = 10000L): DataFrame =
+                          maxBasket: Int = Int.MaxValue): DataFrame =
     // persist + materialize the serving-side basket frame: lastBasket
     // self-joins it (the frame vs its per-user max), so un-persisted it
     // was built twice — markovRecs already persists its bi for the same
@@ -1303,7 +1148,7 @@ object GraphCF {
     markovServe(transitionsFromStore(spark, path),
       lastBasket(materialized(basketItems(interactions, userCol, basketCol,
         timeCol, itemCol, maxBasket))),
-      userCol, itemCol, k, neighbors, broadcastItems)
+      userCol, itemCol, k, neighbors)
 
   /** Each user's last (highest-index) capped basket: (u, i) rows. */
   private def lastBasket(bi: DataFrame): DataFrame =
@@ -1312,15 +1157,15 @@ object GraphCF {
       .select(col("u"), col("i"))
 
   private def markovServe(trans: DataFrame, last: DataFrame, userCol: String,
-                          itemCol: String, k: Int, neighbors: Int,
-                          broadcastItems: Long): DataFrame = {
+                          itemCol: String, k: Int,
+                          neighbors: Int): DataFrame = {
     require(k >= 1, "k must be >= 1")
     require(neighbors >= 1, "neighbors must be >= 1")
     // trans is read twice (the truncated-matrix build and the join-mode
     // probe below) — persist so the probe scans the cache instead of
     // re-running the store fold / transition build. Stays persisted for
     // the lazy result plan: the documented cache contract (USAGE.md:
-    // clearCache between corpora), same as knnFromEdges' edge frame.
+    // clearCache between corpora), same as the ItemKNN edge frame.
     val t = trans.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val tt = Relational.topKPerGroup(t, Seq(col("prev")),
         Seq(col("cnt").desc, col("next")), neighbors, rankName = "__rt")
@@ -1330,7 +1175,7 @@ object GraphCF {
     // ones shuffle-join on prev — bit-identical either way; the distinct
     // count runs over the persisted transition frame, not a re-aggregation
     val nPrev = t.select(col("prev")).distinct().count()
-    val ttJ = if (nPrev <= broadcastItems) broadcast(tt) else tt
+    val ttJ = if (nPrev <= broadcastKeys) broadcast(tt) else tt
     val scores = last.select(col("u"), col("i").as("prev"))
       .join(ttJ, "prev")
       .groupBy(col("u"), col("next"))
@@ -1341,12 +1186,45 @@ object GraphCF {
         col("score"), col("rnk"))
   }
 
-  private def knnFromEdges(edges0: DataFrame, userCol: String,
-                           itemCol: String, k: Int, scale: Long,
-                           neighbors: Int, broadcastItems: Long): DataFrame = {
+  /** Top-`k` ItemKNN-cosine recommendations per user from an
+    * already-aggregated, history-capped (u, i, w) edge frame ([[edges]]
+    * over a raw log, [[edgesFromStore]] over the standing edge store) —
+    * the OTHER classical neighborhood baseline next to
+    * [[p3alphaRecsFromEdges]]: item-item COSINE over the
+    * interaction-count vectors (cos(i,j) = Σ_u w_ui·w_uj /
+    * √(Σw_ui²·Σw_uj²)) instead of the random-walk mass. Reference
+    * analogue: the implicit-feedback scoring loop (implicit_bpr) ranks by
+    * a learned dot product; ItemKNN is the model-free production
+    * first-pass ranker alongside it.
+    *
+    * Replayability: co-counts and squared norms are exact long sums; the
+    * similarity is quantized ONCE per (i,j) — `floor(scale·co/√(nᵢ·nⱼ))`,
+    * a single correctly-rounded IEEE expression identical in DuckDB — and
+    * every downstream sum (user scoring) is order-free long arithmetic,
+    * so results are bit-identical under any partitioning. Store-served
+    * recs are bit-equal to the one-shot build over the concatenated
+    * batches — the store just replaces the raw-log aggregation with the
+    * partial-count fold.
+    *
+    * Scale shape: identical to [[p3alphaRecsFromEdges]] and shares its
+    * three levers — `maxHistory` (on the edge builder) bounds the
+    * Σ_u deg(u)² co-occurrence intermediate, `neighbors` truncates the
+    * similarity matrix, and above [[broadcastKeys]] distinct items the
+    * scoring join shuffles instead of broadcasting. Overflow guard:
+    * co ≤ √(n₁·n₂) ≤ max(norm²), so the operator requires
+    * max(norm²) < 2³¹ (keeps n₁·n₂ < 2⁶²) and max(norm²)·scale < 2⁵³
+    * (keeps the floor() exact in IEEE doubles) — checked with ONE bounded
+    * 1-row driver read off the |items|-row norm frame; corpora past the
+    * budget should binarize weights (dedup interactions) or lower scale.
+    * Returns (user, item, score, rnk), `score` = Σ w_ui·simQ(i,j) in
+    * fixed-point (≈ scale·Σw·cos), ties to the smallest item id. Same
+    * cache contract and sharing contract as [[p3alphaRecsFromEdges]]. */
+  def itemKnnRecsFromEdges(edges0: DataFrame, userCol: String,
+                           itemCol: String, k: Int, scale: Long = 10000L,
+                           neighbors: Int = 20): DataFrame = {
     require(k >= 1, "k must be >= 1")
     require(neighbors >= 1, "neighbors must be >= 1")
-    val e = edges0
+    val e = edges0.select(col("u"), col("i"), col("w"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // squared norms: tiny (|items| rows) — broadcast into the pair frame
     val nrm = e.groupBy(col("i")).agg(sum(col("w") * col("w")).as("nrm"))
@@ -1363,7 +1241,7 @@ object GraphCF {
     // co-occurrence: user-keyed self-join; coPairs builds the s1 < s2
     // half and mirrors it in one pass, so the per-s1 truncation below
     // still sees every row of the symmetric matrix
-    val co = coPairs(e)
+    val co = coPairs(e, "u", "i")
     // cosineSimQPre enforces the overflow budget on the pre-read max and
     // owns the single quantization point
     val sim =
@@ -1374,14 +1252,14 @@ object GraphCF {
       .drop("rn")
     // broadcast below the catalog threshold, distributed shuffle join
     // above it — same result either way (GraphCFSpec pins the differential)
-    val ssJ = if (nItems <= broadcastItems) broadcast(ss) else ss
+    val ssJ = if (nItems <= broadcastKeys) broadcast(ss) else ss
     val scores = e.select(col("u"), col("i").as("s1"), col("w"))
       .join(ssJ, "s1")
       .groupBy(col("u"), col("s2"))
       .agg(sum(col("w") * col("q")).as("score"))
       .filter(col("score") > 0L)
     // e stays persisted (feeds nrm/co/scoring/anti-join legs) — the
-    // documented cache contract, same as p3alphaRecs
+    // documented cache contract, same as p3alphaRecsFromEdges
     val unseen = scores.join(
       e.select(col("u"), col("i").as("s2")),
       Seq("u", "s2"), "left_anti")

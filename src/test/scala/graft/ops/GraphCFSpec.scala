@@ -21,7 +21,8 @@ class GraphCFSpec extends SparkTestBase {
     .toDF("user", "item")
 
   test("p3alphaRecs matches the hand-computed quantized walk") {
-    val got = GraphCF.p3alphaRecs(inter, "user", "item", k = 3, scale = 10L)
+    val got = GraphCF.p3alphaRecsFromEdges(GraphCF.edges(inter, "user", "item"),
+      "user", "item", k = 3, scale = 10L)
       .select($"user", $"item", $"score", $"rnk")
       .as[(Long, String, Long, Long)].collect().toSet
     // S entries: S(a,a)=6*6+3*10=66  S(a,b)=6*3=18
@@ -37,27 +38,36 @@ class GraphCFSpec extends SparkTestBase {
   }
 
   test("result is bit-identical under repartitioning (order-free integers)") {
-    val a = GraphCF.p3alphaRecs(inter, "user", "item", k = 3, scale = 10L)
+    val a = GraphCF.p3alphaRecsFromEdges(GraphCF.edges(inter, "user", "item"),
+      "user", "item", k = 3, scale = 10L)
       .collect().toSet
-    val b = GraphCF.p3alphaRecs(inter.repartition(7), "user", "item",
+    val b = GraphCF.p3alphaRecsFromEdges(
+      GraphCF.edges(inter.repartition(7), "user", "item"),
+      "user", "item",
       k = 3, scale = 10L).collect().toSet
     assert(a == b)
     spark.catalog.clearCache()
   }
 
   test("big-catalog shuffle mode is bit-identical to the broadcast mode") {
-    // broadcastItems = 0 forces the distributed shuffle join for the
-    // truncated similarity matrix — the >10k-catalog plan — on the tiny
-    // fixture, where it must reproduce the broadcast plan bit for bit
-    val bc = GraphCF.p3alphaRecs(inter, "user", "item", k = 3, scale = 10L)
-      .collect().toSet
-    val sh = GraphCF.p3alphaRecs(inter, "user", "item", k = 3, scale = 10L,
-      broadcastItems = 0L).collect().toSet
+    // padding the fixture past broadcastKeys distinct items makes the
+    // truncated similarity matrix shuffle-join — the >10k-catalog plan.
+    // Each pad user holds ONE fresh item: no co-pairs, and its only
+    // candidate is already seen, so the original users' recs must
+    // reproduce the broadcast plan's bit for bit
+    val pad = (1L to GraphCF.broadcastKeys + 1L)
+      .map(n => (-n, s"pad$n")).toDF("user", "item")
+    val big = GraphCF.edges(inter.union(pad), "user", "item")
+    assert(big.select($"i").distinct().count() > GraphCF.broadcastKeys)
+    val bc = GraphCF.p3alphaRecsFromEdges(GraphCF.edges(inter, "user", "item"),
+      "user", "item", k = 3, scale = 10L).collect().toSet
+    val sh = GraphCF.p3alphaRecsFromEdges(big, "user", "item", k = 3,
+      scale = 10L).filter($"user" > 0L).collect().toSet
     assert(bc == sh)
-    val bcK = GraphCF.itemKnnRecs(inter, "user", "item", k = 3, scale = 10L)
-      .collect().toSet
-    val shK = GraphCF.itemKnnRecs(inter, "user", "item", k = 3, scale = 10L,
-      broadcastItems = 0L).collect().toSet
+    val bcK = GraphCF.itemKnnRecsFromEdges(GraphCF.edges(inter, "user", "item"),
+      "user", "item", k = 3, scale = 10L).collect().toSet
+    val shK = GraphCF.itemKnnRecsFromEdges(big, "user", "item", k = 3,
+      scale = 10L).filter($"user" > 0L).collect().toSet
     assert(bcK == shK)
     spark.catalog.clearCache()
   }
@@ -71,15 +81,16 @@ class GraphCFSpec extends SparkTestBase {
       (2L, "b"),            // u2 keeps b (w=1, tie-break over c)
       (3L, "a"))
       .toDF("user", "item")
-    val got = GraphCF.itemKnnRecs(inter, "user", "item", k = 3, scale = 10L,
-      maxHistory = 1).collect().toSet
-    val want = GraphCF.itemKnnRecs(cappedLog, "user", "item", k = 3,
-      scale = 10L).collect().toSet
+    val got = GraphCF.itemKnnRecsFromEdges(GraphCF.edges(inter, "user", "item",
+      maxHistory = 1), "user", "item", k = 3, scale = 10L).collect().toSet
+    val want = GraphCF.itemKnnRecsFromEdges(GraphCF.edges(cappedLog, "user",
+      "item"), "user", "item", k = 3, scale = 10L).collect().toSet
     assert(got == want)
-    val gotP3 = GraphCF.p3alphaRecs(inter, "user", "item", k = 3, scale = 10L,
-      maxHistory = 1).collect().toSet
-    val wantP3 = GraphCF.p3alphaRecs(cappedLog, "user", "item", k = 3,
-      scale = 10L).collect().toSet
+    val gotP3 = GraphCF.p3alphaRecsFromEdges(GraphCF.edges(inter, "user",
+      "item", maxHistory = 1), "user", "item", k = 3, scale = 10L)
+      .collect().toSet
+    val wantP3 = GraphCF.p3alphaRecsFromEdges(GraphCF.edges(cappedLog, "user",
+      "item"), "user", "item", k = 3, scale = 10L).collect().toSet
     assert(gotP3 == wantP3)
     spark.catalog.clearCache()
   }
@@ -92,9 +103,11 @@ class GraphCFSpec extends SparkTestBase {
       .toDF("user", "item"), "user", "item", dir, 0L)
     GraphCF.writeEdgeBatch(Seq((1L, "a"), (2L, "c"), (3L, "a"))
       .toDF("user", "item"), "user", "item", dir, 1L)
-    val got = GraphCF.itemKnnRecsFromStore(spark, dir, "user", "item",
-      k = 3, scale = 10L).collect().toSet
-    val want = GraphCF.itemKnnRecs(inter, "user", "item", k = 3, scale = 10L)
+    val got = GraphCF.itemKnnRecsFromEdges(GraphCF.edgesFromStore(spark, dir),
+      "user", "item", k = 3, scale = 10L).collect().toSet
+    val want = GraphCF.itemKnnRecsFromEdges(
+      GraphCF.edges(inter, "user", "item"),
+      "user", "item", k = 3, scale = 10L)
       .collect().toSet
     assert(got == want)
     spark.catalog.clearCache()
@@ -141,7 +154,8 @@ class GraphCFSpec extends SparkTestBase {
     val heavy = Seq.fill(50000)((1L, "a")).toDF("user", "item")
       .union(Seq((1L, "b"), (2L, "a"), (2L, "b")).toDF("user", "item"))
     val e = intercept[IllegalArgumentException] {
-      GraphCF.itemKnnRecs(heavy, "user", "item", k = 1)
+      GraphCF.itemKnnRecsFromEdges(GraphCF.edges(heavy, "user", "item"),
+        "user", "item", k = 1)
     }
     assert(e.getMessage.contains("norm"))
     spark.catalog.clearCache()
@@ -152,7 +166,8 @@ class GraphCFSpec extends SparkTestBase {
     // from the shared co-user -> tie resolves to the smaller item id
     val sym = Seq((1L, "x"), (2L, "x"), (2L, "y"), (2L, "z"))
       .toDF("user", "item")
-    val recs = GraphCF.p3alphaRecs(sym, "user", "item", k = 2, scale = 100L)
+    val recs = GraphCF.p3alphaRecsFromEdges(GraphCF.edges(sym, "user", "item"),
+      "user", "item", k = 2, scale = 100L)
       .filter($"user" === 1L)
       .select($"item", $"rnk").as[(String, Long)].collect().toSeq.sortBy(_._2)
     assert(recs.map(_._1) == Seq("y", "z"))
@@ -169,7 +184,8 @@ class GraphCFSpec extends SparkTestBase {
     // scale 10: q(a,b)=q(b,a)=floor(20/√10)=6, q(b,c)=q(c,b)=floor(10/√2)=7
     // u1 unseen c: w(u1,b)·q(b,c)=7 ; u2 unseen a: w(u2,b)·q(b,a)=6
     // u3 unseen b: w(u3,a)·q(a,b)=6 ; u3→c has zero mass, dropped
-    val got = GraphCF.itemKnnRecs(inter, "user", "item", k = 3, scale = 10L)
+    val got = GraphCF.itemKnnRecsFromEdges(GraphCF.edges(inter, "user", "item"),
+      "user", "item", k = 3, scale = 10L)
       .select($"user", $"item", $"score", $"rnk")
       .as[(Long, String, Long, Long)].collect().toSet
     assert(got == Set(
@@ -180,9 +196,12 @@ class GraphCFSpec extends SparkTestBase {
   }
 
   test("itemKnnRecs is bit-identical under repartitioning") {
-    val a = GraphCF.itemKnnRecs(inter, "user", "item", k = 3, scale = 10L)
+    val a = GraphCF.itemKnnRecsFromEdges(GraphCF.edges(inter, "user", "item"),
+      "user", "item", k = 3, scale = 10L)
       .collect().toSet
-    val b = GraphCF.itemKnnRecs(inter.repartition(7), "user", "item",
+    val b = GraphCF.itemKnnRecsFromEdges(
+      GraphCF.edges(inter.repartition(7), "user", "item"),
+      "user", "item",
       k = 3, scale = 10L).collect().toSet
     assert(a == b)
     spark.catalog.clearCache()
@@ -194,12 +213,16 @@ class GraphCFSpec extends SparkTestBase {
       .persist()
     val p3Shared = GraphCF.p3alphaRecsFromEdges(e, "user", "item",
       k = 3, scale = 10L).collect().toSet
-    val p3Direct = GraphCF.p3alphaRecs(inter, "user", "item",
+    val p3Direct = GraphCF.p3alphaRecsFromEdges(
+      GraphCF.edges(inter, "user", "item"),
+      "user", "item",
       k = 3, scale = 10L).collect().toSet
     assert(p3Shared == p3Direct)
     val knnShared = GraphCF.itemKnnRecsFromEdges(e, "user", "item",
       k = 3, scale = 10L).collect().toSet
-    val knnDirect = GraphCF.itemKnnRecs(inter, "user", "item",
+    val knnDirect = GraphCF.itemKnnRecsFromEdges(
+      GraphCF.edges(inter, "user", "item"),
+      "user", "item",
       k = 3, scale = 10L).collect().toSet
     assert(knnShared == knnDirect)
     spark.catalog.clearCache()
@@ -212,9 +235,11 @@ class GraphCFSpec extends SparkTestBase {
       .toDF("user", "item"), "user", "item", dir, 0L)
     GraphCF.writeEdgeBatch(Seq((1L, "a"), (2L, "c"), (3L, "a"))
       .toDF("user", "item"), "user", "item", dir, 1L)
-    val got = GraphCF.p3alphaRecsFromStore(spark, dir, "user", "item",
-      k = 3, scale = 10L).collect().toSet
-    val want = GraphCF.p3alphaRecs(inter, "user", "item", k = 3, scale = 10L)
+    val got = GraphCF.p3alphaRecsFromEdges(GraphCF.edgesFromStore(spark, dir),
+      "user", "item", k = 3, scale = 10L).collect().toSet
+    val want = GraphCF.p3alphaRecsFromEdges(
+      GraphCF.edges(inter, "user", "item"),
+      "user", "item", k = 3, scale = 10L)
       .collect().toSet
     assert(got == want)
     spark.catalog.clearCache()
@@ -427,7 +452,8 @@ class GraphCFSpec extends SparkTestBase {
     assert(e.getMessage.contains("10^6"))
     // and the serving path inherits the same refusal
     val e2 = intercept[IllegalArgumentException] {
-      GraphCF.itemKnnRecs(inter, "user", "item", k = 1, scale = 1L << 33)
+      GraphCF.itemKnnRecsFromEdges(GraphCF.edges(inter, "user", "item"),
+        "user", "item", k = 1, scale = 1L << 33)
     }
     assert(e2.getMessage.contains("10^6"))
     spark.catalog.clearCache()
@@ -478,7 +504,8 @@ class GraphCFSpec extends SparkTestBase {
     // scale 10: q(u1,u3) = floor(20/sqrt(5)) = 8, q(u1,u2) = floor(10/sqrt(10)) = 3
     // scores: u1 <- 8*u3 + 3*u2: unseen c = 3; u2 <- 3*u1: unseen a = 6;
     //         u3 <- 8*u1: unseen b = 8
-    val got = GraphCF.userKnnRecs(inter, "user", "item", k = 3, scale = 10L)
+    val got = GraphCF.userKnnRecsFromEdges(GraphCF.edges(inter, "user", "item"),
+      "user", "item", k = 3, scale = 10L)
       .select($"user", $"item", $"score", $"rnk")
       .as[(Long, String, Long, Long)].collect().toSet
     assert(got == Set((1L, "c", 3L, 1L), (2L, "a", 6L, 1L), (3L, "b", 8L, 1L)))
@@ -486,12 +513,19 @@ class GraphCFSpec extends SparkTestBase {
   }
 
   test("userKnnRecs: big-cohort shuffle mode is bit-identical to broadcast") {
-    val a = GraphCF.userKnnRecs(inter, "user", "item", k = 3, scale = 10L,
-        broadcastUsers = 10000L)
+    // padding past broadcastKeys distinct users makes the similarity and
+    // norm joins shuffle; each pad user holds ONE fresh item, so it has
+    // no co-user and earns no recs
+    val pad = (1L to GraphCF.broadcastKeys + 1L)
+      .map(n => (-n, s"pad$n")).toDF("user", "item")
+    val big = GraphCF.edges(inter.union(pad), "user", "item")
+    assert(big.select($"u").distinct().count() > GraphCF.broadcastKeys)
+    val a = GraphCF.userKnnRecsFromEdges(GraphCF.edges(inter, "user", "item"),
+        "user", "item", k = 3, scale = 10L)
       .collect().map(_.toSeq).toSet
-    val b = GraphCF.userKnnRecs(inter, "user", "item", k = 3, scale = 10L,
-        broadcastUsers = 1L)
-      .collect().map(_.toSeq).toSet
+    val b = GraphCF.userKnnRecsFromEdges(big, "user", "item", k = 3,
+        scale = 10L)
+      .filter($"user" > 0L).collect().map(_.toSeq).toSet
     assert(a == b)
     spark.catalog.clearCache()
   }
@@ -503,9 +537,12 @@ class GraphCFSpec extends SparkTestBase {
         inter.filter(pmod(xxhash64($"user", $"item"), lit(3L)) === b),
         "user", "item", dir, b)
     }
-    val direct = GraphCF.userKnnRecs(inter, "user", "item", k = 3, scale = 10L)
+    val direct = GraphCF.userKnnRecsFromEdges(
+      GraphCF.edges(inter, "user", "item"),
+      "user", "item", k = 3, scale = 10L)
       .collect().map(_.toSeq).toSet
-    val fromStore = GraphCF.userKnnRecsFromStore(spark, dir, "user", "item",
+    val fromStore = GraphCF.userKnnRecsFromEdges(
+        GraphCF.edgesFromStore(spark, dir), "user", "item",
         k = 3, scale = 10L)
       .collect().map(_.toSeq).toSet
     val fromEdges = GraphCF.userKnnRecsFromEdges(
@@ -524,10 +561,13 @@ class GraphCFSpec extends SparkTestBase {
       (1L, "a"), (1L, "a"), (1L, "a"),
       (2L, "a"), (2L, "b"),
       (3L, "a"), (3L, "c")).toDF("user", "item")
-    val full = GraphCF.userKnnRecs(log, "user", "item", k = 3, scale = 10L)
+    val full = GraphCF.userKnnRecsFromEdges(GraphCF.edges(log, "user", "item"),
+      "user", "item", k = 3, scale = 10L)
       .select($"user", $"item").as[(Long, String)].collect().toSet
     assert(full.contains((1L, "c")))
-    val capped = GraphCF.userKnnRecs(log, "user", "item", k = 3, scale = 10L,
+    val capped = GraphCF.userKnnRecsFromEdges(
+      GraphCF.edges(log, "user", "item"),
+      "user", "item", k = 3, scale = 10L,
         maxAudience = 2)
       .select($"user", $"item").as[(Long, String)].collect().toSet
     assert(!capped.contains((1L, "c")))
@@ -622,11 +662,21 @@ class GraphCFSpec extends SparkTestBase {
     spark.catalog.clearCache()
   }
 
-  test("markov shuffle mode (broadcastItems=0) is bit-identical to broadcast") {
+  test("markov shuffle mode (many prev items) is bit-identical to broadcast") {
+    // each pad user buys two single-item baskets of fresh items: one
+    // fresh `prev` per pad user (past broadcastKeys in total, so the
+    // serving join shuffles), and its last item has no successor, so it
+    // earns no recs
+    val pad = (1L to GraphCF.broadcastKeys + 1L)
+      .flatMap(n => Seq((-n, 1L, 1L, s"pad${n}a"), (-n, 2L, 2L, s"pad${n}b")))
+      .toDF("user", "bsk", "ts", "item")
+    val big = basketLog.union(pad)
+    assert(GraphCF.basketTransitions(big, "user", "bsk", "ts", "item")
+      .select($"prev").distinct().count() > GraphCF.broadcastKeys)
     val bc = GraphCF.markovRecs(basketLog, "user", "bsk", "ts", "item", k = 3)
       .collect().map(_.toSeq).toSet
-    val sh = GraphCF.markovRecs(basketLog, "user", "bsk", "ts", "item", k = 3,
-      broadcastItems = 0L).collect().map(_.toSeq).toSet
+    val sh = GraphCF.markovRecs(big, "user", "bsk", "ts", "item", k = 3)
+      .filter($"user" > 0L).collect().map(_.toSeq).toSet
     assert(bc == sh)
     spark.catalog.clearCache()
   }
@@ -647,7 +697,7 @@ class GraphCFSpec extends SparkTestBase {
         inter.filter(pmod(xxhash64($"user", $"item"), lit(2L)) === b),
         "user", "item", dir, b)
     }
-    val fromStore = GraphCF.similarItemsFromStore(spark, dir,
+    val fromStore = GraphCF.similarItems(GraphCF.edgesFromStore(spark, dir),
         neighbors = 2, scale = 10L)
       .as[(String, String, Long, Long)].collect().toSet
     assert(fromStore == got)
@@ -680,7 +730,8 @@ class GraphCFSpec extends SparkTestBase {
     // neighbors=1 keeps only each item's single strongest edge:
     // b's strongest is c (q=7 beats a's 6), so b→a leaves the matrix and
     // u2 (items b,c) can no longer reach a — u2 gets no recommendations
-    val got = GraphCF.itemKnnRecs(inter, "user", "item", k = 3, scale = 10L,
+    val got = GraphCF.itemKnnRecsFromEdges(GraphCF.edges(inter, "user", "item"),
+      "user", "item", k = 3, scale = 10L,
         neighbors = 1)
       .select($"user", $"item").as[(Long, String)].collect().toSet
     assert(!got.contains((2L, "a")))
@@ -767,31 +818,6 @@ class GraphCFSpec extends SparkTestBase {
     spark.catalog.clearCache()
   }
 
-  test("preAggregate knob: both physical shapes are bit-identical") {
-    // spark.graft.cf.preAggregate=true skips the raw-row prefix
-    // repartition (the repeat-heavy-corpus escape hatch, guide §2.3/§2.5)
-    // — results must not move for ANY entry point that uses the layout
-    def all(): Seq[Set[Seq[Any]]] = Seq(
-      GraphCF.itemKnnRecs(inter, "user", "item", k = 3, scale = 10L),
-      GraphCF.userKnnRecs(inter, "user", "item", k = 3, scale = 10L),
-      GraphCF.p3alphaRecs(inter, "user", "item", k = 3, scale = 10L),
-      GraphCF.edges(inter, "user", "item", maxHistory = 1),
-      GraphCF.liftRules(basketLog, "bsk", "item", minSupport = 1L, k = 5,
-        scale = 100L),
-      GraphCF.markovRecs(basketLog, "user", "bsk", "ts", "item", k = 3)
-    ).map { df =>
-      val r = df.collect().map(_.toSeq).toSet
-      spark.catalog.clearCache()
-      r
-    }
-    val raw = all()
-    spark.conf.set("spark.graft.cf.preAggregate", "true")
-    val pre = try all()
-    finally spark.conf.unset("spark.graft.cf.preAggregate")
-    assert(raw == pre)
-    assert(raw.forall(_.nonEmpty))
-  }
-
   test("served-and-released leaves no orphan cache entry (cache-lifetime contract)") {
     // the lazy-return serving APIs persist internal frames that must stay
     // cached until the result materializes; the documented release path
@@ -800,7 +826,8 @@ class GraphCFSpec extends SparkTestBase {
     spark.catalog.clearCache()
     GraphCF.similarItems(GraphCF.edges(inter, "user", "item"),
       neighbors = 2, scale = 10L).collect()
-    GraphCF.userKnnRecs(inter, "user", "item", k = 3, scale = 10L).collect()
+    GraphCF.userKnnRecsFromEdges(GraphCF.edges(inter, "user", "item"),
+      "user", "item", k = 3, scale = 10L).collect()
     GraphCF.markovRecs(basketLog, "user", "bsk", "ts", "item", k = 3)
       .collect()
     assert(spark.sparkContext.getPersistentRDDs.nonEmpty) // served: cached
